@@ -1,0 +1,33 @@
+package perfbench
+
+/** Minimal JSON writer for the raw records (no JSON library on the
+  * engine's classpath is part of its API). */
+object Json {
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+
+  def value(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => value(x)
+    case s: String => str(s)
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n @ (_: Int | _: Long) => n.toString
+    case b: Boolean => b.toString
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => str(k.toString) + ":" + value(x) }.mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(value).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+
+  def obj(kv: (String, Any)*): String =
+    kv.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}")
+}

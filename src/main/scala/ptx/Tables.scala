@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
 object Tables {
   /** Column types every query in the registry may rely on after loading.
     * A set per column = the types the loader can emit; fixture regeneration
-    * has already changed encodings once (events.ts ns→µs in round 8, which
-    * cratered 49 queries because only names were asserted), so loads assert
-    * names AND types to fail loudly at the first read. Asserts run AFTER
+    * has already changed encodings once (events.ts ns→µs, which broke 49
+    * queries while only names were asserted), so loads assert names AND
+    * types to fail loudly at the first read. Asserts run AFTER
     * normalization: drift in an accepted encoding is absorbed (events.ts →
     * TimestampType, order/ship dates → TIMESTAMP_NTZ below), anything else
     * is one loud fixture-drift error.
@@ -92,14 +92,15 @@ object Tables {
   }
 
   /** Memo of loaded (normalized + schema-asserted) table frames, keyed by
-    * (session, path, file fingerprint) — r18 optimization.
+    * (session, path, file fingerprint).
     *
     * Why (guide §6 file-listing/metadata costs): `spark.read.parquet`
     * re-lists the path and re-reads a parquet footer ON THE DRIVER at every
     * call, and the registry's query functions are re-invoked per bench run —
     * a star join touching 6 tables paid ~0.5-0.7 s of pure per-invocation
-    * metadata work before any job ran (measured via ptx.tools.PlanCost:
-    * q8_market_share build=737 ms vs 76 ms of actual Catalyst phases).
+    * metadata work before any job ran (q8_market_share: 737 ms of frame
+    * construction vs 76 ms of actual Catalyst phases; `ptx.tools.Probe`
+    * prints the phase times per query).
     * The memoized value is the resolved LOGICAL PLAN (scan relation +
     * normalization), i.e. metadata only: every action over it still scans
     * parquet and recomputes from disk, so bench/oracle runs do full work —
@@ -116,7 +117,7 @@ object Tables {
 
   private def fsFingerprint(path: String): Option[String] = {
     if (path.contains("://")) return None // non-local FS: skip the memo
-    // r19 (ADVICE r18): RECURSE into subdirectories — a partitioned
+    // RECURSE into subdirectories — a partitioned
     // fixture whose leaf files change without touching the top dir's own
     // entries would otherwise be served a stale relation. Depth-capped so
     // a pathological tree degrades to "skip the memo", never to a hang.
@@ -141,8 +142,8 @@ object Tables {
     fsFingerprint(path) match {
       case None => load
       case Some(fp) =>
-        // growth guards (r19, ADVICE r18): entries owned by STOPPED
-        // sessions are evicted on every pass (a long-lived multi-session
+        // growth guards: entries owned by STOPPED sessions are
+        // evicted on every pass (a long-lived multi-session
         // JVM no longer leaks them until the size trip), and the size
         // guard — regenerated fixtures retire old keys but never remove
         // them — stays as the backstop
@@ -168,7 +169,7 @@ object Tables {
     *     drift ±1 µs (double ulp at 1.7e18 ≈ 256 ns) while `div` is exact
     *     and matches DuckDB's ns→µs truncation bit-for-bit.
     *   - TimestampNTZType — the fixture is parquet timestamp[us] without
-    *     timezone (the current vintage, since round 8's regeneration). Under
+    *     timezone (the current vintage). Under
     *     the UTC session `cast(TimestampType)` relabels the same micros
     *     value, so epoch math (`unix_timestamp`, window(), as-of deltas)
     *     is identical to what DuckDB computes on the native µs file.

@@ -1,11 +1,10 @@
 package ptx.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Focused admission-pipeline stream timer (r14): StreamBench's exact
-  * admission method (local[4], shuffle=4, the %10 shard split, fresh
+/** Focused admission-pipeline stream timer: StreamBench's exact
+  * admission method (the shared Probe session, the %10 shard split, fresh
   * index per timed run, build outside the window) for JUST the three
   * admission pipelines, repeated `SPARK_GRAFT_RUNS` times (default 5)
   * with one untimed warm pass — so an admission-path change can be
@@ -26,15 +25,8 @@ import org.apache.spark.sql.functions._
 object AdmStreamTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
 
     val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
     def tmpDir(prefix: String): String = {
@@ -58,12 +50,9 @@ object AdmStreamTime {
 
       def shardSrc = spark.readStream.schema(shard.schema).parquet(shardStaged)
 
-      def time(f: => org.apache.spark.sql.streaming.StreamingQuery): Double = {
-        val t0 = System.nanoTime()
-        f.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
-      }
-      // drift root-cause probe (r15, VERDICT r14 #5): under
+      def time(f: => org.apache.spark.sql.streaming.StreamingQuery): Double =
+        Probe.seconds(f.awaitTermination())
+      // drift root-cause probe: under
       // SPARK_GRAFT_DRIFT_PROBE, print per-run deltas of the candidate
       // terms behind the documented in-JVM upward drift — cumulative GC
       // wall (heap pressure), Janino compilations + generated bytecode
@@ -103,8 +92,8 @@ object AdmStreamTime {
         val once = instrumented(name, once0)
         once() // warm
         val secs = Seq.fill(runs)(once()).sorted
-        // fair median on even sizes (the graft.Bench ADVICE-r13 fix:
-        // upper-middle alone skews pessimistic when runs is even)
+        // fair median on even sizes: the upper-middle alone skews
+        // pessimistic when runs is even
         val med =
           if (secs.size % 2 == 1) secs(secs.size / 2)
           else (secs(secs.size / 2 - 1) + secs(secs.size / 2)) / 2.0

@@ -1,41 +1,27 @@
 package ptx.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev probe (r12): phase-level wall times of one shard-admission batch
+/** Dev probe: phase-level wall times of one shard-admission batch
   * ([[ptx.stream.Pipelines.admitShardBatch]]'s exact sequence, run in
   * batch mode so each phase can be timed without streaming-machinery
   * noise). Prints one line per phase; use it to see WHERE an admission
   * batch spends its time before optimizing it.
   *
   *   sbt "runMain ptx.tools.AdmissionProfile <sfDir>"
+  *
+  * With AQE off: SPARK_GRAFT_EXTRA_JAVA_OPTS="-Dspark.sql.adaptive.enabled=false".
   */
 object AdmissionProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "ERROR"))
+    val spark = Probe.session()
 
     val docs = ptx.Tables.documents(spark, sfDir).select("doc_id", "text")
     val base = docs.filter(col("doc_id") % 10 =!= 0)
     val shard = docs.filter(col("doc_id") % 10 === 0)
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[adm] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
+    def t[A](name: String)(f: => A): A = Probe.timed(s"[adm] $name")(f)
     // one untimed full pass absorbs codegen/classload
     val warmIdx = Files.createTempDirectory("adm-warm").toString
     ptx.sources.DedupIndex.write(base, warmIdx)
@@ -62,10 +48,9 @@ object AdmissionProfile {
       ptx.stream.Pipelines.admitShardBatch(shard, 0L, idx2, outDir, 0.4)
     }
 
-    // containment admission (r14): the admitContainBatch core in batch
-    // mode — phase view of the suite's slowest pipeline (65 docs/s in
-    // STREAMBENCH r13) so its job-round budget is a measured breakdown,
-    // not an estimate. Fresh index per timed pass (admission mutates it).
+    // containment admission: the admitContainBatch core in batch mode —
+    // phase view of the suite's slowest pipeline, so its job-round budget
+    // is a measured breakdown, not an estimate. Fresh index per timed pass (admission mutates it).
     val cwarmIdx = Files.createTempDirectory("cadm-warm").toString
     ptx.sources.ContainIndex.write(base, cwarmIdx)
     val cwarmOut = Files.createTempDirectory("cadm-warmout").toString
@@ -106,9 +91,9 @@ object AdmissionProfile {
     // the listener bus delivers JobEnd asynchronously: the action's
     // JobWaiter can return while the last events are still queued, and an
     // immediate remove+drain would truncate the committed trace. Drain
-    // DETERMINISTICALLY (ADVICE r14): poll until the log has been stable
-    // for 500 ms, bounded at 10 s — a fixed 1 s sleep silently truncated
-    // on a loaded machine.
+    // DETERMINISTICALLY: poll until the log has been stable for 500 ms,
+    // bounded at 10 s — a fixed sleep silently truncates on a loaded
+    // machine.
     def drainJobLog(): Unit = {
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       var last = -1
@@ -133,7 +118,7 @@ object AdmissionProfile {
       jobLog.forEach(println(_))
     }
 
-    // composed ingest (r13): the full drift → decon → near-dup batch core
+    // composed ingest: the full drift → decon → near-dup batch core
     // in batch mode — what one ingestAdmission micro-batch costs without
     // streaming machinery. The gate prologue is timed separately so the
     // "gates are cheap next to the probe" claim stays a measured number.
@@ -169,9 +154,8 @@ object AdmissionProfile {
     // run measures the steady-state batch cost (fresh index each time —
     // admission mutates it). The timed run re-attaches the job listener
     // under SPARK_GRAFT_ADM_DEBUG so the composed batch's JOB-ROUND
-    // TRACE is a committed measurement (VERDICT r13 #2's alternative
-    // "demonstrate with a job-count trace" — how many scheduled rounds
-    // one ingest batch pays, and each round's wall).
+    // TRACE is a measurement: how many scheduled rounds one ingest batch
+    // pays, and each round's wall.
     for (round <- Seq("warm (untimed shapes)", "TOTAL ingestAdmitBatch (gates + admit)")) {
       val idx3 = Files.createTempDirectory("adm-idx3").toString
       ptx.sources.DedupIndex.write(base, idx3)

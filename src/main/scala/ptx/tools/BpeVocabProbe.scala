@@ -1,9 +1,8 @@
 package ptx.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev probe (r15, VERDICT r14 #6): per-round cost of the BPE merge
+/** Dev probe: per-round cost of the BPE merge
   * learner as a function of WORD-TYPE vocabulary size, with corpus token
   * count held constant — the axis the learner's rounds are sized by
   * (each round is one aggregation over the word-TYPE table plus a 1-row
@@ -20,13 +19,7 @@ import org.apache.spark.sql.functions._
 object BpeVocabProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
     val docs = ptx.Tables.documents(spark, sfDir).select("doc_id", "text")
 
     def vocabX(n: Int) =
@@ -45,11 +38,10 @@ object BpeVocabProbe {
       ptx.functions.BpeLearn.learn(d, 8).collect()
       ptx.Caching.releaseAll()
       println(s"[bpeprobe] vocab x$n ($types word types), warm rounds:")
-      val t0 = System.nanoTime()
-      val m = ptx.functions.BpeLearn.learn(d, 8).collect()
+      Probe.timed(s"[bpeprobe] vocab x$n total") {
+        ptx.functions.BpeLearn.learn(d, 8).collect().length.toLong
+      }
       ptx.Caching.releaseAll()
-      println(f"[bpeprobe] vocab x$n total ${(System.nanoTime() - t0) / 1e9}%.2f s" +
-        s" (${m.length} merges)")
     }
     spark.stop()
   }

@@ -1,12 +1,10 @@
 package ptx.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev probe (r15, VERDICT r14 #3): stage-grain decomposition of the
-  * containment probe's CANDIDATE round — the one job left above the
-  * scheduling floor after the r15 In(h)-round removal. Times each
+/** Dev probe: stage-grain decomposition of the containment probe's
+  * CANDIDATE round — the one job above the scheduling floor. Times each
   * sub-frame of `ContainIndex.probeArtifacts` standalone (warm, pinned
   * inputs, micro-batch plan scope) so "cheaper rounds" has a measured
   * target: is the wall in the shard chain (shingle → sets → df-merge →
@@ -19,14 +17,7 @@ import org.apache.spark.sql.functions._
 object ContainRounds {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
     ptx.functions.VectorOps.register(spark)
 
     val docs = ptx.Tables.documents(spark, sfDir).select("doc_id", "text")
@@ -35,11 +26,7 @@ object ContainRounds {
     val idx = Files.createTempDirectory("cr-idx").toString
     ptx.sources.ContainIndex.write(base, idx, 0.8)
 
-    def t(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"[cr] $name%-42s ${(System.nanoTime() - t0) / 1e9}%.3f s (n=$n)")
-    }
+    def t(name: String)(f: => Long): Unit = Probe.timed(f"[cr] $name%-42s")(f)
 
     // the probeArtifacts body, step by step, inside the same micro-batch
     // plan scope the admission stream uses — TWO passes, read the WARM one
@@ -92,8 +79,9 @@ object ContainRounds {
             microBatch = true)
           0L
         }
-        // empty-plan scheduling round on the same frames (the VERDICT
-        // r14 #3 yardstick): one action over the pinned shard frame
+        // empty-plan scheduling round on the same frames (the floor the
+        // candidate round is compared against): one action over the
+        // pinned shard frame
         t("empty-plan round (pinned count)")(sh2.count())
       }
       ptx.Caching.release(spark)

@@ -1,30 +1,21 @@
 package ptx.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** LSH serving-config dial (r16, VERDICT r15 #4): recall@5 of the
+/** LSH serving-config dial: recall@5 of the
   * multi-table random-hyperplane index swept over (L tables × sign
   * bits), next to the knob that actually pays for it — the candidate
   * fraction each probe scores exactly. The declared `llm_ann_lsh` pins
-  * L=4×6 (the graded point, measured 0.28 recall at sf0.01); this
-  * prints the whole surface so "raise the config to its floor or
-  * re-scope the path as the candidate-generation tier" is decided by a
-  * recorded table, not a guess.
+  * one point of this surface; the whole surface is printed so the
+  * config is picked from a recorded table, not a guess.
   *
   *   sbt "runMain ptx.tools.LshSweep [sfDir]"    (default sf0.01 — the
-  *   driver's oracle-compare scale, where the 0.28 was measured)
+  *   oracle-compare scale)
   */
 object LshSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
     ptx.functions.VectorOps.register(spark)
     val e = ptx.Tables.embeddings(spark, sfDir)
     val n = e.count()
@@ -48,7 +39,7 @@ object LshSweep {
         f"recall_min=${audit.getLong(1) / 1e6}%.3f cand_frac=${nCand / 10.0 / n}%.3f")
       ptx.Caching.releaseAll()
     }
-    // r17 (VERDICT r16 #2): the collision-count candidate CAP swept at
+    // the collision-count candidate CAP swept at
     // the declared L=16×6 geometry — the knob that turns the constant
     // candidate FRACTION into a constant candidate COUNT per probe
     // (fraction cap/n shrinks as the corpus grows)

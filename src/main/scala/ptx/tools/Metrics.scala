@@ -1,7 +1,8 @@
 package ptx.tools
 
+import java.lang.ref.WeakReference
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -14,20 +15,33 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * is O(plan size), never touches executor data paths.
   */
 class MetricsListener extends QueryExecutionListener {
-  /** `plan` is the recorded execution's executedPlan object — listener
-    * delivery is ASYNC on a shared bus, so a consumer that installs a
-    * fresh listener can still receive a LAGGING event from an earlier
-    * query; matching `plan eq df.queryExecution.executedPlan` attributes
-    * a snapshot to the exact execution measured (r19 — the plan-budget
-    * spec read a neighbor's exchange count through that race). */
+  /** `plan` is a weak reference to the recorded execution's executedPlan:
+    * enough to match an execution by identity (see [[recordOf]]) without
+    * pinning whole physical plans for the listener's lifetime. */
   case class QueryMetrics(name: String, durationNs: Long, numExchanges: Int,
                           numScans: Int, outputRows: Option[Long],
-                          plan: AnyRef)
+                          plan: WeakReference[AnyRef])
 
   private val recorded = mutable.ArrayBuffer.empty[QueryMetrics]
 
   def snapshot: Seq[QueryMetrics] = recorded.synchronized(recorded.toSeq)
   def clear(): Unit = recorded.synchronized(recorded.clear())
+
+  /** The record of `df`'s own execution, polled for up to 5 s.
+    * Listener delivery is async on a shared bus, so a freshly installed
+    * listener can still receive a lagging event from an earlier query;
+    * matching `plan eq df.queryExecution.executedPlan` attributes the
+    * record to the exact execution measured, never to a neighbor. */
+  def recordOf(df: DataFrame): Option[QueryMetrics] = {
+    val plan = df.queryExecution.executedPlan
+    val deadline = System.nanoTime() + 5_000_000_000L
+    var hit = snapshot.find(_.plan.get eq plan)
+    while (hit.isEmpty && System.nanoTime() < deadline) {
+      Thread.sleep(50)
+      hit = snapshot.find(_.plan.get eq plan)
+    }
+    hit
+  }
 
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
     // AdaptiveSparkPlanExec hides its subtree from TreeNode.collect, but its
@@ -46,7 +60,7 @@ class MetricsListener extends QueryExecutionListener {
     val rows = qe.executedPlan.metrics.get("numOutputRows").map(_.value)
     recorded.synchronized {
       recorded += QueryMetrics(funcName, durationNs, exchanges, scans, rows,
-        qe.executedPlan)
+        new WeakReference(qe.executedPlan))
     }
   }
 

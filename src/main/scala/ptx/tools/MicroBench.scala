@@ -1,35 +1,23 @@
 package ptx.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Scratch micro-benchmarks for expression/codegen investigations.
-  * Current subject (r12): the RANGE-frame window's key-cardinality bound
+  * Current subject: the RANGE-frame window's key-cardinality bound
   * vs `SegmentedScan.rangeFrameSum`'s value-banded decomposition — the
   * win_range_frame shape, whose o_orderstatus partition key has 3 values
   * at ANY scale, so the window form caps at 3-way parallelism. Also
   * prints the window-exchange max/avg partition row skew both ways.
-  * (Previous subjects, kept in git history: shingle-stream HOF-vs-kernel
-  * r10, fn_math output-sort share r9.)
+  * (Previous subjects are kept in git history.)
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session()
 
-    def time(label: String)(f: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val n = f.queryExecution.toRdd.count()
-      println(f"[mb] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-    }
+    def time(label: String)(f: => org.apache.spark.sql.DataFrame): Unit =
+      Probe.timed(s"[mb] $label")(Probe.materialize(f))
 
     // REPS-replicated orders (key-preserving: replication multiplies each
     // status's history, exactly the axis the window form cannot split)
@@ -49,13 +37,13 @@ object MicroBench {
     windowForm.queryExecution.toRdd.count()
     bandedForm.queryExecution.toRdd.count()
 
-    time(s"RANGE window form (3-value key, ${reps}x orders, local[$cpus])")(
+    time(s"RANGE window form (3-value key, ${reps}x orders, local[${Probe.cpus}])")(
       windowForm)
     time(s"rangeFrameSum banded form (same data)")(bandedForm)
 
     // exchange skew: rows per shuffle partition for key-hash vs
     // (key, band)-hash at the session's partition count
-    val parts = cpus.toInt
+    val parts = Probe.cpus
     def skew(label: String, keyed: org.apache.spark.sql.DataFrame): Unit = {
       val sizes = keyed.rdd.mapPartitionsWithIndex {
         (i, it) => Iterator(i -> it.size) }.collect().map(_._2)
@@ -70,9 +58,9 @@ object MicroBench {
       o.repartition(parts, col("o_orderstatus"),
         floor(col("cents") / lit(10000.0)).cast("long")))
 
-    // HOT-BAND distribution (r13, VERDICT r12 #6): 80% of the rows
-    // remapped into ONE width-band of ONE key — the adversarial case for
-    // banding itself (the r10 hot-user probe at the value grain). The
+    // HOT-BAND distribution: 80% of the rows remapped into ONE
+    // width-band of ONE key — the adversarial case for banding itself
+    // (the hot-user probe at the value grain). The
     // load-bearing property measured here: rangeFrameSum's only
     // (key, band)-partitioned stage runs on the DISTINCT-VALUE grain, so
     // the hot band's straggler task is |distinct values in the band| ≤
@@ -98,7 +86,7 @@ object MicroBench {
           col("cents")).agg(count(lit(1)))
         .repartition(parts, col("o_orderstatus"), col("band")))
 
-    // CONTINUOUS hot band (r14): the same 80%-one-band remap but with
+    // CONTINUOUS hot band: the same 80%-one-band remap but with
     // ~unique values INSIDE the band (distinct ≈ rows — the SCALE.md
     // residual where the distinct-value mitigation degenerates).
     // rangeFrameSumQuantized restores the straggler bound at grid

@@ -1,6 +1,5 @@
 package ptx.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: generate the SCALE.md "10× probe" corpus for the document and
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
   * ad hoc; this pins the recipe so the numbers in docs/SCALE.md are
   * reproducible:
   *   sbt "runMain ptx.tools.ProbeData /root/testdata/sf0.1 /tmp/probe10x"
-  *   sbt "runMain ptx.tools.Explain /tmp/probe10x --time <query> ..."
+  *   SPARK_GRAFT_SF_DIR=/tmp/probe10x sbt "runMain ptx.tools.Probe <query> ..."
   *
   * `--hot-events [reps]` instead writes the EVENTS-SKEW probe pair: the
   * source events replicated `reps`× (default 30, key-shifted ids — the
@@ -34,13 +33,7 @@ object ProbeData {
     val src = args(0)
     val out = args(1)
     val hotEvents = args.contains("--hot-events")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
 
     // the ONE events key-shift replication recipe (shared by the 10×
     // volume probe and the --hot-events skew probe, so the two corpora

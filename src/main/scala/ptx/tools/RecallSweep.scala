@@ -1,10 +1,9 @@
 package ptx.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** ANN quality/speed dial (r13): recall@5 of the IVF probe against the
+/** ANN quality/speed dial: recall@5 of the IVF probe against the
   * exact brute-force top-5, swept over nprobe — the measurement that
   * sizes the nprobe knob for a serving tier. The declared `llm_ann_recall`
   * query pins nprobe=3 (the graded point); this prints the whole curve so
@@ -25,24 +24,18 @@ import org.apache.spark.sql.functions._
   */
 object RecallSweep {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = Probe.sfDir
     val useKmeans = args.contains("--kmeans")
     val rest = args.filterNot(_ == "--kmeans")
     val sweep = if (rest.nonEmpty) rest.toSeq.map(_.toInt) else Seq(1, 2, 3, 5, 8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session()
     ptx.functions.VectorOps.register(spark)
     val e0 = ptx.Tables.embeddings(spark, sfDir)
     val probes = e0.filter(col("vec_id") < 100)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p"))
     val (cent, e) =
       if (useKmeans) {
-        // the same corpus-adaptive build the declared queries run (r16)
+        // the same corpus-adaptive build the declared queries run
         val (c, assign) = ptx.sources.VectorIndex.kmeansAdaptive(e0, iters = 3)
         (ptx.Caching.pin(c),
           ptx.Caching.pin(e0.drop("label").join(assign, "vec_id")))
@@ -65,10 +58,8 @@ object RecallSweep {
       def ivf() = ptx.ops.LlmScale
         .ivfProbe(cent, e, probes, nprobe = nprobe, k = 5)
         .select(col("probe_id"), col("cand_id"), lit(1).as("hit"))
-      ivf().queryExecution.toRdd.count() // cold: codegen + shuffles
-      val t0 = System.nanoTime()
-      ivf().queryExecution.toRdd.count()
-      val warm = (System.nanoTime() - t0) / 1e9
+      Probe.materialize(ivf()) // cold: codegen + shuffles
+      val warm = Probe.seconds(Probe.materialize(ivf()))
       val rec = exact.join(ivf(), Seq("probe_id", "cand_id"), "left_outer")
         .groupBy(col("probe_id"))
         .agg(count(lit(1)).as("k"),

@@ -1,8 +1,6 @@
 package ptx.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Pre-flight fixture-drift canary (VERDICT r9 #3): load the two
+/** Pre-flight fixture-drift canary: load the two
   * regen-prone binding tables through the schema-asserted `ptx.Tables`
   * loaders and print ONE digest line per table. A fixture regeneration
   * that flips a physical encoding (the round-8 events ts ns→µs failure
@@ -16,13 +14,7 @@ import org.apache.spark.sql.SparkSession
 object SchemaDigest {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
     Seq("events", "documents").foreach { t =>
       val df = ptx.Tables.t(spark, sfDir, t)
       // row count proves the file is readable past the footer, not just

@@ -1,9 +1,8 @@
 package ptx.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev probe (r15): the semantic threshold curve's Σ|cell|² bound,
+/** Dev probe: the semantic threshold curve's Σ|cell|² bound,
   * measured on BOTH sides of its operative knob — cell GROWTH. On the
   * 10× corpus the fixture's 10 labels are a FIXED-k partition, so 10×
   * the vectors is 10× per cell = 100× in-cell pair space: the curve's
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   * VectorIndex kmeans path — holding cell SIZE bounded). This probe
   * re-labels the 10× corpus by (label, replica) — vec_id div 1e7 IS the
   * replica index under the ProbeData key shift — giving 100 cells of
-  * the ORIGINAL size, and times the identical curve body. Since r16 the
+  * the ORIGINAL size, and times the identical curve body. The
   * bounded-cell posture this probe simulates is the RUNNABLE build:
   * `VectorIndex.adaptiveK`/`kmeansAdaptive` (k = ⌈n/256⌉,
   * sample-trained) is what the declared learned-cell queries execute
@@ -29,24 +28,16 @@ object SemCurveProbe {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val p10 = if (args.length > 1) args(1) else "/tmp/probe10x"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
 
     def time(label: String, e: org.apache.spark.sql.DataFrame): Unit = {
-      // warm (codegen/classload), then the timed pass — Explain's
-      // --timefull materialization (every output column through the RDD)
-      ptx.ops.LlmScale.embedCurveSem(spark, e).queryExecution.toRdd.count()
+      // warm (codegen/classload), then the timed full-materialization pass
+      Probe.materialize(ptx.ops.LlmScale.embedCurveSem(spark, e))
       ptx.Caching.releaseAll()
-      val t0 = System.nanoTime()
-      val n = ptx.ops.LlmScale.embedCurveSem(spark, e)
-        .queryExecution.toRdd.count()
+      Probe.timed(s"[semcurve] $label") {
+        Probe.materialize(ptx.ops.LlmScale.embedCurveSem(spark, e))
+      }
       ptx.Caching.releaseAll()
-      println(f"[semcurve] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
     }
 
     val e1 = ptx.Tables.embeddings(spark, sf)

@@ -1,10 +1,9 @@
 package ptx.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev tool: the events-side hot-key probe behind docs/SCALE.md §probe
-  * (VERDICT r9 #4). Run against BOTH a uniform events dir (sf0.1) and the
+/** Dev tool: the events-side hot-key probe behind docs/SCALE.md §probe.
+  * Run against BOTH a uniform events dir (sf0.1) and the
   * `ProbeData --hot-events` corpus (80% of rows on one user_id AND one
   * event_type), and compare:
   *
@@ -24,23 +23,14 @@ import org.apache.spark.sql.functions._
 object SkewJoinProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
 
-    def timeIt(label: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val n = df.queryExecution.toRdd.count()
-      println(f"[skew-probe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-    }
+    def timeIt(label: String, df: org.apache.spark.sql.DataFrame): Unit =
+      Probe.timed(s"[skew-probe] $label")(Probe.materialize(df))
 
-    // The partition histogram is the scale-honest metric here: local[4]
-    // wall-clock caps the visible damage at 4× (and the scan usually
-    // drowns it), but max/avg partition rows is exactly the imbalance a
+    // The partition histogram is the scale-honest metric here: local
+    // wall-clock caps the visible damage at the core count (and the scan
+    // usually drowns it), but max/avg partition rows is exactly the imbalance a
     // 1000-reducer cluster inherits — one hot partition IS the stage's
     // wall-clock at any cluster size.
     def balance(label: String, df: org.apache.spark.sql.DataFrame): Unit = {
@@ -55,7 +45,7 @@ object SkewJoinProbe {
 
     // JVM/codegen warm-up on an events-only query (the hot corpus dir
     // carries no other tables)
-    ptx.QueryRegistry.all("scan_events_ns")(spark, dir).queryExecution.toRdd.count()
+    Probe.materialize(ptx.QueryRegistry.all("scan_events_ns")(spark, dir))
 
     timeIt("join_skew_salted (salted)",
       ptx.QueryRegistry.all("join_skew_salted")(spark, dir))
@@ -75,7 +65,7 @@ object SkewJoinProbe {
     Seq("pt_sessionize", "pt_trip_stats", "win_running_sum", "join_asof_tolerance")
       .foreach(q => timeIt(q, ptx.QueryRegistry.all(q)(spark, dir)))
 
-    // the r11 answer for the RE-ASSOCIABLE members of that family: the
+    // the answer for the RE-ASSOCIABLE members of that family: the
     // two-phase segmented running sum (ops.SegmentedScan) — same rows as
     // win_running_sum's window (SkewSpec parity), but partitioned by
     // (user, hour segment) so the hot user's scan splits across its
@@ -89,9 +79,9 @@ object SkewJoinProbe {
     timeIt("segmented running sum (two-phase twin)", segmented)
 
     // shuffle balance: pre-aggregation join output (what each reducer
-    // holds). Measured at 32 reducers with AQE frozen: AQE-coalescing at
-    // local[4] folds everything to 3-4 partitions and hides the layout a
-    // real cluster's reducer count would see; the histogram below is the
+    // holds). Measured at 32 reducers with AQE frozen: AQE-coalescing on
+    // a few local cores folds everything to a few partitions and hides
+    // the layout a real cluster's reducer count would see; the histogram below is the
     // hash-partitioner's raw assignment, which is what scales.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
@@ -108,9 +98,6 @@ object SkewJoinProbe {
     // segment) — the hot user spreads across its segments
     balance("segmented exchange (user_id, segment)",
       ev.repartition(col("user_id"), expr("unix_micros(ts) div 3600000000")))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-
     spark.stop()
   }
 }

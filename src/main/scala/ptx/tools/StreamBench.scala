@@ -1,10 +1,10 @@
 package ptx.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
-/** Streaming throughput probe (r6, VERDICT r5 §6): replays the events
+/** Streaming throughput probe: replays the events
   * fixture through representative G10 pipelines with
   * `Trigger.AvailableNow` and reports rows/s, so streaming performance
   * regressions become a visible number instead of a correctness-only
@@ -28,18 +28,10 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // transformWithState requires the RocksDB provider
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Probe.sfDir
+    // transformWithState requires the RocksDB provider
+    val spark = Probe.session("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     // every temp dir (staged fixture + per-run RocksDB checkpoints) is
@@ -63,15 +55,13 @@ object StreamBench {
           build: DataFrame => DataFrame): Double = {
         val cp = tmpDir("ptx-sb-cp")
         val src = spark.readStream.schema(ev.schema).parquet(from)
-        val t0 = System.nanoTime()
-        val q = build(src).writeStream
+        Probe.seconds(build(src).writeStream
           .format("noop")
           .option("checkpointLocation", cp)
           .outputMode(mode) // session windows accept append only
           .trigger(Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+          .awaitTermination())
       }
 
       def bench(name: String, mode: String, from: String = staged)(
@@ -80,7 +70,7 @@ object StreamBench {
         name -> runOnce(mode, from)(build)
       }
 
-      // hot-key replay corpus (r12, VERDICT r11 #4): same rows, 80%
+      // hot-key replay corpus: same rows, 80%
       // remapped onto ONE user — ProbeData's --hot-events construction at
       // the streaming grain. The per-user transformWithState pipelines
       // hash-partition by user_id into the state store, so the hot user's
@@ -105,7 +95,7 @@ object StreamBench {
         bench("ewma_hotkey", "append", hotStaged)(
           df => ptx.stream.Pipelines.ewma(df.as[ptx.stream.Event]).toDF()))
 
-      // documents-side ingest gate (r9): the foreachBatch PSI drift gate
+      // documents-side ingest gate: the foreachBatch PSI drift gate
       // against a static reference — a different modality from the
       // events pipelines above (batch-side plan per micro-batch + parquet
       // verdict write, zero streaming state), so it gets its own staged
@@ -120,15 +110,13 @@ object StreamBench {
       def runGate(): Double = {
         val cp = tmpDir("ptx-sb-gatecp"); val outDir = tmpDir("ptx-sb-gateout")
         val src = spark.readStream.schema(docs.schema).parquet(docStaged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.driftGate(src, ref, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.driftGate(src, ref, outDir, cp)
+          .awaitTermination())
       }
       runGate() // warm
       val gateSec = runGate()
 
-      // TTL'd content dedup (r11): the bounded-state ingest dedup — a
+      // TTL'd content dedup: the bounded-state ingest dedup — a
       // RocksDB ValueState round-trip per doc plus the TTL bookkeeping.
       // TimeMode.ProcessingTime streams never quiesce (Pipelines scaladoc),
       // so the run polls the sink for the full admission count (every
@@ -160,7 +148,7 @@ object StreamBench {
       runTtl() // warm
       val ttlSec = runTtl()
 
-      // Bloom decontamination gate (r11): eval-gram sketch built once
+      // Bloom decontamination gate: eval-gram sketch built once
       // (every 10th doc as the stand-in benchmark suite), then each
       // micro-batch is a pure scan-side probe + per-doc agg — the
       // cheapest documents-side gate by construction (no join, no state).
@@ -169,31 +157,27 @@ object StreamBench {
       def runDecon(): Double = {
         val cp = tmpDir("ptx-sb-deconcp"); val outDir = tmpDir("ptx-sb-deconout")
         val src = spark.readStream.schema(docs.schema).parquet(docStaged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.decontaminationGate(
+        Probe.seconds(ptx.stream.Pipelines.decontaminationGate(
           src, evalSketch, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+          .awaitTermination())
       }
       runDecon() // warm
       val deconSec = runDecon()
 
-      // ingest-volume gate (r11): events-side count gate — one per-batch
+      // ingest-volume gate: events-side count gate — one per-batch
       // day-count agg + broadcast 1-row moment reference; the cheapest
       // events-side gate by construction.
       val volRef = ptx.ops.Extras.volumeMoments(ptx.ops.Extras.dailyCounts(ev))
       def runVol(): Double = {
         val cp = tmpDir("ptx-sb-volcp"); val outDir = tmpDir("ptx-sb-volout")
         val src = spark.readStream.schema(ev.schema).parquet(staged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.volumeGate(src, volRef, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.volumeGate(src, volRef, outDir, cp)
+          .awaitTermination())
       }
       runVol() // warm
       val volSec = runVol()
 
-      // near-dup shard admission (r11): probe/filter/admit a 10% shard
+      // near-dup shard admission: probe/filter/admit a 10% shard
       // against the persisted 90% index. The index build runs per
       // invocation (admission MUTATES the index, so each timed run needs
       // a fresh one) but OUTSIDE the timed window — amortizing the build
@@ -208,15 +192,13 @@ object StreamBench {
         ptx.sources.DedupIndex.write(admBase, idx)
         val cp = tmpDir("ptx-sb-admcp"); val outDir = tmpDir("ptx-sb-admout")
         val src = spark.readStream.schema(admShard.schema).parquet(shardStaged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.shardAdmission(src, idx, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.shardAdmission(src, idx, outDir, cp)
+          .awaitTermination())
       }
       runAdm() // warm
       val admSec = runAdm()
 
-      // containment admission (r13): the same 10% shard through the
+      // containment admission: the same 10% shard through the
       // persisted ContainIndex — the directed quote/verbatim duplicate
       // class Jaccard banding cannot route. Fresh index per timed run
       // (admission mutates it), build outside the window, like runAdm.
@@ -225,15 +207,13 @@ object StreamBench {
         ptx.sources.ContainIndex.write(admBase, idx)
         val cp = tmpDir("ptx-sb-cadmcp"); val outDir = tmpDir("ptx-sb-cadmout")
         val src = spark.readStream.schema(admShard.schema).parquet(shardStaged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.containAdmission(src, idx, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.containAdmission(src, idx, outDir, cp)
+          .awaitTermination())
       }
       runContain() // warm
       val cadmSec = runContain()
 
-      // composed ingest admission (r11): the full drift → decon →
+      // composed ingest admission: the full drift → decon →
       // near-dup stack over the same shard — its cost vs the bare
       // admission above is what the two scan-side gates add. The eval
       // sketch here is DISJOINT from the shard (%10==5 vs %10==0 —
@@ -250,11 +230,9 @@ object StreamBench {
         val cp = tmpDir("ptx-sb-ingcp"); val outDir = tmpDir("ptx-sb-ingout")
         val src = spark.readStream.schema(docs.schema).parquet(docStaged)
           .filter(col("doc_id") % 10 === 0)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.ingestAdmission(
+        Probe.seconds(ptx.stream.Pipelines.ingestAdmission(
           src, ref, ingSketch, idx, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+          .awaitTermination())
       }
       runIngest() // warm
       val ingSec = runIngest()
@@ -273,15 +251,13 @@ object StreamBench {
         ptx.sources.DedupIndex.write(adm5Base, idx)
         val cp = tmpDir("ptx-sb-adm5cp"); val outDir = tmpDir("ptx-sb-adm5out")
         val src = spark.readStream.schema(adm5Shard.schema).parquet(shard5Staged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.shardAdmission(src, idx, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.shardAdmission(src, idx, outDir, cp)
+          .awaitTermination())
       }
       runAdm5() // warm
       val adm5Sec = runAdm5()
 
-      // containment admission at the same 5× shard (r13): the README/
+      // containment admission at the same 5× shard: the README/
       // SCALE.md claim that contain_admission's floor amortizes like the
       // others needs its own measured point, not an analogy
       def runContain5(): Double = {
@@ -289,15 +265,13 @@ object StreamBench {
         ptx.sources.ContainIndex.write(adm5Base, idx)
         val cp = tmpDir("ptx-sb-cadm5cp"); val outDir = tmpDir("ptx-sb-cadm5out")
         val src = spark.readStream.schema(adm5Shard.schema).parquet(shard5Staged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.containAdmission(src, idx, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.containAdmission(src, idx, outDir, cp)
+          .awaitTermination())
       }
       runContain5() // warm
       val cadm5Sec = runContain5()
 
-      // composed ingest at the same 5× shard (r13): the amortization
+      // composed ingest at the same 5× shard: the amortization
       // point for the FULL gate+dedup stack — per-batch fixed cost
       // (driver jobs, broadcast builds, single-file sinks) dominates at
       // 500 docs, so docs/s must scale with shard size here too. Same
@@ -309,16 +283,14 @@ object StreamBench {
         val cp = tmpDir("ptx-sb-ing5cp"); val outDir = tmpDir("ptx-sb-ing5out")
         val src = spark.readStream.schema(docs.schema).parquet(docStaged)
           .filter(col("doc_id") % 2 === 0)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.ingestAdmission(
+        Probe.seconds(ptx.stream.Pipelines.ingestAdmission(
           src, ref, ingSketch, idx, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+          .awaitTermination())
       }
       runIngest5() // warm
       val ing5Sec = runIngest5()
 
-      // indexed ANN serving (r12): 500 streamed probes against the
+      // indexed ANN serving: 500 streamed probes against the
       // persisted index + full-corpus cells path — the scan-pruned
       // foreachBatch serving shape (annServe), measured per probe row
       val emb = ptx.Tables.embeddings(spark, sfDir)
@@ -336,15 +308,13 @@ object StreamBench {
         val cp = tmpDir("ptx-sb-annsrvcp"); val outDir = tmpDir("ptx-sb-annsrvout")
         val src = spark.readStream
           .schema(spark.read.parquet(probeStaged).schema).parquet(probeStaged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.annServe(src, annIdx, annCells, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.annServe(src, annIdx, annCells, outDir, cp)
+          .awaitTermination())
       }
       runServe() // warm
       val serveSec = runServe()
 
-      // ANN serving amortization points (r13, VERDICT r12 #5): the
+      // ANN serving amortization points: the
       // 100-probe row is dominated by the per-trigger driver-job +
       // collect + single-file-write floor, so two larger probe batches
       // show probes/s scaling as that floor amortizes — 10× = every 2nd
@@ -359,10 +329,8 @@ object StreamBench {
         val cp = tmpDir("ptx-sb-annsrvcp"); val outDir = tmpDir("ptx-sb-annsrvout")
         val src = spark.readStream
           .schema(spark.read.parquet(staged).schema).parquet(staged)
-        val t0 = System.nanoTime()
-        val q = ptx.stream.Pipelines.annServe(src, annIdx, annCells, outDir, cp)
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.annServe(src, annIdx, annCells, outDir, cp)
+          .awaitTermination())
       }
       val (probe10Staged, probe10Rows) = stageProbes("ptx-sb-annprobes10",
         emb.filter(col("vec_id") % 2 === 0)
@@ -377,7 +345,7 @@ object StreamBench {
       runServeOn(probe50Staged) // warm
       val serve50Sec = runServeOn(probe50Staged)
 
-      // semantic admission (r15): the embedding-grain admission — a 10%
+      // semantic admission: the embedding-grain admission — a 10%
       // vector shard assigned, within-cell cosine-probed against the
       // persisted seed index, policy-filtered, and admitted — plus the
       // 5× amortization point (the standing two-grain bar discipline).
@@ -397,10 +365,8 @@ object StreamBench {
         val cp = tmpDir("ptx-sb-semcp"); val outDir = tmpDir("ptx-sb-semout")
         val src = spark.readStream
           .schema(spark.read.parquet(staged).schema).parquet(staged)
-        val t0 = System.nanoTime()
-        ptx.stream.Pipelines.semanticAdmission(src, idx, outDir, cp)
-          .awaitTermination()
-        (System.nanoTime() - t0) / 1e9
+        Probe.seconds(ptx.stream.Pipelines.semanticAdmission(src, idx, outDir, cp)
+          .awaitTermination())
       }
       runSem(semStaged, semBase) // warm
       val semSec = runSem(semStaged, semBase)
@@ -433,7 +399,7 @@ object StreamBench {
         :+ s""""semantic_admission_5x":{"sec":${fmt(sem5Sec)},"rows_per_sec":${fmt(sem5Rows / sem5Sec)},"rows":$sem5Rows}""")
         .mkString(",")
       val json =
-        s"""{"metric":"stream_throughput","rows":$rows,"sf":"$sfDir","cpus":$cpus,"pipelines":{$body}}"""
+        s"""{"metric":"stream_throughput","rows":$rows,"sf":"$sfDir","cpus":${Probe.cpus},"pipelines":{$body}}"""
       println(json)
       val out = sys.env.getOrElse("SPARK_GRAFT_STREAMBENCH_OUT", "docs/STREAMBENCH.json")
       try Files.writeString(java.nio.file.Paths.get(out), json + "\n")

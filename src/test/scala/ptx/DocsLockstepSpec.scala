@@ -2,14 +2,13 @@ package ptx
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Count-literal lockstep guard (r16, VERDICT r15 "what's wrong" #1 /
-  * next-round #5): README.md and SURVEY.md carry human-written count
+/** Doc lockstep guard: README.md and SURVEY.md carry human-written count
   * literals (total declared queries, oracled count, ◌ count, per-group
-  * sizes) that drifted twice by hand-editing ("212 ok", "235-query
-  * dump"). QueryIndex already computes every number from the live
-  * registry; this spec pins the DOC literals to those computed values,
-  * so adding a query without regenerating the prose fails a named test
-  * here instead of surfacing as a judge finding.
+  * sizes) that drift under hand-editing. QueryIndex already computes every
+  * number from the live registry; this spec pins the DOC literals to those
+  * computed values, so adding a query without regenerating the prose fails
+  * a named test here. The same holds for tool recipes: every
+  * `ptx.tools.<Name>` a doc or script names must still exist.
   */
 class DocsLockstepSpec extends AnyFunSuite {
 
@@ -80,6 +79,28 @@ class DocsLockstepSpec extends AnyFunSuite {
     // and every registry key must appear as a table row
     QueryRegistry.all.keySet.foreach(k =>
       assert(queries.contains(s"`$k`"), s"docs/QUERIES.md is missing `$k` — regenerate it"))
+  }
+
+  test("every ptx.tools main named in the docs and scripts exists") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def under(dir: String): Seq[Path] =
+      if (!Files.isDirectory(Paths.get(dir))) Nil
+      else scala.util.Using.resource(Files.walk(Paths.get(dir)))(
+        _.iterator().asScala.filter(Files.isRegularFile(_)).toList)
+    val docs = Paths.get("README.md") +: (
+      under("docs").filter(_.toString.endsWith(".md")) ++
+        under("scripts") ++ under(".claude/skills"))
+    val named = docs.flatMap { p =>
+      """ptx\.tools\.([A-Z]\w*)""".r.findAllMatchIn(readText(p.toString))
+        .map(m => s"$p: ptx.tools.${m.group(1)}" -> s"ptx.tools.${m.group(1)}$$")
+    }.distinct
+    assert(named.nonEmpty, "no ptx.tools recipe found in the docs")
+    val missing = named.collect { case (where, cls)
+      if scala.util.Try(Class.forName(cls, false, getClass.getClassLoader)).isFailure =>
+        where }
+    assert(missing.isEmpty,
+      s"docs name ptx.tools mains that do not exist: ${missing.mkString("; ")}")
   }
 
   test("SURVEY.md per-group sizes match each module's query map") {

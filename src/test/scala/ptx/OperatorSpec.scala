@@ -127,16 +127,15 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   private def measuredExchanges(name: String): Int = {
-    // r19: measure the query's OWN plan shape, not the suite context.
-    // The whole test run shares one session (TestSpark), and earlier
-    // suites leave session state behind — leaked pins the CacheManager
+    // Measure the query's OWN plan shape, not the suite context. The
+    // whole test run shares one session (TestSpark), and earlier suites
+    // leave session state behind — leaked pins the CacheManager
     // substitutes into matching subtrees, and session-conf residue —
-    // that deterministically shifted executed-exchange counts
-    // (full-suite runs read q11 at 11 exchanges vs its true 5, on
-    // queries this round never touched). A fresh newSession() (own
-    // SQLConf/catalog/listeners, shared context) plus a cache clear
-    // makes the measurement hermetic: isolation and full-suite runs now
-    // count the same plan.
+    // that shifts executed-exchange counts (a full-suite run can read
+    // q11 at 11 exchanges vs its true 5). A fresh newSession() (own
+    // SQLConf/catalog/listeners, shared context) plus a cache clear makes
+    // the measurement hermetic: isolation and full-suite runs count the
+    // same plan.
     ptx.Caching.releaseAll()
     spark.catalog.clearCache()
     val s = spark.newSession()
@@ -145,23 +144,15 @@ class OperatorSpec extends AnyFunSuite {
       l.clear()
       val df = ptx.QueryRegistry.all(name)(s, TestSpark.SF)
       df.collect()
-      // r19: attribute the snapshot to THIS execution by plan identity —
-      // listener delivery is async on a shared bus, and a lagging event
-      // from the PREVIOUS budget query used to land in this window (the
-      // full-suite run read llm_mix_entropy at its neighbor's count)
-      val plan = df.queryExecution.executedPlan
-      val deadline = System.nanoTime() + 5_000_000_000L
-      var hit: Option[Int] = None
-      while (hit.isEmpty && System.nanoTime() < deadline) {
-        hit = l.snapshot.find(_.plan eq plan).map(_.numExchanges)
-        if (hit.isEmpty) Thread.sleep(50)
-      }
-      hit.getOrElse(fail(s"no metrics snapshot for $name's own execution"))
+      // attributed by plan identity: a lagging event from the previous
+      // budget query must never be read as this query's count
+      l.recordOf(df).map(_.numExchanges)
+        .getOrElse(fail(s"no metrics snapshot for $name's own execution"))
     } finally s.listenerManager.unregister(l)
   }
 
   test("plan budget: pricing summary spends at most 2 exchanges (agg + sort)") {
-    // 3 since r19: +1 explicit orderkey spread of the decimal partial
+    // 3: +1 explicit orderkey spread of the decimal partial
     // aggregation off the single-task fixture scan
     assert(measuredExchanges("agg_pricing_summary") <= 3)
   }
@@ -192,7 +183,7 @@ class OperatorSpec extends AnyFunSuite {
     budget("win_error_streaks", 3)
     // corpus is never shuffled per word: vocab agg + model fold + sort
     // (the naive explode+join+re-agg formulation measures well above)
-    // +1 (r19): the explicit doc_id spread of the interpreted scoring
+    // +1: the explicit doc_id spread of the interpreted scoring
     // lambda off the single-task fixture scan
     budget("llm_unigram_logprob", 7)
     // one (order,supplier) agg + windows + final agg + sort
@@ -328,7 +319,7 @@ class OperatorSpec extends AnyFunSuite {
     // vocab agg + model fold feed the pinned scored frame; per-lang
     // exact-tertile agg + broadcast threshold join + bucket agg + sort —
     // the corpus is scored ONCE (unpinned, twice)
-    // +1 (r19): explicit doc_id spread of the interpreted scoring lambda
+    // +1: explicit doc_id spread of the interpreted scoring lambda
     budget("llm_ccnet_buckets", 8)
     // one fp-keyed window shuffle + output sort; the 16-byte digest is
     // the shuffle key — payload bytes never cross the wire

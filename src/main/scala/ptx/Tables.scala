@@ -91,29 +91,44 @@ object Tables {
     df
   }
 
-  /** Memo of loaded (normalized + schema-asserted) table frames, keyed by
-    * (session, path, file fingerprint).
+  /** Two memos sit on the load path; neither caches data, so every action
+    * over a loaded frame still scans parquet and recomputes from disk.
     *
-    * Why (guide §6 file-listing/metadata costs): `spark.read.parquet`
-    * re-lists the path and re-reads a parquet footer ON THE DRIVER at every
-    * call, and the registry's query functions are re-invoked per bench run —
-    * a star join touching 6 tables paid ~0.5-0.7 s of pure per-invocation
-    * metadata work before any job ran (q8_market_share: 737 ms of frame
-    * construction vs 76 ms of actual Catalyst phases; `ptx.tools.Probe`
-    * prints the phase times per query).
-    * The memoized value is the resolved LOGICAL PLAN (scan relation +
-    * normalization), i.e. metadata only: every action over it still scans
-    * parquet and recomputes from disk, so bench/oracle runs do full work —
-    * this is the session-scoped analog of Spark's own catalog-table relation
-    * cache, NOT a result cache.
+    *   - `loadMemo`: the loaded (normalized + schema-asserted) frame, i.e.
+    *     its resolved logical plan, keyed by (session, path, file
+    *     fingerprint). `spark.read.parquet` re-lists the path and re-reads
+    *     a footer on the driver at every call, and the registry's query
+    *     functions are re-invoked per bench run: a star join touching 6
+    *     tables paid ~0.5-0.7 s of per-invocation metadata work before any
+    *     job ran (q8_market_share: 737 ms of frame construction vs 76 ms of
+    *     Catalyst phases; `ptx.tools.Probe` prints the phase times). This
+    *     is the session-scoped analog of Spark's catalog relation cache.
+    *   - `schemaMemo`: the inferred parquet `StructType`, JVM-wide, keyed by
+    *     (path, file fingerprint, the session's parquet-inference settings
+    *     in `inferenceConfs`). Inference is a Spark job (~60-70 ms a table);
+    *     a read with the schema given starts none (~6 ms). So only the
+    *     first session to read a file pays it: streaming `foreachBatch`
+    *     threads, `newSession()` probes and repeated set-ups do not. It
+    *     holds strings and schemas only, no session.
     *
-    * Staleness: the key carries a filesystem fingerprint (name/length/mtime
-    * of the file, or of every child for a directory), so a test that
-    * regenerates a fixture under the same path gets a fresh relation — the
-    * BpeModel.ensure staleness discipline applied to the loader. Non-local
-    * paths (any URI scheme) skip the memo entirely. */
+    * Staleness: both keys carry a filesystem fingerprint (name/length/mtime
+    * of the file, or of every child for a directory), so a fixture
+    * regenerated under the same path gets a fresh relation and a fresh
+    * schema. Non-local paths (any URI scheme) skip both memos. */
   private val loadMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]()
+
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Seq[String]), StructType]()
+
+  /** Session settings that change the schema parquet inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
 
   private def fsFingerprint(path: String): Option[String] = {
     if (path.contains("://")) return None // non-local FS: skip the memo
@@ -137,11 +152,32 @@ object Tables {
     try fp(new java.io.File(path), 8) catch { case _: Throwable => None }
   }
 
+  /** `spark.read.parquet(path)`, inferring the schema only on a
+    * `schemaMemo` miss. */
+  private def readParquet(spark: SparkSession, path: String,
+                          fp: Option[String]): DataFrame = fp match {
+    case None => spark.read.parquet(path)
+    case Some(f) =>
+      val key = (path, f, inferenceConfs.map(k => spark.conf.get(k)))
+      Option(schemaMemo.get(key)) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          // regenerated fixtures retire old keys but never remove them
+          if (schemaMemo.size > 512) schemaMemo.clear()
+          schemaMemo.put(key, df.schema)
+          df
+      }
+  }
+
+  /** The frame `build` makes of the parquet at `path`, through both memos. */
   private def memoized(spark: SparkSession, path: String)
-                      (load: => DataFrame): DataFrame =
-    fsFingerprint(path) match {
+                      (build: DataFrame => DataFrame): DataFrame = {
+    val fp = fsFingerprint(path)
+    def load = build(readParquet(spark, path, fp))
+    fp match {
       case None => load
-      case Some(fp) =>
+      case Some(f) =>
         // growth guards: entries owned by STOPPED sessions are
         // evicted on every pass (a long-lived multi-session
         // JVM no longer leaks them until the size trip), and the size
@@ -149,15 +185,15 @@ object Tables {
         // them — stays as the backstop
         loadMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
         if (loadMemo.size > 512) loadMemo.clear()
-        loadMemo.computeIfAbsent((spark, path, fp), _ => load)
+        loadMemo.computeIfAbsent((spark, path, f), _ => load)
     }
+  }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(expectedTypes.contains(name), s"unknown table $name")
     if (name == "events") events(spark, dir)
-    else memoized(spark, s"$dir/$name.parquet") {
-      assertSchema(
-        normalizeDateish(spark.read.parquet(s"$dir/$name.parquet"), name), name)
+    else memoized(spark, s"$dir/$name.parquet") { raw =>
+      assertSchema(normalizeDateish(raw, name), name)
     }
   }
 
@@ -196,26 +232,28 @@ object Tables {
     * failing. Acceptable here (events is the only possibly-nanos table in
     * the binding data); a multi-tenant deployment would scope it.
     */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, s"$dir/events.parquet") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+  def events(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    memoized(spark, s"$dir/events.parquet") { raw =>
       require(raw.columns.contains("ts"), s"table events is missing column ts " +
         s"(got ${raw.columns.mkString(",")}) — fixture drift, see FIXTURES.md")
       assertSchema(raw.withColumn("ts", normalizeEventsTs(raw.schema("ts").dataType)), "events")
     }
+  }
 
   /** Streaming read of the events table (file source) with the same
     * ts normalization as the batch loader — the binding table as a stream.
     * Streaming sources need an explicit schema, so peek at the batch
-    * footer to learn this fixture's physical ts encoding first.
+    * footer (through `schemaMemo`) to learn this fixture's physical ts
+    * encoding first.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val peek = spark.read.parquet(s"$dir/events.parquet")
-    require(peek.columns.contains("ts"), s"table events is missing column ts " +
-      s"(got ${peek.columns.mkString(",")}) — fixture drift, see FIXTURES.md")
-    val tsType = peek.schema("ts").dataType
+    val path = s"$dir/events.parquet"
+    val peek = readParquet(spark, path, fsFingerprint(path)).schema
+    require(peek.fieldNames.contains("ts"), s"table events is missing column ts " +
+      s"(got ${peek.fieldNames.mkString(",")}) — fixture drift, see FIXTURES.md")
+    val tsType = peek("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", tsType),
       StructField("user_id", LongType), StructField("event_type", StringType),

@@ -35,15 +35,16 @@ object Aggregates {
           " + count(1)) div (2 * count(1)) END").as("avg_disc_e6"))
     }),
     "agg_pricing_summary" -> ((s, d) => {
-      // r19 (guide §2.5 input skew): the fixture is one single-row-group
-      // parquet file, so the scan — and with it the map-side partial
-      // aggregation's decimal(38,0) sums — runs in ONE task. A hash
-      // repartition on the high-cardinality order key (no
+      // The fixture is one single-row-group parquet file, so the scan —
+      // and with it the map-side partial aggregation — runs in ONE task.
+      // A hash repartition on the high-cardinality order key (no
       // sortBeforeRepartition cost — that tax is round-robin-only) moves
-      // the heavy partial aggregation onto every core; the exchange
-      // carries only the 7 projected columns. defaultParallelism-
-      // parameterized; at cluster scale a multi-row-group table makes
-      // this a near-no-op (the scan is already spread).
+      // the partial aggregation onto every core; the exchange carries only
+      // the 7 projected columns. It also sets the double sums' addition
+      // order, which the recorded outputs depend on: without it
+      // sum_disc_price for (R,F) at sf0.1 rounds to 4183059914.85, not .84.
+      // On a multi-row-group table the scan is already spread and this is
+      // one more full shuffle of the filtered rows.
       Tables.lineitem(s, d)
         .filter(col("l_shipdate") <= to_timestamp(lit("2000-09-02")))
         .repartition(s.sparkContext.defaultParallelism, col("l_orderkey"))
@@ -53,12 +54,18 @@ object Aggregates {
           round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))), 2).as("sum_charge"),
-          // e2 sums as DECIMAL(38,0) — see avg_disc_e6 note in agg_global
-          expr("(2 * sum(cast(round(l_quantity * 100) as decimal(38,0))) * 10000" +
+          // e2 means: the exact e2 sums run as BIGINT (a decimal sum costs
+          // far more per row) and are widened to DECIMAL(38,0) for the
+          // ×2·10⁴ scaling. Headroom: at the fixture's mean l_extendedprice
+          // (5.3e6 in e2) the BIGINT sum overflows past ≈1.7e12 rows, about
+          // 3× lineitem at SF 100 000 (6e11 rows); with every row at the
+          // 1.05e7 maximum, past 8.8e11. ANSI mode aborts on overflow; it
+          // never wraps.
+          expr("(2 * cast(sum(cast(round(l_quantity * 100) as bigint)) as decimal(38,0)) * 10000" +
             " + count(1)) div (2 * count(1))").as("avg_qty_e6"),
-          expr("(2 * sum(cast(round(l_extendedprice * 100) as decimal(38,0))) * 10000" +
+          expr("(2 * cast(sum(cast(round(l_extendedprice * 100) as bigint)) as decimal(38,0)) * 10000" +
             " + count(1)) div (2 * count(1))").as("avg_price_e6"),
-          expr("(2 * sum(cast(round(l_discount * 100) as decimal(38,0))) * 10000" +
+          expr("(2 * cast(sum(cast(round(l_discount * 100) as bigint)) as decimal(38,0)) * 10000" +
             " + count(1)) div (2 * count(1))").as("avg_disc_e6"),
           count(lit(1)).as("count_order"))
         .reportSort(col("l_returnflag"), col("l_linestatus"))

@@ -26,12 +26,16 @@ object SortLimit {
         .orderBy(col("o_orderkey"))
         .offset(40).limit(20)
     }),
+    // lineitem streams through a broadcast of the filtered customer ⋈
+    // orders (~26k rows at sf0.1), as in join_star_q5: unhinted, the
+    // product size estimate of c ⋈ o made JoinSelection broadcast the 336k
+    // filtered lineitem rows (17 MiB) instead. Same cluster-scale caveat.
     "topk_global" -> ((s, d) => {
       val c = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
       val o = Tables.orders(s, d).filter(col("o_orderdate") < to_timestamp(lit("1998-01-01")))
       val l = Tables.lineitem(s, d).filter(col("l_shipdate") > to_timestamp(lit("1998-01-01")))
-      c.join(o, col("c_custkey") === col("o_custkey"))
-        .join(l, col("l_orderkey") === col("o_orderkey"))
+      l.join(broadcast(c.join(o, col("c_custkey") === col("o_custkey"))),
+          col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"))
         .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))

@@ -4,6 +4,7 @@ import java.lang.ref.WeakReference
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Observability surface: a QueryExecutionListener that records per-query
@@ -67,11 +68,19 @@ class MetricsListener extends QueryExecutionListener {
   override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
 }
 
-object Metrics {
+object Metrics extends AdaptiveSparkPlanHelper {
   /** Installs and returns a listener on the session. */
   def install(spark: SparkSession): MetricsListener = {
     val l = new MetricsListener
     spark.listenerManager.register(l)
     l
   }
+
+  /** The most rows any one broadcast of `df`'s final adaptive plan was
+    * built from, by its stage's runtime statistics; 0 when nothing was
+    * broadcast. Read after `df` has run: only materialized stages exist. */
+  def maxBroadcastRows(df: DataFrame): Long =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case b: BroadcastQueryStageExec => b.getRuntimeStatistics.rowCount.fold(0L)(_.toLong)
+    }.foldLeft(0L)(math.max)
 }

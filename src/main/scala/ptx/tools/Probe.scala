@@ -18,7 +18,9 @@ import org.apache.spark.sql.execution.SQLExecution
   * each — and prints one line: every run time, the median and the minimum;
   * the last run's Catalyst phase times; the jobs, stages, tasks and summed
   * task time that run scheduled (frame construction included); and the
-  * exchanges of its own execution, matched by plan identity.
+  * exchanges of its own execution, matched by plan identity; and the rows
+  * of its largest broadcast build (`maxBroadcastRows`), so a fact table
+  * under a broadcast shows without the plan.
   * `--explain` adds the formatted final plan and the top planner rules by
   * time.
   *
@@ -123,7 +125,7 @@ object Probe {
           f"med=${sorted(1)}%.3f min=${sorted.head}%.3f $phases " +
           f"jobs=${counters.jobs.get} stages=${counters.stages.get} " +
           f"tasks=${counters.tasks.get} taskTime=${counters.taskMs.get / 1000.0}%.2fs " +
-          s"exchanges=$exchanges")
+          s"exchanges=$exchanges maxBroadcastRows=${Metrics.maxBroadcastRows(last)}")
         if (explain) {
           last.explain("formatted")
           tracker.rules.toSeq.sortBy(-_._2.totalTimeNs).take(8).foreach { case (rule, m) =>

@@ -151,9 +151,24 @@ class OperatorSpec extends AnyFunSuite {
     } finally s.listenerManager.unregister(l)
   }
 
+  test("star joins stream lineitem: no broadcast holds a sixth of its rows") {
+    // Unhinted, CBO-off size estimation made these queries build their
+    // broadcast from lineitem (600k, 336k and 600k rows at sf0.1). The
+    // bound scales with the fixture: 100k rows at sf0.1.
+    val bound = Tables.lineitem(spark, TestSpark.SF).count() / 6
+    Seq("join_star_q5", "topk_global", "q4_priority_count").foreach { name =>
+      ptx.Caching.releaseAll()
+      spark.catalog.clearCache()
+      val df = QueryRegistry.all(name)(spark.newSession(), TestSpark.SF)
+      df.collect()
+      val rows = ptx.tools.Metrics.maxBroadcastRows(df)
+      assert(rows <= bound, s"$name broadcasts $rows rows (bound $bound)")
+    }
+  }
+
   test("plan budget: pricing summary spends at most 2 exchanges (agg + sort)") {
-    // 3: +1 explicit orderkey spread of the decimal partial
-    // aggregation off the single-task fixture scan
+    // 3: +1 explicit orderkey spread of the partial aggregation off
+    // the single-task fixture scan
     assert(measuredExchanges("agg_pricing_summary") <= 3)
   }
 

@@ -1,15 +1,19 @@
 package ptx
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Pins the schema-adaptive events loader (round 9, after the round-8
-  * fixture regeneration silently flipped events.ts from TIMESTAMP(NANOS)
-  * to timestamp[us] and the name-only schema assert let 49 queries fail at
-  * analysis): both accepted physical encodings must normalize onto
-  * TimestampType with identical instants, and any other drift must fail
-  * loudly at the first read, not per-query.
+/** Pins the schema-adaptive loaders. A fixture regeneration once flipped
+  * events.ts from TIMESTAMP(NANOS) to timestamp[us] behind a name-only
+  * schema assert, and 49 queries failed at analysis: both accepted
+  * physical encodings must normalize onto TimestampType with identical
+  * instants, and any other drift must fail loudly at the first read, not
+  * per-query. The loaders' memos must reuse metadata only while the file
+  * and the session's parquet-inference settings are unchanged.
   */
 class TablesSchemaSpec extends AnyFunSuite {
   private val sf = TestSpark.SF
@@ -51,7 +55,7 @@ class TablesSchemaSpec extends AnyFunSuite {
     val s = TestSpark.spark
     import s.implicits._
     // right names, wrong type: r_regionkey as STRING must be caught —
-    // the round-8 regression was exactly a type flip behind stable names
+    // the events.ts regression was exactly a type flip behind stable names
     val bad = Seq(("1", "AFRICA")).toDF("r_regionkey", "r_name")
     val e = intercept[IllegalArgumentException] {
       Tables.assertSchema(bad, "region")
@@ -133,5 +137,55 @@ class TablesSchemaSpec extends AnyFunSuite {
     writeDocs(5)
     val d3 = Tables.documents(s, dir)
     assert(d3.count() == 5, "regenerated fixture must be re-read, not served stale")
+  }
+
+  /** Spark jobs `body` starts. Two marker jobs bracket it; the listener bus
+    * delivers in order, so every job between them has arrived once the
+    * second marker has, and a lagging job of an earlier test is never
+    * counted. */
+  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
+    val sc = s.sparkContext
+    val seen = new LinkedBlockingQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.put(Option(j.properties).map(_.getProperty("spark.job.description", ""))
+          .getOrElse(""))
+    }
+    def marker(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker("jobsDuring:before"); body; marker("jobsDuring:after")
+      Iterator.continually(Option(seen.poll(10, TimeUnit.SECONDS))
+          .getOrElse(fail("marker job never reached the listener")))
+        .takeWhile(_ != "jobsDuring:after").dropWhile(_ != "jobsDuring:before")
+        .size - 1
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("the schema memo: a new session loads with no Spark job; a re-typed file or flipped nanosAsLong re-infers") {
+    val s = TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("ptx_schema").toFile.getAbsolutePath
+    def writeDocs(extraType: String): Unit =
+      s.sql(
+        s"""SELECT id AS doc_id, 'hello world' AS text, 'en' AS lang, 'web' AS source,
+           |  cast(11 AS LONG) AS n_chars, cast(id AS $extraType) AS extra
+           |FROM range(3)""".stripMargin)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    writeDocs("INT")
+    Tables.documents(s.newSession(), dir) // the first session pays inference
+    val second = s.newSession()
+    assert(jobsDuring(s)(Tables.documents(second, dir)) == 0,
+      "a second session re-ran parquet schema inference")
+    // regenerated under the same path → new fingerprint → new schema
+    writeDocs("STRING")
+    assert(Tables.documents(s.newSession(), dir).schema("extra").dataType == StringType,
+      "a re-typed file was loaded with its old memoized schema")
+    val flipped = s.newSession()
+    flipped.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert(jobsDuring(s)(Tables.documents(flipped, dir)) > 0,
+      "a session with other parquet-inference settings reused the schema memo entry")
   }
 }

@@ -1,82 +1,90 @@
 package ptx
 
+import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-/** Concurrent driver-job submission for INDEPENDENT sink writes (r12,
-  * VERDICT r11 #3): a foreachBatch body that runs its per-gate audit
-  * writes sequentially pays one driver-job latency PER WRITE even though
-  * the jobs touch disjoint outputs and share no lineage beyond the cached
-  * batch. Spark's scheduler overlaps concurrently-submitted jobs across
-  * the executor pool (FIFO within it), so at micro-batch sizes — where
-  * fixed per-job cost dominates data cost — the batch's wall time drops
-  * from sum(jobs) toward max(jobs).
-  *
-  * Failure contract: every job is awaited and the FIRST failure rethrows
-  * on the caller's thread, so a foreachBatch retry still sees the batch
-  * fail loudly (the sinks are batch-scoped overwrites — a half-written
-  * concurrent sibling is replaced on replay, the same idempotency the
-  * sequential form relied on). Only use for jobs with no ordering
-  * dependency; anything reading another job's output must stay after the
-  * `par` call.
+/** Driver-side execution helpers: scoped session conf ([[Jobs.withConf]],
+  * [[Jobs.noAqe]]) and concurrent submission of independent jobs
+  * ([[Jobs.par]]).
   */
 object Jobs {
-  /** Run `body` with adaptive query execution DISABLED for every action it
-    * submits, restoring the caller's setting after (r19, guide §1.2/§2.4).
+  /** Run `body` with each `key -> value` of `kv` set on `spark`'s session
+    * conf: the one scoped writer of session conf in the engine.
     *
-    * Why: AQE materializes EVERY exchange of a query as its own driver job
-    * (re-planning between them). For the iterative operators — label
-    * propagation, Lloyd rounds — whose per-round frames are node/model-sized
-    * with operator-controlled partitioning, that re-planning buys nothing
-    * and costs 5-7 sequential job round-trips per round (~47 ms each on the
-    * measured sandbox, and 4× that on the r10 grading machine — VERDICT r10
-    * #1 measured the identical plan at 5.8 s graded vs 1.4 s local on
-    * driver-job latency alone). With AQE off, each round is ONE job whose
-    * stages pipeline under a single scheduler pass, and partition counts
-    * come from spark.sql.shuffle.partitions — the cluster-tuned knob — so
-    * the trade carries to real deployments; a corpus whose per-round edge
-    * frame needs AQE's runtime skew splitting can re-enable it by running
-    * the operator outside this scope (the loop bodies read the session
-    * conf, not a constant).
+    * Restore rule, kept per (session, key): the first scope to open on a
+    * key records the session's base value. While scopes are open, the key
+    * holds the value of the newest scope still open. When a scope exits,
+    * the key falls back to the newest scope still open, or to the base
+    * value (unset if there was none) when it was the last. So a nested
+    * scope on one thread restores the outer scope's value, and
+    * overlapping scopes on different threads restore the base value in
+    * whatever order they exit. A body that throws restores the same way.
+    * Each scope owns its entries, and a session leaves the registry when
+    * its last scope closes.
     *
-    * Results are IDENTICAL with AQE on or off — this changes job shape,
-    * never semantics. Scoped set/restore on the shared session conf: safe
-    * under the harness's sequential execution; concurrent same-session
-    * queries would briefly plan without AQE (a performance nuance, not a
-    * correctness one).
+    * Session conf is shared by every query on the session: while a scope
+    * is open, a concurrent query on `spark` plans with the scope's values
+    * (same results, different job shape). A `foreachBatch` body therefore
+    * scopes `batch.sparkSession`, the per-stream clone Spark hands it, and
+    * never the session that started the stream.
     */
-  def noAqe[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
-    noAqe(spark, -1)(body)
-
-  /** [[noAqe]] with `spark.sql.shuffle.partitions` ALSO scoped to
-    * `shufflePartitions` (when > 0) for the actions `body` submits — the
-    * second half of the iterative-loop job shape: without AQE's runtime
-    * coalescing, every exchange materializes at the static conf count, and
-    * a loop whose per-round frames the operator has just measured should
-    * size that count from the DATA (guide §2.2 "fewer, larger partitions"
-    * made scale-adaptive), not inherit a cluster-wide constant. Callers
-    * pass `adaptivePartitions(rowCount)`-style values: corpus-sized loops
-    * get the cluster's parallelism, fixture-sized loops get 1-2 partitions
-    * and their rounds collapse to a handful of tasks. */
-  def noAqe[T](spark: org.apache.spark.sql.SparkSession,
-               shufflePartitions: Int)(body: => T): T = {
-    val keyA = "spark.sql.adaptive.enabled"
-    val keyP = "spark.sql.shuffle.partitions"
-    val prevA = spark.conf.getOption(keyA)
-    val prevP = spark.conf.getOption(keyP)
-    spark.conf.set(keyA, "false")
-    if (shufflePartitions > 0) spark.conf.set(keyP, shufflePartitions.toString)
-    try body
-    finally {
-      (prevA match {
-        case Some(v) => spark.conf.set(keyA, v)
-        case None => spark.conf.unset(keyA)
-      })
-      if (shufflePartitions > 0) prevP match {
-        case Some(v) => spark.conf.set(keyP, v)
-        case None => spark.conf.unset(keyP)
+  def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val owner = new Object
+    val opened = mutable.ArrayBuffer.empty[String]
+    try {
+      scopes.synchronized {
+        val keys = scopes.getOrElseUpdate(spark, mutable.Map.empty)
+        kv.foreach { case (k, v) =>
+          val base = spark.conf.getOption(k)
+          spark.conf.set(k, v)
+          keys.getOrElseUpdate(k, new Held(base)).open += owner -> v
+          opened += k
+        }
       }
+      body
+    } finally scopes.synchronized {
+      val keys = scopes(spark)
+      opened.foreach { k =>
+        val held = keys(k)
+        held.open.remove(held.open.indexWhere(_._1 eq owner))
+        held.open.lastOption.map(_._2).orElse(held.base) match {
+          case Some(v) => spark.conf.set(k, v)
+          case None => spark.conf.unset(k)
+        }
+        if (held.open.isEmpty) keys -= k
+      }
+      if (keys.isEmpty) scopes -= spark
     }
+  }
+
+  /** One key's open scopes, oldest first, over the value it had before. */
+  private final class Held(val base: Option[String]) {
+    val open = mutable.ArrayBuffer.empty[(AnyRef, String)]
+  }
+  private val scopes = mutable.Map.empty[SparkSession, mutable.Map[String, Held]]
+
+  /** Run `body` with adaptive query execution off and, when
+    * `shufflePartitions > 0`, `spark.sql.shuffle.partitions` at that
+    * count: the job shape for iterative loops (label propagation, Lloyd
+    * rounds) whose per-round frames are small and partitioned by the
+    * operator. AQE materializes every exchange as its own driver job with
+    * a re-plan between them; with it off, each round is one job whose
+    * stages pipeline. Without AQE's coalescing every exchange runs at the
+    * static count, so callers size it from the data with
+    * [[adaptivePartitions]]. Results are identical with AQE on or off;
+    * only the job shape changes. AQE's runtime skew-join splitting is off
+    * inside the scope too.
+    *
+    * A [[withConf]] scope, under its restore rule: while it is open, other
+    * queries on `spark` plan without AQE, and a loop inside a stream body
+    * runs on `batch.sparkSession`.
+    */
+  def noAqe[T](spark: SparkSession, shufflePartitions: Int = -1)(body: => T): T = {
+    val parts = if (shufflePartitions > 0)
+      Seq("spark.sql.shuffle.partitions" -> shufflePartitions.toString) else Nil
+    withConf(spark, ("spark.sql.adaptive.enabled" -> "false") +: parts: _*)(body)
   }
 
   /** Shuffle-partition count for a loop whose per-round input is `rows`
@@ -92,6 +100,22 @@ object Jobs {
       spark.sparkContext.defaultParallelism.toLong)).toInt
   }
 
+  /** Concurrent driver-job submission for INDEPENDENT sink writes: a
+    * foreachBatch body that runs its per-gate audit writes sequentially
+    * pays one driver-job latency PER WRITE even though the jobs touch
+    * disjoint outputs and share no lineage beyond the cached batch. Spark's scheduler overlaps concurrently-submitted jobs across
+    * the executor pool (FIFO within it), so at micro-batch sizes — where
+    * fixed per-job cost dominates data cost — the batch's wall time drops
+    * from sum(jobs) toward max(jobs).
+    *
+    * Failure contract: every job is awaited and the FIRST failure rethrows
+    * on the caller's thread, so a foreachBatch retry still sees the batch
+    * fail loudly (the sinks are batch-scoped overwrites — a half-written
+    * concurrent sibling is replaced on replay, the same idempotency the
+    * sequential form relied on). Only use for jobs with no ordering
+    * dependency; anything reading another job's output must stay after the
+    * `par` call.
+    */
   def par(jobs: (() => Unit)*): Unit = {
     implicit val ec: ExecutionContext = ExecutionContext.global
     val started = jobs.map(j => Future(j()))

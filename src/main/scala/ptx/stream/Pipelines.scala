@@ -1032,13 +1032,16 @@ object Pipelines {
     * overwrite is only observed by the NEXT batch — a refresh never races
     * its own batch's assignment. At scale the recenter is the only corpus
     * pass; its cadence (refreshEvery) is the cost/recall knob.
+    * The batch body runs on `batch.sparkSession`, the stream's own
+    * session, so the reshard's [[ptx.Jobs.noAqe]] scopes never reach
+    * queries on the session that started the stream.
     */
   def indexRefresh(newVecs: DataFrame, dir: String, checkpoint: String,
                    refreshEvery: Int = 4, targetCell: Int = Int.MaxValue)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = newVecs.sparkSession
     newVecs.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
+        val spark = batch.sparkSession
         val cent = ptx.sources.VectorIndex.read(spark, s"$dir/centroids")
         ptx.sources.VectorIndex.assign(batch.select("vec_id", "embedding"), cent)
           .write.mode("overwrite").parquet(s"$dir/cells/batch=$id")
@@ -1220,114 +1223,27 @@ object Pipelines {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-  /** Streaming SHARD ADMISSION against the persisted near-dup index
-    * (r11) — the dedup-grain twin of [[indexRefresh]], and the workflow
-    * the incremental [[ptx.sources.DedupIndex]] exists for: shards of new
-    * documents arrive as a stream, and each micro-batch is probed,
-    * filtered, and admitted WITHOUT re-signing the corpus. Per batch,
-    * via foreachBatch:
-    *  1. PROBE the batch against the index ([[ptx.sources.DedupIndex.probe]]
-    *     — signs only the batch; near-dup pairs land in
-    *     `outDir/pairs/batch=<id>`, the audit trail);
-    *  2. FILTER: a doc is REJECTED iff it near-duplicates an already
-    *     admitted (index) doc, or a SMALLER-id doc of its own batch —
-    *     the deterministic one-pass policy (within a batch the smallest
-    *     id of a pairwise-connected group survives its direct pairs; no
-    *     component propagation runs inside the hot admission path, so a
-    *     doc pairing only with REJECTED smaller siblings is still
-    *     dropped — the conservative direction: an admission gate may
-    *     over-drop, never under-drop). Survivors land in
-    *     `outDir/accepted/batch=<id>`;
-    *  3. ADMIT the survivors into the index under the batch's own tag
-    *     ([[ptx.sources.DedupIndex.append]]), so the NEXT batch probes
-    *     against them.
-    * Idempotent on retried batches end-to-end: every sink (pairs,
-    * accepted, index partitions) is a `batch=<id>`-scoped overwrite, and
-    * a retry whose failed attempt already appended index signatures
-    * changes nothing — the batch's own persisted twins are excluded by
-    * id equality and already-admitted siblings dedup through the
-    * distinct candidate set. The rejection logic reuses the PINNED pair
-    * frame the sinks materialize rather than recomputing the probe plan
-    * or re-reading the file (the pair frame is candidate-bounded — tiny
-    * next to the signature work).
-    * At 100 TB each admission is linear in the SHARD: the micro-batch
-    * probe broadcasts every shard-derived side, so the INDEX tables are
-    * never shuffled or sorted (only bounded candidate frames exchange;
-    * the bucketed `compactBucketed` layout extends index-side
-    * exchange-freedom to arbitrary-size shard probes — see the
-    * DedupIndex scaladoc), and the heavy sets scan prunes to candidate
-    * row groups via the pushed id filter. */
-  /** One batch's near-dup probe → policy-filter → admit pass — the
-    * [[shardAdmission]] per-batch core, shared with the composed
-    * [[ingestAdmission]] pipeline. Writes `outDir/pairs/batch=<id>` and
-    * `outDir/accepted/batch=<id>` and appends the accepted docs to the
-    * index under tag `b<id>` (all batch-scoped overwrites). */
-  /** Run `f` with AQE off, restoring the conf after — for micro-batch
-    * admission bodies: their inputs are KB-to-MB-sized and their plans
-    * chain broadcast builds, so AQE's per-exchange stage materialization
-    * is pure re-planning overhead (measured: the composed admission
-    * batch runs ~30-60% faster without it; on a real cluster a
-    * SHARD-sized batch wants AQE back, which is one conf on the
-    * admission stream's own session). The conf is session-scoped:
-    * foreachBatch bodies are single-threaded per stream, but other
-    * queries sharing the session observe the toggle — run admission
-    * streams on a dedicated session (`spark.newSession()`) if that
-    * matters. */
-  private def withoutAqe[A](spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
-    val was = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", was)
-  }
-
-  /** [[withoutAqe]] plus a micro-batch-sized exchange width (r14): an
-    * admission batch is a few hundred rows by contract, but its ~6
-    * shuffle stages inherit the SESSION's shuffle.partitions — at the
-    * 32-core default that is 32 near-empty tasks per exchange, and task
-    * launch dominates the batch (measured: the contain batch body fell
-    * ~35% at width 4 on 32 cores, identical results). Width 4 keeps
-    * task-launch overlap without fragmenting a 500-row exchange; every
-    * conf is restored on exit. Scoped to foreachBatch admission bodies
-    * only — batch-mode shard probes keep the session width.
+  /** Run an admission `foreachBatch` body under the micro-batch plan
+    * shape. AQE is off: on KB-to-MB batches whose plans chain broadcast
+    * builds, its per-exchange stage materialization is only re-planning.
+    * Shuffle partitions are 4: an admission batch is a few hundred rows,
+    * and at the session width its ~6 exchanges would launch mostly empty
+    * tasks. Constraint propagation is off: it is quadratic in plan
+    * expressions, and the admission bodies place their join keys and
+    * filters by hand. Results are identical; only plans and job shape
+    * change. Batch-mode shard probes keep the session's settings.
     *
-    * CONCURRENCY CONTRACT: the conf is SESSION-GLOBAL while a batch
-    * body runs — plans built concurrently on the same session (another
-    * admission stream's batch, an analytic query) see the micro-batch
-    * width for that window. Run concurrent heavy work on its own
-    * session. What IS guarded here (r14): overlapping scopes on one
-    * session cannot leak the temporary width permanently — a per-session
-    * depth counter records the session's true width at depth 0→1 and
-    * restores it only at 1→0, so an interleaved inner scope can never
-    * capture-and-restore the temporary "4" as the original. */
-  private val mbDepth = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, (Int, String)]()
+    * A [[ptx.Jobs.withConf]] scope, under its restore rule. Stream bodies
+    * pass `batch.sparkSession`, the stream's own session, so queries on
+    * the session that started the stream never plan with these values;
+    * any other query on the scoped session does while the scope is open.
+    */
   private[ptx] def withMicroBatchPlan[A](
-      spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
-    // constraint propagation is quadratic in plan expressions and buys
-    // nothing on admission bodies (their join keys are explicit, their
-    // filters hand-placed); on the join/union-heavy contain batch the
-    // optimizer pass was a measurable slice of the per-batch DRIVER gap
-    // between sub-jobs (r15 — see SCALE.md's contain phase table)
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    mbDepth.synchronized {
-      val (depth, orig) = mbDepth.getOrDefault(spark,
-        (0, spark.conf.get("spark.sql.shuffle.partitions", "200") + "," +
-          spark.conf.get(cpKey, "true")))
-      mbDepth.put(spark, (depth + 1, orig))
-      spark.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_MB_PARTS", "4"))
-      spark.conf.set(cpKey, "false")
-    }
-    try withoutAqe(spark)(f)
-    finally mbDepth.synchronized {
-      val (depth, orig) = mbDepth.get(spark)
-      if (depth <= 1) {
-        mbDepth.remove(spark)
-        val Array(parts, cp) = orig.split(",", 2)
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        spark.conf.set(cpKey, cp)
-      } else mbDepth.put(spark, (depth - 1, orig))
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession)(f: => A): A =
+    ptx.Jobs.withConf(spark,
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.constraintPropagation.enabled" -> "false")(f)
 
   private def t[A](name: String)(f: => A): A =
     if (sys.env.contains("SPARK_GRAFT_ADM_DEBUG")) {
@@ -1400,6 +1316,11 @@ object Pipelines {
       df.join(broadcast(ids.toSeq.toDF(idCol)), Seq(idCol), "left_anti")
     }
 
+  /** One batch's near-dup probe → policy-filter → admit pass — the
+    * [[shardAdmission]] per-batch core, shared with the composed
+    * [[ingestAdmission]] pipeline. Writes `outDir/pairs/batch=<id>` and
+    * `outDir/accepted/batch=<id>` and appends the accepted docs to the
+    * index under tag `b<id>` (all batch-scoped overwrites). */
   private[ptx] def admitShardBatch(batch: DataFrame, id: Long,
                                       indexDir: String, outDir: String,
                                       threshold: Double): Unit = {
@@ -1455,6 +1376,43 @@ object Pipelines {
     } finally ptx.Caching.release(spark) // batch + signature + pair pins
   }
 
+  /** Streaming SHARD ADMISSION against the persisted near-dup index —
+    * the dedup-grain twin of [[indexRefresh]], and the workflow the
+    * incremental [[ptx.sources.DedupIndex]] exists for: shards of new
+    * documents arrive as a stream, and each micro-batch is probed,
+    * filtered, and admitted WITHOUT re-signing the corpus. Per batch,
+    * via foreachBatch:
+    *  1. PROBE the batch against the index ([[ptx.sources.DedupIndex.probe]]
+    *     — signs only the batch; near-dup pairs land in
+    *     `outDir/pairs/batch=<id>`, the audit trail);
+    *  2. FILTER: a doc is REJECTED iff it near-duplicates an already
+    *     admitted (index) doc, or a SMALLER-id doc of its own batch —
+    *     the deterministic one-pass policy (within a batch the smallest
+    *     id of a pairwise-connected group survives its direct pairs; no
+    *     component propagation runs inside the hot admission path, so a
+    *     doc pairing only with REJECTED smaller siblings is still
+    *     dropped — the conservative direction: an admission gate may
+    *     over-drop, never under-drop). Survivors land in
+    *     `outDir/accepted/batch=<id>`;
+    *  3. ADMIT the survivors into the index under the batch's own tag
+    *     ([[ptx.sources.DedupIndex.append]]), so the NEXT batch probes
+    *     against them.
+    * Idempotent on retried batches end-to-end: every sink (pairs,
+    * accepted, index partitions) is a `batch=<id>`-scoped overwrite, and
+    * a retry whose failed attempt already appended index signatures
+    * changes nothing — the batch's own persisted twins are excluded by
+    * id equality and already-admitted siblings dedup through the
+    * distinct candidate set. The rejection logic reuses the PINNED pair
+    * frame the sinks materialize rather than recomputing the probe plan
+    * or re-reading the file (the pair frame is candidate-bounded — tiny
+    * next to the signature work).
+    * At 100 TB each admission is linear in the SHARD: the micro-batch
+    * probe broadcasts every shard-derived side, so the INDEX tables are
+    * never shuffled or sorted (only bounded candidate frames exchange;
+    * the bucketed `compactBucketed` layout extends index-side
+    * exchange-freedom to arbitrary-size shard probes — see the
+    * DedupIndex scaladoc), and the heavy sets scan prunes to candidate
+    * row groups via the pushed id filter. */
   def shardAdmission(docs: DataFrame, indexDir: String, outDir: String,
                      checkpoint: String, threshold: Double = 0.4)
       : org.apache.spark.sql.streaming.StreamingQuery =

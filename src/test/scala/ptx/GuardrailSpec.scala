@@ -266,6 +266,107 @@ class GuardrailSpec extends AnyFunSuite {
     assert(ran.get == 4)
   }
 
+  // ── scoped session conf (Jobs.withConf) ──────────────────────────────
+  private val Aqe = "spark.sql.adaptive.enabled"
+  private val Parts = "spark.sql.shuffle.partitions"
+  private val Cp = "spark.sql.constraintPropagation.enabled"
+  private def confOf(s: org.apache.spark.sql.SparkSession) =
+    (s.conf.get(Aqe), s.conf.get(Parts), s.conf.get(Cp))
+
+  /** Scope A opens, then scope B opens on another thread, then A exits
+    * while B is still open, then B exits: overlapping scopes that close
+    * out of nesting order. `insideB` runs in B after A has exited. */
+  private def overlapAThenB(scopeA: (() => Unit) => Unit,
+                            scopeB: (() => Unit) => Unit)
+                           (insideB: => Unit): Unit = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val aOpen, bOpen, aExited = new CountDownLatch(1)
+    def await(l: CountDownLatch): Unit =
+      assert(l.await(60, TimeUnit.SECONDS), "scope latch timed out")
+    val a = Future(blocking {
+      scopeA(() => { aOpen.countDown(); await(bOpen) })
+      aExited.countDown()
+    })
+    val b = Future(blocking {
+      await(aOpen)
+      scopeB(() => { bOpen.countDown(); await(aExited); insideB })
+    })
+    Await.result(a.zip(b), 2.minutes)
+  }
+
+  test("Jobs.withConf: overlapping noAqe scopes on two threads restore the base values") {
+    val s = TestSpark.spark.newSession()
+    val base = confOf(s)
+    var inB = base
+    overlapAThenB(f => Jobs.noAqe(s, 2)(f()), f => Jobs.noAqe(s, 3)(f())) {
+      inB = confOf(s)
+    }
+    assert(confOf(s) == base, s"scopes leaked into the session (base $base)")
+    assert(inB == ("false", "3", base._3),
+      s"the open scope lost its values when the other exited: $inB")
+  }
+
+  test("Jobs.withConf: withMicroBatchPlan overlapped by noAqe(3) restores the base values") {
+    val s = TestSpark.spark.newSession()
+    val base = confOf(s)
+    var inB = base
+    overlapAThenB(f => ptx.stream.Pipelines.withMicroBatchPlan(s)(f()),
+        f => Jobs.noAqe(s, 3)(f())) {
+      inB = confOf(s)
+    }
+    assert(confOf(s) == base, s"scopes leaked into the session (base $base)")
+    assert(inB == ("false", "3", base._3),
+      s"the open scope lost its values when the other exited: $inB")
+  }
+
+  test("Jobs.withConf: nested scopes restore the outer value, a throwing body restores, a closed session keeps no base") {
+    val s = TestSpark.spark.newSession()
+    val base = confOf(s)
+    Jobs.withConf(s, Parts -> "5") {
+      Jobs.noAqe(s, 7) { assert(confOf(s) == ("false", "7", base._3)) }
+      assert(confOf(s) == (base._1, "5", base._3))
+    }
+    assert(confOf(s) == base)
+    intercept[IllegalStateException] {
+      Jobs.noAqe(s, 3) { throw new IllegalStateException("boom") }
+    }
+    assert(confOf(s) == base, "a throwing body left its scope's values")
+    // every scope is closed, so the registry holds nothing for `s`: a value
+    // set now is the base the next scope restores
+    s.conf.set(Parts, "9")
+    Jobs.noAqe(s, 3)(())
+    assert(s.conf.get(Parts) == "9", "a closed scope restored a stale base")
+  }
+
+  test("session conf is written only through Jobs.withConf (and Tables' nanosAsLong)") {
+    // ptx/tools mains build and own their sessions, so they are exempt
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/ptx")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.startsWith(root.resolve("tools"))).toSeq
+    assert(files.exists(_.endsWith("Jobs.scala")), s"no sources under $root")
+    val writes = files.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      // the withConf body: from its def to the closing brace at def indent
+      val from = if (f.endsWith("Jobs.scala"))
+        lines.indexWhere(_.contains("def withConf[")) else -1
+      val scope = if (from < 0) Range(0, 0)
+        else from to lines.indexWhere(_ == "  }", from)
+      lines.zipWithIndex.collect {
+        case (l, i) if (l.contains(".conf.set(") || l.contains(".conf.unset(")) &&
+          !scope.contains(i) &&
+          !(f.endsWith("Tables.scala") && l.contains("nanosAsLong")) =>
+          s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(writes.isEmpty,
+      s"session conf written outside Jobs.withConf:\n${writes.mkString("\n")}")
+  }
+
   // ── gram-hash collision canary (r12, VERDICT r11 #1) ─────────────────
   // Six oracle-✓ queries group/count 64-bit `gram_hashes` keys while their
   // DuckDB oracles group gram STRINGS, so their oracle pass is

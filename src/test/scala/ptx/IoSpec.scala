@@ -293,11 +293,8 @@ class IoSpec extends AnyFunSuite {
     // structural plan assertions need a concrete (non-adaptive) plan, and
     // the 100 TB claim is about the SHUFFLED band join — neither side of
     // a corpus-sized index broadcasts — so pin both confs for the probe
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Jobs.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
       // the probe pins its candidate frame, so the band join lives inside
       // an InMemoryRelation's cached plan — flatten recurses through
@@ -357,9 +354,6 @@ class IoSpec extends AnyFunSuite {
         s"$plainDir/bands").nonEmpty,
         "control failed: plain-layout probe shows no index-side exchange")
       ptx.Caching.releaseAll()
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
     }
   }
 
@@ -375,10 +369,7 @@ class IoSpec extends AnyFunSuite {
     val cdir = tmp("ptx-cidx-compact")
     ptx.sources.ContainIndex.compact(spark, dir, cdir)
     // structural assertions need a concrete (non-adaptive) plan
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Jobs.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       def flatten(p: SparkPlan): Seq[SparkPlan] = {
         val nodes = p.collect { case q => q }
         nodes ++ nodes.flatMap {
@@ -433,18 +424,16 @@ class IoSpec extends AnyFunSuite {
       ptx.Caching.releaseAll()
       // teeth: the default (exchange-form) probe under no-broadcast confs
       // DOES shuffle the post side — the shape the micro-batch path forbids
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val sh2 = ptx.Caching.pin(
-        ptx.functions.TextShingles.shingles(shard.select("doc_id", "text"))
-          .select(col("doc_id"), col("shingle").as("h")))
-      val probeD = ptx.sources.ContainIndex.probeSh(spark, cdir, sh2)
-      assert(unjoinedExchanges(probeD.queryExecution.executedPlan,
-        s"$cdir/post").nonEmpty,
-        "control failed: default probe shows no unjoined post-side exchange")
-      ptx.Caching.releaseAll()
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+      Jobs.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val sh2 = ptx.Caching.pin(
+          ptx.functions.TextShingles.shingles(shard.select("doc_id", "text"))
+            .select(col("doc_id"), col("shingle").as("h")))
+        val probeD = ptx.sources.ContainIndex.probeSh(spark, cdir, sh2)
+        assert(unjoinedExchanges(probeD.queryExecution.executedPlan,
+          s"$cdir/post").nonEmpty,
+          "control failed: default probe shows no unjoined post-side exchange")
+        ptx.Caching.releaseAll()
+      }
     }
   }
 
@@ -731,9 +720,7 @@ class IoSpec extends AnyFunSuite {
       "ev_right", buckets = 4, bucketCol = "user_id", sortCol = "user_id")
     // disable auto-broadcast: the point is the co-located shuffle-free
     // SMJ — at 100 TB neither fact side would be broadcastable
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Jobs.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("ev_left")
         .join(spark.table("ev_right"), "user_id")
       val plan = joined.queryExecution.executedPlan.toString
@@ -741,6 +728,6 @@ class IoSpec extends AnyFunSuite {
       assert(!plan.contains("Exchange"),
         s"co-bucketed join still exchanges:\n$plan")
       assert(joined.count() == events.count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 }

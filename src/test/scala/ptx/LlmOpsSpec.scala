@@ -898,9 +898,7 @@ class LlmOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.types.StringType
     // structural assertion needs a concrete plan (the IoSpec discipline)
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Jobs.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val df = q("llm_winnowing")
       def flatten(p: SparkPlan): Seq[SparkPlan] = {
         val nodes = p.collect { case n => n }
@@ -932,7 +930,7 @@ class LlmOpsSpec extends AnyFunSuite {
         assert(strings.map(_.name).forall(_ == "source"),
           s"non-source string bytes on a winnowing exchange: ${strings.map(_.name)}")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
     ptx.Caching.releaseAll()
   }
 

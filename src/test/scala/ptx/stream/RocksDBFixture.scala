@@ -2,23 +2,12 @@ package ptx.stream
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared save/set/restore of the RocksDB state-store provider for tests.
-  * One copy of the restore dance: a missed restore in a hand-rolled copy
-  * silently changes the provider for every later test in the shared
-  * session.
+/** Scoped RocksDB state-store provider for tests, through
+  * [[ptx.Jobs.withConf]]: a missed restore would silently change the
+  * provider for every later test in the shared session.
   */
 object RocksDBFixture {
-  private val Key = "spark.sql.streaming.stateStore.providerClass"
-  private val Provider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  def withRocksDB[A](spark: SparkSession)(body: => A): A = {
-    val prev = spark.conf.getOption(Key)
-    spark.conf.set(Key, Provider)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(Key, p)
-      case None => spark.conf.unset(Key)
-    }
-  }
+  def withRocksDB[A](spark: SparkSession)(body: => A): A =
+    ptx.Jobs.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 }

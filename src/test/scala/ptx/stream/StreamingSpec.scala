@@ -748,6 +748,52 @@ class StreamingSpec extends AnyFunSuite {
         s"${parts(dir)} / ${parts(cdir)}")
   }
 
+  test("indexRefresh reshards on the stream's own session: the caller's conf never moves") {
+    // the reshard's Lloyd rounds run under Jobs.noAqe; scoping the session
+    // that started the stream would expose AQE off at one partition to
+    // every query planned on it meanwhile
+    val e = ptx.Tables.embeddings(spark, TestSpark.SF)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_bystander").toString
+    val cp = java.nio.file.Files.createTempDirectory("ivf_bystander_cp").toString
+    ptx.sources.VectorIndex.write(e, s"$dir/centroids")
+    val kSeed = ptx.sources.VectorIndex.read(spark, s"$dir/centroids").count()
+    ptx.sources.VectorIndex.assign(e.select("vec_id", "embedding"),
+        ptx.sources.VectorIndex.read(spark, s"$dir/centroids"))
+      .write.parquet(s"$dir/cells/batch=-1")
+    val newVecs = e.filter(col("vec_id") < 8).collect()
+      .map(r => NewVec(r.getLong(0) + 100000, r.getSeq[Float](1).toArray))
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    def callerConf = keys.map(spark.conf.get)
+    val base = callerConf
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Seq[String]]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var polling = true
+    val poller = new Thread(() =>
+      while (polling) { seen.add(callerConf); reads.incrementAndGet(); Thread.sleep(1) })
+    val ms = MemoryStream[NewVec](implicitly[org.apache.spark.sql.Encoder[NewVec]], spark)
+    // refreshEvery = 1: batch 0's recenter sees 508 vectors over the seed
+    // cells and, at targetCell = 16, reshards to adaptiveK(508, 16) = 32
+    val q = Pipelines.indexRefresh(ms.toDF(), dir, cp,
+      refreshEvery = 1, targetCell = 16)
+    poller.start()
+    try {
+      ms.addData(newVecs.toSeq)
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      polling = false
+      poller.join()
+    }
+    val kAfter = ptx.sources.VectorIndex.read(spark, s"$dir/centroids").count()
+    assert(kAfter == ptx.sources.VectorIndex.adaptiveK(508, 16) && kAfter > kSeed,
+      s"the refresh did not reshard: $kSeed -> $kAfter cells")
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSet == Set(base),
+      s"the caller's session left its base $base during the reshard: " +
+        s"${seen.asScala.toSet} over ${reads.get} reads")
+    ptx.Caching.releaseAll()
+  }
+
   test("tokenizerRefresh: published model equals a batch rebuild; prefix + replay idempotence (r17)") {
     // VERDICT r16 #4: the BpeModel artifact gets the index-family
     // streaming treatment — admit doc batches, re-learn on a cadence,
@@ -1636,52 +1682,38 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState running totals persist ValueState across batches (RocksDB)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
-    val name = "tws_sink"
-    val q = Pipelines.runningTotals(ms.toDS()).toDF("user_id", "n", "total")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(Seq(Event(1, ts(0), 5, "click", 10.0), Event(2, ts(1), 5, "click", 2.0)))
-      q.processAllAvailable()
-      ms.addData(Seq(Event(3, ts(2), 5, "click", 3.0)))
-      q.processAllAvailable()
-      val got = spark.table(name).collect()
-        .map(r => (r.getLong(1), r.getDouble(2))).toSet
-      // batch 2's row continues from batch 1's state: (3, 15.0)
-      assert(got == Set((1L, 10.0), (2L, 12.0), (3L, 15.0)), s"got $got")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    RocksDBFixture.withRocksDB(spark) {
+      val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
+      val name = "tws_sink"
+      val q = Pipelines.runningTotals(ms.toDS()).toDF("user_id", "n", "total")
+        .writeStream.format("memory").queryName(name).outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        ms.addData(Seq(Event(1, ts(0), 5, "click", 10.0), Event(2, ts(1), 5, "click", 2.0)))
+        q.processAllAvailable()
+        ms.addData(Seq(Event(3, ts(2), 5, "click", 3.0)))
+        q.processAllAvailable()
+        val got = spark.table(name).collect()
+          .map(r => (r.getLong(1), r.getDouble(2))).toSet
+        // batch 2's row continues from batch 1's state: (3, 15.0)
+        assert(got == Set((1L, 10.0), (2L, 12.0), (3L, 15.0)), s"got $got")
+      } finally q.stop()
     }
   }
 
   /** Run a transformWithState EWMA stream under the RocksDB provider,
     * feeding `batches` in order; returns (event_id, ewma_e2) pairs. */
   private def runEwma(batches: Seq[Seq[Event]]): Set[(Long, Long)] = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
-    val name = s"ewma_sink_${System.nanoTime()}"
-    val q = Pipelines.ewma(ms.toDS()).toDF()
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      spark.table(name).collect().map(r => (r.getLong(1), r.getLong(3))).toSet
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    RocksDBFixture.withRocksDB(spark) {
+      val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
+      val name = s"ewma_sink_${System.nanoTime()}"
+      val q = Pipelines.ewma(ms.toDS()).toDF()
+        .writeStream.format("memory").queryName(name).outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+        spark.table(name).collect().map(r => (r.getLong(1), r.getLong(3))).toSet
+      } finally q.stop()
     }
   }
 
@@ -1695,10 +1727,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming CUSUM with a batch-computed reference mean equals the declared pt_cusum twin (r6)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    RocksDBFixture.withRocksDB(spark) {
       val evRows = ptx.Tables.events(spark, TestSpark.SF)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event].collect()
@@ -1722,11 +1751,6 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       assert(streamed == batch)
       assert(batch.size == evRows.length)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1749,10 +1773,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming MapState type histogram equals the declared pt_type_running_hist twin (r6)") {
     // event-time-ordered replay in two batches: the per-type map must
     // carry across the boundary or the tail half's counts restart at 1
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    RocksDBFixture.withRocksDB(spark) {
       val evRows = ptx.Tables.events(spark, TestSpark.SF)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event].collect()
@@ -1773,11 +1794,6 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(streamed == batch)
       assert(batch.size == evRows.length)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1800,39 +1816,32 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("event-time timers close idle sessions when the watermark passes (r4)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
-    val name = "timer_sink"
-    val q = Pipelines.sessionTimeouts(ms.toDS()).toDF()
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // user 7: events at min 0 and 10 (one session); user 9: two events
-      // 40 min apart in ONE batch -> in-batch gap closes the first session
-      ms.addData(Seq(
-        Event(1, ts(0), 7, "click", 1.0), Event(2, ts(10), 7, "view", 2.0),
-        Event(3, ts(0), 9, "click", 1.0), Event(4, ts(40), 9, "click", 1.0)))
-      q.processAllAvailable()
-      // late-hour traffic advances the watermark to min 110 >> min 40
-      // (user 7's timer) and min 70 (user 9's 2nd-session timer)
-      ms.addData(Seq(Event(5, ts(120), 8, "click", 1.0)))
-      q.processAllAvailable()
-      // one more batch so timers registered before the watermark moved fire
-      ms.addData(Seq(Event(6, ts(125), 8, "view", 1.0)))
-      q.processAllAvailable()
-      val got = spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
-      assert(got.contains((7L, ts(0), ts(10), 2L)), s"user 7 session not closed by timer: $got")
-      assert(got.contains((9L, ts(0), ts(0), 1L)), s"user 9 in-batch gap session missing: $got")
-      assert(got.contains((9L, ts(40), ts(40), 1L)), s"user 9 second session not timed out: $got")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    RocksDBFixture.withRocksDB(spark) {
+      val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
+      val name = "timer_sink"
+      val q = Pipelines.sessionTimeouts(ms.toDS()).toDF()
+        .writeStream.format("memory").queryName(name).outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        // user 7: events at min 0 and 10 (one session); user 9: two events
+        // 40 min apart in ONE batch -> in-batch gap closes the first session
+        ms.addData(Seq(
+          Event(1, ts(0), 7, "click", 1.0), Event(2, ts(10), 7, "view", 2.0),
+          Event(3, ts(0), 9, "click", 1.0), Event(4, ts(40), 9, "click", 1.0)))
+        q.processAllAvailable()
+        // late-hour traffic advances the watermark to min 110 >> min 40
+        // (user 7's timer) and min 70 (user 9's 2nd-session timer)
+        ms.addData(Seq(Event(5, ts(120), 8, "click", 1.0)))
+        q.processAllAvailable()
+        // one more batch so timers registered before the watermark moved fire
+        ms.addData(Seq(Event(6, ts(125), 8, "view", 1.0)))
+        q.processAllAvailable()
+        val got = spark.table(name).collect()
+          .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
+        assert(got.contains((7L, ts(0), ts(10), 2L)), s"user 7 session not closed by timer: $got")
+        assert(got.contains((9L, ts(0), ts(0), 1L)), s"user 9 in-batch gap session missing: $got")
+        assert(got.contains((9L, ts(40), ts(40), 1L)), s"user 9 second session not timed out: $got")
+      } finally q.stop()
     }
   }
 
@@ -1874,30 +1883,23 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState ListState keeps a bounded last-3 buffer across batches (r5)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
-    val name = "rolling_sink"
-    val q = Pipelines.rollingMeans(ms.toDS()).toDF("user_id", "event_id", "mean3")
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(Seq(Event(1, ts(0), 3, "click", 1.0), Event(2, ts(1), 3, "click", 2.0)))
-      q.processAllAvailable()
-      ms.addData(Seq(Event(3, ts(2), 3, "click", 6.0), Event(4, ts(3), 3, "click", 10.0)))
-      q.processAllAvailable()
-      val got = spark.table(name).collect()
-        .map(r => (r.getLong(1), r.getDouble(2))).toMap
-      // buffers: [1] → 1.0; [1,2] → 1.5; [1,2,6] → 3.0 (cross-batch state);
-      // [2,6,10] → 6.0 (event 1 evicted by the 3-element bound)
-      assert(got == Map(1L -> 1.0, 2L -> 1.5, 3L -> 3.0, 4L -> 6.0), s"got $got")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    RocksDBFixture.withRocksDB(spark) {
+      val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
+      val name = "rolling_sink"
+      val q = Pipelines.rollingMeans(ms.toDS()).toDF("user_id", "event_id", "mean3")
+        .writeStream.format("memory").queryName(name).outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        ms.addData(Seq(Event(1, ts(0), 3, "click", 1.0), Event(2, ts(1), 3, "click", 2.0)))
+        q.processAllAvailable()
+        ms.addData(Seq(Event(3, ts(2), 3, "click", 6.0), Event(4, ts(3), 3, "click", 10.0)))
+        q.processAllAvailable()
+        val got = spark.table(name).collect()
+          .map(r => (r.getLong(1), r.getDouble(2))).toMap
+        // buffers: [1] → 1.0; [1,2] → 1.5; [1,2,6] → 3.0 (cross-batch state);
+        // [2,6,10] → 6.0 (event 1 evicted by the 3-element bound)
+        assert(got == Map(1L -> 1.0, 2L -> 1.5, 3L -> 3.0, 4L -> 6.0), s"got $got")
+      } finally q.stop()
     }
   }
 

@@ -607,12 +607,6 @@ object LlmScale {
   @volatile private[ptx] var lastPropagationRounds: Int = -1
 
   private[ptx] def clusterPairs(rawPairs: DataFrame): DataFrame = {
-    val debug = sys.env.contains("SPARK_GRAFT_CLUSTER_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (debug) {
-      System.err.println(f"[clusterPairs] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      t0 = System.nanoTime()
-    }
     // The loop's cost on real deployments is SEQUENTIAL DRIVER-JOB latency,
     // not data: the r10 shape ran ~9 synchronized jobs (pairs cp, nodes +
     // edges cp, initial-labels cp, then per round one checkpoint job plus
@@ -674,7 +668,6 @@ object LlmScale {
     val edges = ptx.Caching.checkpoint(
       edges0.repartition(nParts, col("b")).sortWithinPartitions(col("b")))
     ptx.Caching.free(edges0)
-    lap("edges checkpoint (derive candidate pairs)")
     var lbl: DataFrame = null      // (id, lbl) after the previous round
     var lblCp: DataFrame = null
     var converged = false
@@ -718,7 +711,6 @@ object LlmScale {
       // them now instead of holding up to MaxPropagationRounds node-sized
       // RDDs until releaseAll (ADVICE r4)
       if (lblCp != null) ptx.Caching.free(lblCp)
-      lap(s"round $round (materialize + convergence, one job)")
       lbl = next.select(col("a").as("id"), col("lbl"))
       lblCp = next
       round += 1
@@ -732,8 +724,6 @@ object LlmScale {
         s"$MaxPropagationRounds rounds (unexpected at O(log diameter) " +
         s"convergence); raise MaxPropagationRounds")
     lastPropagationRounds = round
-    if (sys.env.contains("SPARK_GRAFT_CLUSTER_DEBUG"))
-      System.err.println(s"[clusterPairs] converged after $round rounds")
     lbl
     } // end noAqe scope — the caller's materialization of the returned
       // frame (one select + the declared sort over the final checkpointed

@@ -148,14 +148,6 @@ object ContainIndex {
       t, microBatch)
       .orderBy(col("src"), col("dst"))
 
-  private def dbg[A](name: String)(f: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_ADM_DEBUG")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[cidx] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    } else f
-
   /** Everything a probe pins, exposed so an admission pipeline can admit
     * the accepted subset from the SAME pinned frames ([[appendArtifacts]])
     * instead of recomputing sets/df/prefix from the shard text — r14,
@@ -183,7 +175,7 @@ object ContainIndex {
                                   shardSh: DataFrame, t: Double = 0.8,
                                   microBatch: Boolean = false): ProbeArtifacts = {
     ptx.functions.VectorOps.register(spark) // sorted_intersect_count
-    val buildT = dbg("meta head") { meta(spark, dir).getDouble(0) }
+    val buildT = meta(spark, dir).getDouble(0)
     require(t >= buildT,
       s"probe threshold $t < build threshold $buildT: the stored prefixes " +
         s"are sized for t ≥ $buildT (rebuild the index for a weaker gate)")
@@ -245,9 +237,7 @@ object ContainIndex {
       .unionByName(shardSets.select(col("doc_id"), col("n_sh"), col("shset")))
     val candSets =
       if (microBatch) {
-        val wanted = dbg("candIds collect") {
-          candIds.collect().map(_.getLong(0)).toSeq }
-        dbg(s"candIds size = ${wanted.size}")(())
+        val wanted = candIds.collect().map(_.getLong(0)).toSeq
         allSets.filter(col("doc_id").isin(wanted: _*))
       } else allSets.join(broadcast(candIds), Seq("doc_id"), "left_semi")
     val sets = ptx.Caching.pin(candSets.dropDuplicates("doc_id"))

@@ -140,13 +140,7 @@ object DedupIndex {
       .unionByName(shardSig.select(col("doc_id"), col("n_sh"), col("shset")))
     val candSets =
       if (microBatch) {
-        val wanted =
-          if (sys.env.contains("SPARK_GRAFT_ADM_DEBUG")) {
-            val t0 = System.nanoTime()
-            val w = candIds.collect().map(_.getLong(0)).toSeq
-            println(f"[didx] candIds collect ${(System.nanoTime() - t0) / 1e9}%.3f s (n=${w.size})")
-            w
-          } else candIds.collect().map(_.getLong(0)).toSeq
+        val wanted = candIds.collect().map(_.getLong(0)).toSeq
         allSets.filter(col("doc_id").isin(wanted: _*))
       } else allSets.join(broadcast(candIds), Seq("doc_id"), "left_semi")
     // dropDuplicates, not a bare union: a RETRIED admission probes a shard

@@ -1,10 +1,11 @@
 package ptx.stream
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
-  TTLConfig, TimeMode, TimerValues, ValueState}
+  StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 /** A telemetry event — the streaming-side row type (events table schema
   * after the ns→µs load fix; `props` omitted where not needed). */
@@ -79,7 +80,7 @@ object Pipelines {
       .agg(approx_count_distinct(col("user_id")).as("approx_users"))
       .select(col("w.start").as("hour"), col("approx_users"))
 
-  /** Streaming twin of `pt_hourly_percentiles` (r9): windowed hourly
+  /** Streaming twin of `pt_hourly_percentiles`: windowed hourly
     * p50/p95 via the approx-percentile sketch — exact percentile is
     * impossible in a stream (it would buffer every value per open
     * window), while the sketch is fixed-width per window and merges
@@ -99,7 +100,7 @@ object Pipelines {
       .select(col("w.start").as("hour"), col("event_type"), col("n"),
         round(col("pcts")(0), 6).as("p50"), round(col("pcts")(1), 6).as("p95"))
 
-  /** Streaming twin of `dq_freshness` (r9): per-stream newest event time.
+  /** Streaming twin of `dq_freshness`: per-stream newest event time.
     * A plain un-windowed max per type — state is one timestamp per
     * event_type (bounded by the type domain), the cheapest liveness
     * monitor a stream can carry. Lag-vs-global is left to the reader of
@@ -111,62 +112,59 @@ object Pipelines {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), max(col("ts")).as("last_ts"))
 
-  /** Streaming twin of `dq_drift_psi` (r9): a per-micro-batch drift GATE.
-    * Each batch's per-source document-length distribution is scored
-    * (Laplace-smoothed PSI, exact e6-integer summation — the shared
-    * `ops.Extras.psiAgainst` core) against a STATIC reference bucket
-    * distribution `ref(b, gn)` from a trusted snapshot, and the per-source
-    * verdict lands in `dir/batch=<id>` (overwrite — idempotent on retried
-    * batches, the writeBatch discipline). This is the ingest-time
-    * admission gate: a crawl shard whose batch drifts past PSI 0.25 is
-    * flagged BEFORE it reaches the lake. Zero streaming state by design —
-    * the gate is per-batch; cumulative drift is the batch audit's job —
-    * and the reference is a broadcast-sized static frame.
-    */
-  /** One batch's PSI drift verdict frame — the [[driftGate]] per-batch
-    * core, shared with the composed [[ingestAdmission]] pipeline.
-    * PSI grid = the UNION of reference and batch buckets: a batch doc
-    * landing in a length bucket the reference never saw must enter the
-    * sum as a +1-Laplace cell with gn=0 (mirroring how source-missing
-    * buckets are smoothed), not silently drop out — otherwise drift INTO
-    * genuinely novel buckets (the strongest drift signal a gate can see)
-    * is understated. Batch-side distinct buckets are
-    * micro-batch-bounded, so the anti-join stays broadcast-sized. */
+  /** The PSI/KS bucket grid `(b, gn)` of a batch's `cells` against the
+    * reference `ref`: every reference bucket, plus each batch bucket the
+    * reference never saw at gn = 0. A doc in a novel bucket then enters
+    * the sum as a +1-Laplace cell, the way a source-missing bucket does;
+    * dropping it would understate drift into novel buckets, the strongest
+    * signal a gate sees. Batch buckets are micro-batch-bounded, so the
+    * anti-join stays broadcast-sized. */
+  private def unionGrid(cells: DataFrame, ref: DataFrame): DataFrame = {
+    val refN = ref.select(col("b"), col("gn"))
+    refN.unionByName(cells.select(col("b")).distinct()
+      .join(refN.select(col("b")), Seq("b"), "left_anti")
+      .withColumn("gn", lit(0L)))
+  }
+
+  /** One batch's PSI drift verdict frame: the [[driftGate]] per-batch
+    * core, shared with the composed [[ingestAdmission]] pipeline. */
   private[ptx] def driftVerdict(batch: DataFrame, ref: DataFrame): DataFrame = {
     val cells = batch
       .groupBy(col("source"), expr("n_chars div 50").as("b"))
       .agg(count(lit(1)).as("n"))
-    val novel = cells.select(col("b")).distinct()
-      .join(ref.select(col("b")), Seq("b"), "left_anti")
-      .withColumn("gn", lit(0L))
-    ptx.ops.Extras.psiAgainstUnsorted(cells, ref.unionByName(novel))
+    ptx.ops.Extras.psiAgainstUnsorted(cells, unionGrid(cells, ref))
   }
 
   /** Re-root a BROADCAST-SIZED static reference frame as a local
     * relation: one collect at stream-construction time, so the per-batch
     * plans that broadcast it stop re-running its upstream aggregation
     * (and re-scanning its source) on EVERY micro-batch — the reference
-    * is static by contract, the rows are identical (r13). */
+    * is static by contract, the rows are identical. */
   private def localized(df: DataFrame): DataFrame = {
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
     df.collect().foreach(rows.add)
     df.sparkSession.createDataFrame(rows, df.schema)
   }
 
+  /** Streaming twin of `dq_drift_psi`: a per-micro-batch drift gate.
+    * Each batch's per-source document-length distribution is scored
+    * (Laplace-smoothed PSI, exact e6-integer summation, the shared
+    * `ops.Extras.psiAgainst` core) against a static reference bucket
+    * distribution `ref(b, gn)` from a trusted snapshot, over the
+    * [[unionGrid]], and the per-source verdict lands in `dir/batch=<id>`.
+    * This is the ingest-time admission gate: a crawl shard whose batch
+    * drifts past PSI 0.25 is flagged before it reaches the lake. The gate
+    * keeps no streaming state (cumulative drift is the batch audit's
+    * job), and the reference is a broadcast-sized static frame.
+    */
   def driftGate(docs: DataFrame, ref: DataFrame, dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val refLocal = localized(ref)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        driftVerdict(batch, refLocal)
-          .write.mode("overwrite").parquet(s"$dir/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    batchSink(docs, checkpoint)((batch, id) =>
+      writeBatch(driftVerdict(batch, refLocal), id, dir))
   }
 
-  /** Streaming composed drift-REPORT gate (r10): the full per-batch drift
+  /** Streaming composed drift-REPORT gate: the full per-batch drift
     * panel — Laplace-smoothed PSI, Kolmogorov–Smirnov, and Welch-t — of
     * each batch source's document-length distribution against a STATIC
     * reference snapshot, in ONE foreachBatch pass over one (source,
@@ -176,88 +174,79 @@ object Pipelines {
     * moment sums per bucket. Differences vs the batch audit trio: the
     * comparison population is the REFERENCE (an admission gate asks "does
     * this shard look like the lake?"), not same-corpus rest-of-global;
-    * and the PSI/KS grids take the union of reference and batch buckets
-    * so novel-bucket drift scores (the [[driftGate]] r10 fix). Zero
-    * streaming state; per-batch overwrite of `dir/batch=<id>` keeps
-    * retried batches idempotent. Scale: everything after the one corpus
-    * scan is sources×buckets-grid-sized with the reference broadcast.
+    * and the PSI/KS grids are the [[unionGrid]], the same one
+    * [[driftGate]] scores, so novel-bucket drift counts. Zero streaming
+    * state; the verdict lands in `dir/batch=<id>`. Scale: everything
+    * after the one corpus scan is sources×buckets-grid-sized with the
+    * reference broadcast.
     */
   def driftReportGate(docs: DataFrame, refIn: DataFrame, dir: String,
                       checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val ref = localized(refIn) // static + broadcast-sized: collect once
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val cells = batch
-          .groupBy(col("source"), expr("n_chars div 50").as("b"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("n_chars").cast("decimal(38,0)")).cast("decimal(38,0)").as("sxc"),
-            sum(col("n_chars").cast("decimal(38,0)") * col("n_chars"))
-              .cast("decimal(38,0)").as("sxxc"))
-        val refN = ref.select(col("b"), col("gn"))
-        val novel = cells.select(col("b")).distinct()
-          .join(refN.select(col("b")), Seq("b"), "left_anti")
-          .withColumn("gn", lit(0L))
-        val g = refN.unionByName(novel)
-        val counts = cells.select(col("source"), col("b"), col("n"))
-        val psi = ptx.ops.Extras.psiAgainst(counts, g)
-          .select(col("source"), col("n_docs"), col("psi_e6"),
-            col("drifted").as("drifted_psi"))
-        // KS: max |batch cdf − reference cdf| over the union bucket grid,
-        // exact cross-multiplied integers (the dq_drift_ks recipe)
-        val st = counts.groupBy(col("source")).agg(sum(col("n")).as("ns"))
-        val tot = g.agg(sum(col("gn")).as("ng"))
-        val wb = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("source")).orderBy(col("b"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-        val ks = counts.select(col("source")).distinct()
-          .crossJoin(broadcast(g))
-          .join(broadcast(counts), Seq("source", "b"), "left_outer")
-          .withColumn("sn", coalesce(col("n"), lit(0L)))
-          .withColumn("cs", sum(col("sn")).over(wb))
-          .withColumn("cg", sum(col("gn")).over(wb))
-          .join(broadcast(st), Seq("source"))
-          .crossJoin(broadcast(tot))
-          .withColumn("dnum", abs(
-            col("cs").cast("decimal(38,0)") * col("ng") -
-              col("cg").cast("decimal(38,0)") * col("ns")))
-          .groupBy(col("source"), col("ns"), col("ng"))
-          .agg(max(col("dnum")).as("dmax"))
-          .select(col("source"),
-            expr("(2 * dmax * 1000000 + cast(ns as decimal(38,0)) * ng)" +
-              " div (2 * cast(ns as decimal(38,0)) * ng)").as("ks_e6"),
-            expr("(dmax * 1e0) / (ns * 1e0 * ng) >" +
-              " 1.36 * sqrt((ns + ng) * 1e0 / (ns * 1e0 * ng))").as("drifted_ks"))
-        // Welch t of the batch source's mean length vs the REFERENCE
-        // population (its moments arrive pre-aggregated in ref)
-        val m = cells.groupBy(col("source"))
-          .agg(sum(col("n")).as("n"), sum(col("sxc")).as("sx"),
-            sum(col("sxxc")).as("sxx"))
-        val gm = ref.agg(sum(col("gn")).as("n2"),
-          sum(col("gsx")).cast("decimal(38,0)").as("sx2"),
-          sum(col("gsxx")).cast("decimal(38,0)").as("sxx2"))
-        val tt = m.crossJoin(broadcast(gm))
-          .select(col("source"),
-            expr("""CASE WHEN n >= 2 AND n2 >= 2 AND
-              |  ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
-              |  ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2 > 0
-              |THEN round(
-              |  ((sx * 1e0) / n - (sx2 * 1e0) / n2) / sqrt(
-              |    ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
-              |    ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2),
-              |  6) END""".stripMargin).as("t_stat"))
-          .withColumn("significant",
-            when(col("t_stat").isNotNull, abs(col("t_stat")) > 1.96))
-        psi.join(ks, Seq("source")).join(tt, Seq("source"))
-          .orderBy(col("source"))
-          .write.mode("overwrite").parquet(s"$dir/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    batchSink(docs, checkpoint) { (batch, id) =>
+      val cells = batch
+        .groupBy(col("source"), expr("n_chars div 50").as("b"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("n_chars").cast("decimal(38,0)")).cast("decimal(38,0)").as("sxc"),
+          sum(col("n_chars").cast("decimal(38,0)") * col("n_chars"))
+            .cast("decimal(38,0)").as("sxxc"))
+      val g = unionGrid(cells, ref)
+      val counts = cells.select(col("source"), col("b"), col("n"))
+      val psi = ptx.ops.Extras.psiAgainst(counts, g)
+        .select(col("source"), col("n_docs"), col("psi_e6"),
+          col("drifted").as("drifted_psi"))
+      // KS: max |batch cdf − reference cdf| over the union bucket grid,
+      // exact cross-multiplied integers (the dq_drift_ks recipe)
+      val st = counts.groupBy(col("source")).agg(sum(col("n")).as("ns"))
+      val tot = g.agg(sum(col("gn")).as("ng"))
+      val wb = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("source")).orderBy(col("b"))
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      val ks = counts.select(col("source")).distinct()
+        .crossJoin(broadcast(g))
+        .join(broadcast(counts), Seq("source", "b"), "left_outer")
+        .withColumn("sn", coalesce(col("n"), lit(0L)))
+        .withColumn("cs", sum(col("sn")).over(wb))
+        .withColumn("cg", sum(col("gn")).over(wb))
+        .join(broadcast(st), Seq("source"))
+        .crossJoin(broadcast(tot))
+        .withColumn("dnum", abs(
+          col("cs").cast("decimal(38,0)") * col("ng") -
+            col("cg").cast("decimal(38,0)") * col("ns")))
+        .groupBy(col("source"), col("ns"), col("ng"))
+        .agg(max(col("dnum")).as("dmax"))
+        .select(col("source"),
+          expr("(2 * dmax * 1000000 + cast(ns as decimal(38,0)) * ng)" +
+            " div (2 * cast(ns as decimal(38,0)) * ng)").as("ks_e6"),
+          expr("(dmax * 1e0) / (ns * 1e0 * ng) >" +
+            " 1.36 * sqrt((ns + ng) * 1e0 / (ns * 1e0 * ng))").as("drifted_ks"))
+      // Welch t of the batch source's mean length vs the REFERENCE
+      // population (its moments arrive pre-aggregated in ref)
+      val m = cells.groupBy(col("source"))
+        .agg(sum(col("n")).as("n"), sum(col("sxc")).as("sx"),
+          sum(col("sxxc")).as("sxx"))
+      val gm = ref.agg(sum(col("gn")).as("n2"),
+        sum(col("gsx")).cast("decimal(38,0)").as("sx2"),
+        sum(col("gsxx")).cast("decimal(38,0)").as("sxx2"))
+      val tt = m.crossJoin(broadcast(gm))
+        .select(col("source"),
+          expr("""CASE WHEN n >= 2 AND n2 >= 2 AND
+            |  ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
+            |  ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2 > 0
+            |THEN round(
+            |  ((sx * 1e0) / n - (sx2 * 1e0) / n2) / sqrt(
+            |    ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
+            |    ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2),
+            |  6) END""".stripMargin).as("t_stat"))
+        .withColumn("significant",
+          when(col("t_stat").isNotNull, abs(col("t_stat")) > 1.96))
+      writeBatch(psi.join(ks, Seq("source")).join(tt, Seq("source"))
+        .orderBy(col("source")), id, dir)
+    }
   }
 
-  /** Streaming ingest-VOLUME gate (r11): the per-micro-batch twin of the
+  /** Streaming ingest-VOLUME gate: the per-micro-batch twin of the
     * `dq_volume_anomaly` batch audit — each batch's per-day event counts
     * are z-scored against a STATIC reference moment frame (`(nd, sx,
     * sxx)` from [[ptx.ops.Extras.volumeMoments]] over the historical
@@ -267,24 +256,18 @@ object Pipelines {
     * intact). Shares the batch audit's exact z core
     * (`Extras.volumeVerdict`), so a one-batch replay with the corpus's
     * own moments is row-identical to the declared audit. Verdicts land
-    * per `(batch, day)` in `dir/batch=<id>` (overwrite — idempotent on
-    * retried batches); zero streaming state, reference broadcast, one
-    * count agg per batch. A deployment scores CLOSED days (a partial
-    * day's count reads low by construction) — the gate scores whatever
-    * days the batch carries and leaves closing policy to the feed. */
+    * per `(batch, day)` in `dir/batch=<id>`; zero streaming state,
+    * reference broadcast, one count agg per batch. A deployment scores
+    * CLOSED days (a partial day's count reads low by construction) — the
+    * gate scores whatever days the batch carries and leaves closing
+    * policy to the feed. */
   def volumeGate(events: DataFrame, refIn: DataFrame, dir: String,
                  checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val ref = localized(refIn) // static + broadcast-sized: collect once
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ptx.ops.Extras.volumeVerdict(
-            ptx.ops.Extras.dailyCounts(batch).crossJoin(broadcast(ref)))
-          .write.mode("overwrite").parquet(s"$dir/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    batchSink(events, checkpoint)((batch, id) =>
+      writeBatch(ptx.ops.Extras.volumeVerdict(
+        ptx.ops.Extras.dailyCounts(batch).crossJoin(broadcast(ref))), id, dir))
   }
 
   /** Builds the eval-set gram sketch [[decontaminationGate]] probes: one
@@ -303,23 +286,6 @@ object Pipelines {
     if (row.isNullAt(0)) Array.empty[Byte] else row.getAs[Array[Byte]](0)
   }
 
-  /** Streaming DECONTAMINATION admission gate (r11): the ingest-time twin
-    * of `llm_split_contamination_bloom`, in the direction a training
-    * pipeline actually deploys it — each incoming TRAIN doc is probed
-    * against the held-out/benchmark gram sketch (GPT-3 §4's published
-    * recipe: drop training text that overlaps eval, so reported eval
-    * stays honest). Per batch, each doc's word-8-grams are hashed
-    * (`gram_hashes`) and probed scan-side against the broadcast sketch
-    * (`might_contain`, codegen'd); the per-doc verdict (n_grams, n_hit,
-    * contaminated = any hit) lands in `dir/batch=<id>` (overwrite —
-    * idempotent on retried batches, the writeBatch discipline).
-    * One-sided error inherited from the sketch: a contaminated doc is
-    * NEVER missed; a clean doc is flagged with probability ≈ fpp per
-    * gram — the safe direction for an admission gate (you only
-    * over-drop). Zero streaming state; the 1 MB sketch ships with the
-    * task binary, so at 100 TB the gate is a pure scan-side map — no
-    * join, no shuffle, no per-batch re-aggregation of the eval side.
-    */
   /** One batch's per-doc decontamination verdict `(doc_id, n_grams,
     * n_hit, contaminated)` — the [[decontaminationGate]] per-batch core,
     * shared with the composed [[ingestAdmission]] pipeline. */
@@ -328,16 +294,15 @@ object Pipelines {
                                 carry: Seq[String] = Nil): DataFrame = {
     ptx.functions.TextGrams.register(batch.sparkSession)
     ptx.functions.Blooms.register(batch.sparkSession)
-    // SHUFFLE-FREE (r13): the per-doc gram counts are computed with
-    // higher-order array functions over the gram array instead of
-    // explode + groupBy(doc_id) — the old shape paid a full exchange per
-    // micro-batch to re-associate grams with the doc they were exploded
-    // from. size/filter over the array is the same count (gram_hashes
-    // yields no null elements; an empty text gives an empty array →
-    // n_grams = 0, contaminated = false, exactly the explode_outer
-    // semantics), and the verdict is now the pure scan-side map the
-    // 100 TB posture claims: broadcast-sized sketch literal, no join, no
-    // shuffle, no per-batch re-aggregation.
+    // SHUFFLE-FREE: the per-doc gram counts are higher-order array
+    // functions over the gram array, not explode + groupBy(doc_id), which
+    // would pay a full exchange per micro-batch to re-associate grams
+    // with the doc they were exploded from. size/filter over the array is
+    // the same count (gram_hashes yields no null elements; an empty text
+    // gives an empty array → n_grams = 0, contaminated = false, exactly
+    // the explode_outer semantics), and the verdict is a pure scan-side
+    // map: broadcast-sized sketch literal, no join, no shuffle, no
+    // per-batch re-aggregation.
     val nHit =
       if (evalSketch.isEmpty) lit(0L)
       else size(filter(col("g"),
@@ -354,19 +319,29 @@ object Pipelines {
       .withColumn("contaminated", col("n_hit") > 0)
   }
 
+  /** Streaming DECONTAMINATION admission gate: the ingest-time twin
+    * of `llm_split_contamination_bloom`, in the direction a training
+    * pipeline actually deploys it — each incoming TRAIN doc is probed
+    * against the held-out/benchmark gram sketch (GPT-3 §4's published
+    * recipe: drop training text that overlaps eval, so reported eval
+    * stays honest). Per batch, each doc's word-8-grams are hashed
+    * (`gram_hashes`) and probed scan-side against the broadcast sketch
+    * (`might_contain`, codegen'd); the per-doc verdict (n_grams, n_hit,
+    * contaminated = any hit) lands in `dir/batch=<id>`.
+    * One-sided error inherited from the sketch: a contaminated doc is
+    * NEVER missed; a clean doc is flagged with probability ≈ fpp per
+    * gram — the safe direction for an admission gate (you only
+    * over-drop). Zero streaming state; the 1 MB sketch ships with the
+    * task binary, so at 100 TB the gate is a pure scan-side map — no
+    * join, no shuffle, no per-batch re-aggregation of the eval side.
+    */
   def decontaminationGate(docs: DataFrame, evalSketch: Array[Byte],
                           dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        deconVerdict(batch, evalSketch)
-          .write.mode("overwrite").parquet(s"$dir/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    batchSink(docs, checkpoint)((batch, id) =>
+      writeBatch(deconVerdict(batch, evalSketch), id, dir))
 
-  /** Streaming exact content dedup at ingest (r9): the documents-side
+  /** Streaming exact content dedup at ingest: the documents-side
     * twin of the batch checksum-dedup family — drop any doc whose
     * payload content (md5 of text) was already seen on the stream.
     * `dropDuplicates` on a stream keeps ONE state entry per distinct
@@ -384,7 +359,7 @@ object Pipelines {
     * the id of the copy that was admitted. */
   case class FpDoc(fp: String, doc_id: Long)
 
-  /** TTL-BOUNDED streaming content dedup (r11, VERDICT r10 #5) — the
+  /** TTL-BOUNDED streaming content dedup — the
     * production form of [[contentDedup]], whose dropDuplicates state holds
     * one entry per distinct payload FOREVER. Here the fingerprint lives in
     * a transformWithState ValueState with a processing-time TTL: a doc is
@@ -404,8 +379,8 @@ object Pipelines {
     * Operational note: a TimeMode.ProcessingTime query runs a micro-batch
     * EVERY trigger interval (the TTL sweep), including empty ones — the
     * stream never quiesces, so `processAllAvailable` never latches and
-    * even `Trigger.AvailableNow` does not self-terminate (both observed,
-    * r11). Run it with a real `Trigger.ProcessingTime(interval)`, verify
+    * even `Trigger.AvailableNow` does not self-terminate (both observed).
+    * Run it with a real `Trigger.ProcessingTime(interval)`, verify
     * progress by watching the SINK, and shut down with `query.stop()` —
     * committed batches and their state survive for the next start
     * (RecoverySpec drives exactly that cycle).
@@ -448,25 +423,33 @@ object Pipelines {
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark(Seq("event_id"))
 
-  /** Exactly-once micro-batch parquet sink via foreachBatch: each batch
-    * writes to its own `batch=<id>` directory in overwrite mode, so a
-    * RETRIED batch replaces its own prior (possibly partial) output
-    * instead of duplicating it — idempotent replay, the standard
-    * production sink pattern when the target lacks transactional
-    * streaming support. The batch id comes from the checkpointed offset
-    * log, so id→data is stable across restarts; at scale each batch
-    * write inherits the frame's partitioning (no extra shuffle).
+  /** Exactly-once micro-batch parquet output: each batch writes to its
+    * own `batch=<id>` directory in overwrite mode, so a RETRIED batch
+    * replaces its own prior (possibly partial) output instead of
+    * duplicating it — idempotent replay, the standard production sink
+    * pattern when the target lacks transactional streaming support. The
+    * batch id comes from the checkpointed offset log, so id→data is
+    * stable across restarts; at scale each batch write inherits the
+    * frame's partitioning (no extra shuffle).
     */
   def writeBatch(batch: DataFrame, id: Long, dir: String): Unit =
     batch.write.mode("overwrite").parquet(s"$dir/batch=$id")
 
+  /** The one streaming sink every foreachBatch pipeline here starts:
+    * `body` runs once per micro-batch with the batch's id, progress
+    * checkpoints to `checkpoint`, and `trigger` defaults to AvailableNow
+    * (drain what has arrived, then stop). Bodies write every output
+    * through [[writeBatch]], so a retried batch overwrites its own
+    * output. */
+  private def batchSink(df: DataFrame, checkpoint: String,
+                        trigger: Trigger = Trigger.AvailableNow())(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream.foreachBatch(body)
+      .option("checkpointLocation", checkpoint).trigger(trigger).start()
+
   def parquetSink(events: DataFrame, dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch((batch: DataFrame, id: Long) => writeBatch(batch, id, dir))
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    batchSink(events, checkpoint)(writeBatch(_, _, dir))
 
   /** Stream-static enrichment: per-event user dimension lookup. */
   def enrich(events: DataFrame, users: DataFrame): DataFrame =
@@ -547,13 +530,21 @@ object Pipelines {
     }
   }
 
-  /** transformWithState wiring for RunningTotalsProcessor. */
-  def runningTotals(events: Dataset[Event]): Dataset[(Long, Long, Double)] = {
+  /** The one per-user stateful wiring: `events` keyed by user_id, each
+    * user's rows through `processor`, output appended. `mode` stays
+    * TimeMode.None unless the processor registers timers; an event-time
+    * processor needs a watermark on `events`. State shards by user. */
+  private def perUser[O <: Product : TypeTag](events: Dataset[Event],
+      processor: StatefulProcessor[Long, Event, O],
+      mode: TimeMode = TimeMode.None()): Dataset[O] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transformWithState(processor, mode, OutputMode.Append())
   }
+
+  /** transformWithState wiring for RunningTotalsProcessor. */
+  def runningTotals(events: Dataset[Event]): Dataset[(Long, Long, Double)] =
+    perUser(events, new RunningTotalsProcessor)
 
   /** One EWM output row: the event plus its truncated EWM value (e2). */
   case class EwmaPoint(user_id: Long, event_id: Long, ts: java.sql.Timestamp,
@@ -592,12 +583,8 @@ object Pipelines {
   }
 
   /** transformWithState wiring for EwmaProcessor. */
-  def ewma(events: Dataset[Event]): Dataset[EwmaPoint] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new EwmaProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def ewma(events: Dataset[Event]): Dataset[EwmaPoint] =
+    perUser(events, new EwmaProcessor)
 
   /** One per-event histogram update: the event's type count + user total. */
   case class TypeHistPoint(user_id: Long, event_id: Long,
@@ -631,12 +618,8 @@ object Pipelines {
   }
 
   /** transformWithState wiring for TypeHistProcessor. */
-  def typeHistogram(events: Dataset[Event]): Dataset[TypeHistPoint] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TypeHistProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def typeHistogram(events: Dataset[Event]): Dataset[TypeHistPoint] =
+    perUser(events, new TypeHistProcessor)
 
   /** One CUSUM output row: the event's running deviation sum + drift flag. */
   case class CusumPoint(user_id: Long, event_id: Long, ts: java.sql.Timestamp,
@@ -672,17 +655,13 @@ object Pipelines {
   }
 
   /** transformWithState wiring for CusumProcessor. */
-  def cusum(events: Dataset[Event], meanE2: Long): Dataset[CusumPoint] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new CusumProcessor(meanE2),
-        TimeMode.None(), OutputMode.Append())
-  }
+  def cusum(events: Dataset[Event], meanE2: Long): Dataset[CusumPoint] =
+    perUser(events, new CusumProcessor(meanE2))
 
   /** A funnel stage advance: the user reached `stage` at `ts`. */
   case class FunnelAdvance(user_id: Long, stage: String, ts: java.sql.Timestamp)
 
-  /** Streaming funnel (r5) — the push twin of the batch `pt_funnel`
+  /** Streaming funnel — the push twin of the batch `pt_funnel`
     * query: a per-user monotone state machine view→click→purchase that
     * emits one row per stage ADVANCE. State is three epoch-µs marks
     * (0 = unreached), so the store holds 24 bytes per user regardless of
@@ -740,18 +719,14 @@ object Pipelines {
   }
 
   /** transformWithState wiring for FunnelProcessor. */
-  def funnel(events: Dataset[Event]): Dataset[FunnelAdvance] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def funnel(events: Dataset[Event]): Dataset[FunnelAdvance] =
+    perUser(events, new FunnelProcessor)
 
   /** A hysteresis alert rising edge (streaming twin of `pt_hysteresis`). */
   case class HysteresisEdge(user_id: Long, event_id: Long,
                             ts: java.sql.Timestamp, value: Double)
 
-  /** Streaming hysteresis alerting (r5): arm at value ≥ hi, clear only at
+  /** Streaming hysteresis alerting: arm at value ≥ hi, clear only at
     * ≤ lo, emit rising edges — the push twin of the batch `pt_hysteresis`
     * window query, with the armed bit as ONE boolean of state per user
     * (the forward-fill the batch op computes with a window is exactly
@@ -788,12 +763,8 @@ object Pipelines {
 
   /** transformWithState wiring for HysteresisProcessor (hi=200, lo=50 —
     * the batch twin's constants). */
-  def hysteresis(events: Dataset[Event]): Dataset[HysteresisEdge] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new HysteresisProcessor(200.0, 50.0),
-        TimeMode.None(), OutputMode.Append())
-  }
+  def hysteresis(events: Dataset[Event]): Dataset[HysteresisEdge] =
+    perUser(events, new HysteresisProcessor(200.0, 50.0))
 
   /** A session closed by TIMEOUT (no activity for 30 min), emitted when
     * the event-time watermark passes last_ts + 30 min. */
@@ -868,13 +839,9 @@ object Pipelines {
 
   /** transformWithState wiring for SessionTimeoutProcessor (event-time
     * timers require TimeMode.EventTime and a watermark on the input). */
-  def sessionTimeouts(events: Dataset[Event]): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionTimeoutProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+  def sessionTimeouts(events: Dataset[Event]): Dataset[ClosedSession] =
+    perUser(events.withWatermark("ts", "10 minutes"),
+      new SessionTimeoutProcessor, TimeMode.EventTime())
 
   /** CHAINED stateful aggregations in one streaming query (Spark 4 multiple
     * stateful operators): 15-minute tumbling counts per type, re-windowed
@@ -927,12 +894,8 @@ object Pipelines {
   }
 
   /** transformWithState wiring for RecentValuesProcessor. */
-  def rollingMeans(events: Dataset[Event]): Dataset[Rolling] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RecentValuesProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def rollingMeans(events: Dataset[Event]): Dataset[Rolling] =
+    perUser(events, new RecentValuesProcessor)
 
   /** Streaming ANN probe — vector similarity SERVING over a prebuilt IVF
     * index: a stream of probe vectors against static centroid + cell
@@ -970,7 +933,7 @@ object Pipelines {
       .agg(ptx.functions.Aggregators.top_k(col("sim"), col("cand_id"), k).as("top"))
   }
 
-  /** Streaming ANN SERVING against the PERSISTED index (r12) — the
+  /** Streaming ANN SERVING against the PERSISTED index — the
     * foreachBatch twin of [[annProbe]], in the shape a 100 TB serving
     * tier wants: each probe micro-batch runs the INDEXED probe
     * ([[ptx.sources.VectorIndex.probe]] — wanted-cell labels collected
@@ -981,8 +944,7 @@ object Pipelines {
     * are re-read per batch, so an [[indexRefresh]] recenter or a
     * `compactCells` swap between triggers is picked up on the NEXT
     * batch with no restart. Per-batch top-k lands in
-    * `outDir/batch=<id>` (coalesced single-file, batch-scoped
-    * overwrite — idempotent replay, the [[writeBatch]] discipline).
+    * `outDir/batch=<id>` as one file.
     * Trade vs [[annProbe]]: that one holds centroids+cells as fixed
     * frames in one continuous plan (lowest latency, state-store top-k);
     * this one re-plans per batch (driver-job latency per trigger) but
@@ -995,20 +957,15 @@ object Pipelines {
   def annServe(probes: DataFrame, centroidsDir: String, cellsPath: String,
                outDir: String, checkpoint: String,
                nprobe: Int = 0, k: Int = 5)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    probes.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val corpus = spark.read.parquet(cellsPath)
-          .select(col("vec_id"), col("embedding"), col("label"))
-        ptx.sources.VectorIndex.probe(spark, centroidsDir, corpus,
-            batch.select(col("probe_id"), col("p")), nprobe, k)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    batchSink(probes, checkpoint) { (batch, id) =>
+      val spark = batch.sparkSession
+      val corpus = spark.read.parquet(cellsPath)
+        .select(col("vec_id"), col("embedding"), col("label"))
+      writeBatch(ptx.sources.VectorIndex.probe(spark, centroidsDir, corpus,
+        batch.select(col("probe_id"), col("p")), nprobe, k).coalesce(1),
+        id, outDir)
+    }
 
   /** Streaming IVF index MAINTENANCE — the ingest side of the serving
     * stack ([[annProbe]] is the query side): a stream of new embedding
@@ -1017,10 +974,7 @@ object Pipelines {
     *  1. ASSIGN each new vector to its nearest persisted centroid
     *     ([[ptx.sources.VectorIndex.assign]] — broadcast centroid array,
     *     zero shuffle of the batch);
-    *  2. APPEND the assigned vectors to `dir/cells` under the batch's own
-    *     `batch=<id>` subdir in overwrite mode — the same idempotent-replay
-    *     contract as [[writeBatch]], so a retried batch replaces rather
-    *     than duplicates;
+    *  2. APPEND the assigned vectors under `dir/cells/batch=<id>`;
     *  3. every `refreshEvery` batches, RECENTER: recompute the centroids
     *     over ALL cells ([[ptx.ops.LlmScale.ivfCentroids]], the bit-exact
     *     float32 recipe) and overwrite `dir/centroids`, so cells drift
@@ -1034,25 +988,22 @@ object Pipelines {
     * pass; its cadence (refreshEvery) is the cost/recall knob.
     * The batch body runs on `batch.sparkSession`, the stream's own
     * session, so the reshard's [[ptx.Jobs.noAqe]] scopes never reach
-    * queries on the session that started the stream.
+    * queries on the session that started the stream. The stream runs
+    * until stopped, one micro-batch as soon as the last one ends.
     */
   def indexRefresh(newVecs: DataFrame, dir: String, checkpoint: String,
                    refreshEvery: Int = 4, targetCell: Int = Int.MaxValue)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    newVecs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val cent = ptx.sources.VectorIndex.read(spark, s"$dir/centroids")
-        ptx.sources.VectorIndex.assign(batch.select("vec_id", "embedding"), cent)
-          .write.mode("overwrite").parquet(s"$dir/cells/batch=$id")
-        if ((id + 1) % refreshEvery == 0) recenterOrReshard(spark, dir, targetCell)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : StreamingQuery =
+    batchSink(newVecs, checkpoint, Trigger.ProcessingTime(0L)) { (batch, id) =>
+      val spark = batch.sparkSession
+      val cent = ptx.sources.VectorIndex.read(spark, s"$dir/centroids")
+      writeBatch(ptx.sources.VectorIndex.assign(
+        batch.select("vec_id", "embedding"), cent), id, s"$dir/cells")
+      if ((id + 1) % refreshEvery == 0) recenterOrReshard(spark, dir, targetCell)
+    }
 
   /** The recenter cadence's body, shared by [[indexRefresh]] and
-    * [[semanticAdmission]] (r16): when a `targetCell` budget is set and
+    * [[semanticAdmission]]: when a `targetCell` budget is set and
     * the admitted corpus has outgrown it, RESHARD — rebuild the index at
     * the corpus-adaptive k ([[ptx.sources.VectorIndex.reshard]], the
     * runnable "k re-shards with the corpus" contract); otherwise the
@@ -1068,14 +1019,12 @@ object Pipelines {
         spark.read.parquet(s"$dir/cells"), s"$dir/centroids")
   }
 
-  /** Streaming TOKENIZER maintenance (r17, VERDICT r16 #4) — the
+  /** Streaming TOKENIZER maintenance — the
     * [[indexRefresh]] treatment for the persisted BPE artifact
     * ([[ptx.sources.BpeModel]]): a stream of new documents is admitted
     * into the training corpus as it arrives, and the tokenizer re-learns
     * on a cadence. Per micro-batch, via foreachBatch:
-    *  1. APPEND the batch's docs under `dir/docs/batch=<id>` in
-    *     overwrite mode (the idempotent-replay contract — a retried
-    *     batch replaces its own partition);
+    *  1. APPEND the batch's docs under `dir/docs/batch=<id>`;
     *  2. every `refreshEvery` batches, RE-LEARN over ALL admitted docs
     *     and PUBLISH as `v=<batchId>` under `dir/model`
     *     ([[ptx.sources.BpeModel.publish]] — both halves land in a
@@ -1092,54 +1041,43 @@ object Pipelines {
     * prefix — StreamingSpec pins both across a refresh and a replay.
     * Scale: the re-learn is the one corpus-pass cost, on its cadence
     * knob (the recenter precedent); every other batch term is
-    * batch-sized. */
+    * batch-sized. Like [[indexRefresh]], the body reads through
+    * `batch.sparkSession` and the stream runs until stopped. */
   def tokenizerRefresh(newDocs: DataFrame, dir: String, checkpoint: String,
                        refreshEvery: Int = 4, k: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = newDocs.sparkSession
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.select(col("doc_id"), col("text"))
-          .write.mode("overwrite").parquet(s"$dir/docs/batch=$id")
-        if ((id + 1) % refreshEvery == 0)
-          ptx.sources.BpeModel.publish(
-            spark.read.parquet(s"$dir/docs").select(col("doc_id"), col("text")),
-            s"$dir/model", version = id, k = k): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      : StreamingQuery =
+    batchSink(newDocs, checkpoint, Trigger.ProcessingTime(0L)) { (batch, id) =>
+      writeBatch(batch.select(col("doc_id"), col("text")), id, s"$dir/docs")
+      if ((id + 1) % refreshEvery == 0)
+        ptx.sources.BpeModel.publish(
+          batch.sparkSession.read.parquet(s"$dir/docs")
+            .select(col("doc_id"), col("text")),
+          s"$dir/model", version = id, k = k): Unit
+    }
 
   /** One batch's SEMANTIC admission pass — the [[admitShardBatch]] shape
-    * at the EMBEDDING grain (r15): SemDeDup at ingest, the admission
+    * at the EMBEDDING grain: SemDeDup at ingest, the admission
     * pipeline the batch-side `llm_semdedup`/`llm_semdedup_kmeans`
-    * queries imply but nothing streamed. Each arriving vector batch is
-    *  1. ASSIGNED to its nearest persisted cell
+    * queries imply. Its probe, inside [[admitBatch]]:
+    *  1. ASSIGNS each batch vector to its nearest persisted cell
     *     ([[ptx.sources.VectorIndex.assign]] — broadcast centroid
     *     array, zero shuffle of the batch);
-    *  2. PROBED against the already-admitted vectors of ITS OWN CELLS:
+    *  2. PROBES the already-admitted vectors of the batch's own cells:
     *     the batch's distinct cell labels (≤ min(|batch|, k) values)
     *     are collected and pushed as an In(label,…) filter into the
-    *     cells scan — the CLUSTERED-key case where an In push is
-    *     load-bearing (compactCells range-lays cells by label, so the
-    *     read prunes row groups on footer min/max; contrast the
-    *     uniform-hash post-scan In(h) removed the same round) — plus
-    *     same-cell batch mates; the codegen'd cosine kernel scores
-    *     candidates at `threshold`, pairs stored CANONICALLY
-    *     (least, greatest) so a retried batch's audit is byte-stable;
-    *  3. FILTERED by the standard deterministic smallest-id policy
-    *     (shared [[rejectedDocGrain]] — ONE doc-grain aggregation,
-    *     driver memory |batch|-bounded): a batch vector with an
-    *     admitted same-cell partner at cosine ≥ threshold, or a
-    *     smaller-id same-cell batch sibling, is rejected (the
-    *     conservative over-drop direction every admission gate here
-    *     documents);
-    *  4. ADMITTED under the batch's own `cells/batch=<id>` partition
-    *     (the [[indexRefresh]] idempotent-replay contract; a retry's
-    *     own previous rows carry the batch's ids and are excluded by
-    *     id inequality), with a RECENTER over all cells every
-    *     `refreshEvery` batches (bit-exact ivfCentroids recipe — the
-    *     cadence is the cost/recall knob).
+    *     cells scan. Cell ids are clustered keys (compactCells range-lays
+    *     cells by label), so the read prunes row groups on footer
+    *     min/max. Same-cell batch mates are candidates too; the
+    *     codegen'd cosine kernel scores candidates at `threshold`, and
+    *     pairs are stored canonically (least, greatest) so a retried
+    *     batch's audit is byte-stable.
+    * The shared policy then rejects a batch vector with an admitted
+    * same-cell partner at cosine ≥ threshold, or a smaller-id same-cell
+    * batch sibling, and the survivors are admitted under the batch's own
+    * `cells/batch=<id>` partition (a retry's own previous rows carry the
+    * batch's ids and are excluded by id inequality). Every
+    * `refreshEvery` batches a RECENTER follows (bit-exact ivfCentroids
+    * recipe — the cadence is the cost/recall knob).
     * Semantics: within-cell keep-lowest-id at `threshold` restricted
     * to the visible universe — exactly the cell-bounded batch contract
     * applied incrementally; a cross-cell near-duplicate is out of
@@ -1154,18 +1092,11 @@ object Pipelines {
                                       targetCell: Int = Int.MaxValue): Unit = {
     val spark = batch.sparkSession
     ptx.functions.VectorOps.register(spark)
-    val b = ptx.Caching.pin(batch.select(col("vec_id"), col("embedding")))
-    try withMicroBatchPlan(spark) {
+    admitBatch(batch, id, "vec_id", "embedding", outDir) { b =>
       val cent = ptx.sources.VectorIndex.read(spark, s"$indexDir/centroids")
       val assigned = ptx.Caching.pin(ptx.sources.VectorIndex.assign(b, cent))
-      var ids: Set[Long] = null
-      var labels: Seq[Int] = null
-      ptx.Jobs.par(
-        () => ids = t("sem ids collect") {
-          b.select(col("vec_id")).collect().map(_.getLong(0)).toSet },
-        () => labels = t("sem labels collect") {
-          assigned.select(col("label")).distinct()
-            .collect().map(_.getInt(0)).toSeq })
+      val labels = assigned.select(col("label")).distinct()
+        .collect().map(_.getInt(0)).toSeq
       val bc = assigned.select(col("vec_id").as("v1"),
         col("embedding").as("e1"), col("label"))
       val cells = spark.read.parquet(s"$indexDir/cells")
@@ -1178,24 +1109,17 @@ object Pipelines {
         .join(assigned.select(col("vec_id").as("v2"),
           col("embedding").as("e2"), col("label")), Seq("label"))
         .filter(col("v1") < col("v2"))
-      val pairs = ptx.Caching.pin(
-        idxPairs.unionByName(batchPairs)
-          .withColumn("sim", expr("cosine_sim(e1, e2)"))
-          .filter(col("sim") >= threshold)
-          .select(least(col("v1"), col("v2")).as("v1"),
-            greatest(col("v1"), col("v2")).as("v2"),
-            round(col("sim"), 6).as("sim"))
-          .dropDuplicates("v1", "v2"))
-      val rejected = t("sem policy collect") {
-        rejectedDocGrain(pairs, "v1", "v2", ids) }
-      t("sem sink round") { ptx.Jobs.par(
-        () => pairs.coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/pairs/batch=$id"),
-        () => exceptIds(b, "vec_id", rejected).coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/accepted/batch=$id"),
-        () => exceptIds(assigned, "vec_id", rejected).coalesce(1)
-          .write.mode("overwrite").parquet(s"$indexDir/cells/batch=$id")) }
-    } finally ptx.Caching.release(spark)
+      val pairs = idxPairs.unionByName(batchPairs)
+        .withColumn("sim", expr("cosine_sim(e1, e2)"))
+        .filter(col("sim") >= threshold)
+        .select(least(col("v1"), col("v2")).as("v1"),
+          greatest(col("v1"), col("v2")).as("v2"),
+          round(col("sim"), 6).as("sim"))
+        .dropDuplicates("v1", "v2")
+      (pairs, rejected => writeBatch(
+        exceptIds(assigned, "vec_id", rejected).coalesce(1), id,
+        s"$indexDir/cells"))
+    }
     // the recenter is the ONE corpus pass here — it runs OUTSIDE the
     // micro-batch plan scope (session exchange width, AQE back on):
     // squeezing a corpus-sized posexplode aggregation through 4-wide
@@ -1213,15 +1137,9 @@ object Pipelines {
   def semanticAdmission(vecs: DataFrame, indexDir: String, outDir: String,
                         checkpoint: String, threshold: Double = 0.45,
                         refreshEvery: Int = 4, targetCell: Int = Int.MaxValue)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        admitSemanticBatch(batch, id, indexDir, outDir, threshold,
-          refreshEvery, targetCell)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    batchSink(vecs, checkpoint)(admitSemanticBatch(_, _, indexDir, outDir,
+      threshold, refreshEvery, targetCell))
 
   /** Run an admission `foreachBatch` body under the micro-batch plan
     * shape. AQE is off: on KB-to-MB batches whose plans chain broadcast
@@ -1231,7 +1149,9 @@ object Pipelines {
     * tasks. Constraint propagation is off: it is quadratic in plan
     * expressions, and the admission bodies place their join keys and
     * filters by hand. Results are identical; only plans and job shape
-    * change. Batch-mode shard probes keep the session's settings.
+    * change. Every admission body opens this scope itself, so a direct
+    * batch-mode call plans exactly as its stream does; index probes
+    * outside an admission body keep the session's settings.
     *
     * A [[ptx.Jobs.withConf]] scope, under its restore rule. Stream bodies
     * pass `batch.sparkSession`, the stream's own session, so queries on
@@ -1245,22 +1165,13 @@ object Pipelines {
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.constraintPropagation.enabled" -> "false")(f)
 
-  private def t[A](name: String)(f: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_ADM_DEBUG")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[admdbg] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    } else f
-
-  /** The deterministic one-pass rejection policy as an executable SPEC
-    * (r13; demoted from the production path in r14): a doc `d` of the
-    * batch universe `ids` is rejected iff some near-dup partner `o` is
-    * an index doc (`!ids(o)`) or a smaller-id sibling of the same
-    * universe (`ids(o) && o < d`). The admission pipelines now evaluate
-    * this as ONE doc-grain aggregation ([[rejectedDocGrain]], whose
-    * agreement with this function StreamingSpec pins) so driver memory
-    * never scales with the candidate-pair fan-out. */
+  /** The deterministic one-pass rejection policy as an executable SPEC:
+    * a doc `d` of the batch universe `ids` is rejected iff some near-dup
+    * partner `o` is an index doc (`!ids(o)`) or a smaller-id sibling of
+    * the same universe (`ids(o) && o < d`). The admission pipelines
+    * evaluate it as ONE doc-grain aggregation ([[rejectedDocGrain]],
+    * whose agreement with this function StreamingSpec pins) so driver
+    * memory never scales with the candidate-pair fan-out. */
   private[ptx] def rejectedByPolicy(pairs: Iterable[(Long, Long)],
                                     ids: Long => Boolean): Set[Long] =
     pairs.iterator
@@ -1268,13 +1179,12 @@ object Pipelines {
       .collect { case (d, o) if ids(d) && (!ids(o) || o < d) => d }
       .toSet
 
-  /** [[rejectedByPolicy]] as ONE doc-grain aggregation (r14, VERDICT r13
-    * #5): the policy needs only two facts per universe doc `d` over its
-    * pair partners `o` — "some partner lies OUTSIDE the universe" and
-    * "the smallest IN-universe partner" — so the per-batch collect is
+  /** [[rejectedByPolicy]] as ONE doc-grain aggregation: the policy needs
+    * only two facts per universe doc `d` over its pair partners `o` —
+    * "some partner lies OUTSIDE the universe" and "the smallest
+    * IN-universe partner" — so the per-batch collect is
     * |universe|-bounded even when an adversarial boilerplate-heavy shard
-    * fans the candidate-pair frame toward |shard| × |index-candidates|
-    * (the pair-grain collect this replaces grew with exactly that).
+    * fans the candidate-pair frame toward |shard| × |index-candidates|.
     * The universe test rides as InSet literals (micro-batch-bounded by
     * the admission contract), not a broadcast join — each broadcast
     * build is one ~0.2 s plan barrier in-stream. Agreement with the
@@ -1303,9 +1213,8 @@ object Pipelines {
 
   /** `df` minus rows whose `idCol` is in `ids`: an In(...) literal for
     * small sets, a broadcast local-relation ANTI join above the
-    * threshold (r14, VERDICT r13 #5 — the sink plans previously carried
-    * a rejSeq-length In each, which an all-duplicate shard makes
-    * shard-sized). */
+    * threshold, so an all-duplicate shard never puts a shard-sized In
+    * into the sink plans. */
   private[ptx] def exceptIds(df: DataFrame, idCol: String,
                              ids: Set[Long], inThreshold: Int = 64): DataFrame =
     if (ids.isEmpty) df
@@ -1316,65 +1225,69 @@ object Pipelines {
       df.join(broadcast(ids.toSeq.toDF(idCol)), Seq(idCol), "left_anti")
     }
 
-  /** One batch's near-dup probe → policy-filter → admit pass — the
-    * [[shardAdmission]] per-batch core, shared with the composed
-    * [[ingestAdmission]] pipeline. Writes `outDir/pairs/batch=<id>` and
-    * `outDir/accepted/batch=<id>` and appends the accepted docs to the
-    * index under tag `b<id>` (all batch-scoped overwrites). */
-  private[ptx] def admitShardBatch(batch: DataFrame, id: Long,
-                                      indexDir: String, outDir: String,
-                                      threshold: Double): Unit = {
+  /** The admission skeleton of [[admitShardBatch]], [[admitContainBatch]]
+    * and [[admitSemanticBatch]]: probe → policy → admit over one batch.
+    * The batch's `(idCol, payloadCol)` frame is pinned, then, under
+    * [[withMicroBatchPlan]]:
+    *  1. `probe`, given the pinned batch, builds the near-dup pair frame
+    *     (its first two columns are the pair's ids) and the closure that
+    *     appends the accepted rows to the index. It runs concurrently
+    *     with the collect of the batch's ids, the policy's universe;
+    *  2. the pinned pair frame goes through [[rejectedDocGrain]], one
+    *     doc-grain aggregation;
+    *  3. one concurrent round writes the pair audit
+    *     (`outDir/pairs/batch=<id>`) and the accepted rows
+    *     (`outDir/accepted/batch=<id>`) and runs the index append. The
+    *     three share no ordering dependency and are filtered cache scans,
+    *     so wall ≈ probe + policy + max(write tails).
+    * Every pin is released on exit. Each sink is a `batch=<id>`
+    * overwrite, and a retry's own earlier index rows carry the batch's
+    * ids, so a retried batch changes nothing. The audits are one file per
+    * batch (coalesce(1)): a file per shuffle partition would pay a task
+    * commit each now and the small-files scan tax on every later read. */
+  private def admitBatch(batch: DataFrame, id: Long, idCol: String,
+                         payloadCol: String, outDir: String)(
+      probe: DataFrame => (DataFrame, Set[Long] => Unit)): Unit = {
     val spark = batch.sparkSession
-    // pinned: the batch frame feeds the signature pass, the accepted
-    // filter, and the audit writes — unpinned, each re-plans and
-    // re-reads the batch source
-    val b = ptx.Caching.pin(batch.select(col("doc_id"), col("text")))
+    // pinned: the batch feeds the probe, the id collect and the accepted
+    // write — unpinned, each re-plans and re-reads the batch source
+    val b = ptx.Caching.pin(batch.select(col(idCol), col(payloadCol)))
     try withMicroBatchPlan(spark) {
-      // sign ONCE per batch (r12, VERDICT r11 #3): the pinned signature
-      // frame feeds the probe's band join AND the admission append —
-      // previously the append re-shingled the accepted docs from text, a
-      // second corpus pass over the shard per batch. Bit-identical:
-      // signatures are pure functions of the text.
-      val sig = ptx.Caching.pin(ptx.sources.DedupIndex.signatures(b))
-      // pin the candidate-bounded pair frame: the audit sink below reads
-      // it from cache. microBatch = true: the shard-derived sides
-      // broadcast, so the probe is pure stream-static joins — see
-      // probeSigned.
-      // probe construction (its micro-batch candidate pruning runs an
-      // eager driver collect) overlaps the tiny batch-universe job, then
-      // ONE action materializes the probe chain AND lands the policy
-      // verdict at DOC grain (r14, VERDICT r13 #5 — the pair-grain
-      // collect this replaces grew with the candidate fan-out)
-      var pairs: DataFrame = null
+      var probed: (DataFrame, Set[Long] => Unit) = null
       var ids: Set[Long] = null
       ptx.Jobs.par(
-        () => pairs = ptx.Caching.pin(ptx.sources.DedupIndex.probeSigned(
-          spark, indexDir, sig, threshold, microBatch = true)),
-        () => ids = t("ids collect") {
-          b.select(col("doc_id")).collect().map(_.getLong(0)).toSet })
-      val rejected = t("policy collect") {
-        rejectedDocGrain(pairs, "doc1", "doc2", ids) }
-      // all three sinks (pair audit, accepted audit, index admission)
-      // share no ordering dependency and are pure cache scans with a
-      // bounded NOT-IN filter (broadcast anti join above the exceptIds
-      // threshold) — so the batch runs ONE concurrent sink round (the
-      // append fans into its two table writes the same way): wall ≈
-      // probe cost + max(write tails), not the sum of four sequential
-      // jobs.
-      // coalesce(1): one file per batch per table — a micro-batch writing
-      // #shuffle-partitions KB-files per sink pays one task-commit round
-      // per file NOW and the small-files scan tax on every later read
-      t("sink round") { ptx.Jobs.par(
-        () => pairs.coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/pairs/batch=$id"),
-        () => exceptIds(b, "doc_id", rejected)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/accepted/batch=$id"),
-        () => ptx.sources.DedupIndex.appendSigned(
-          exceptIds(sig, "doc_id", rejected),
-          indexDir, s"b$id", parts = 1)) }
-    } finally ptx.Caching.release(spark) // batch + signature + pair pins
+        () => probed = probe(b),
+        () => ids = b.select(col(idCol)).collect().map(_.getLong(0)).toSet)
+      val (raw, admit) = probed
+      val pairs = ptx.Caching.pin(raw)
+      val rejected =
+        rejectedDocGrain(pairs, pairs.columns(0), pairs.columns(1), ids)
+      ptx.Jobs.par(
+        () => writeBatch(pairs.coalesce(1), id, s"$outDir/pairs"),
+        () => writeBatch(exceptIds(b, idCol, rejected).coalesce(1), id,
+          s"$outDir/accepted"),
+        () => admit(rejected))
+    } finally ptx.Caching.release(spark)
   }
+
+  /** One batch's near-dup probe → policy-filter → admit pass — the
+    * [[shardAdmission]] per-batch core, on [[admitBatch]]. The batch is
+    * signed ONCE: the pinned signature frame feeds the probe's band join
+    * and the index append (signatures are pure functions of the text).
+    * The probe runs in its micro-batch shape: shard-derived sides
+    * broadcast, so it is pure stream-static joins (see
+    * [[ptx.sources.DedupIndex.probeSigned]]). Accepted docs enter the
+    * index under tag `b<id>`. */
+  private[ptx] def admitShardBatch(batch: DataFrame, id: Long,
+                                   indexDir: String, outDir: String,
+                                   threshold: Double): Unit =
+    admitBatch(batch, id, "doc_id", "text", outDir) { b =>
+      val sig = ptx.Caching.pin(ptx.sources.DedupIndex.signatures(b))
+      (ptx.sources.DedupIndex.probeSigned(
+          batch.sparkSession, indexDir, sig, threshold, microBatch = true),
+        rejected => ptx.sources.DedupIndex.appendSigned(
+          exceptIds(sig, "doc_id", rejected), indexDir, s"b$id", parts = 1))
+    }
 
   /** Streaming SHARD ADMISSION against the persisted near-dup index —
     * the dedup-grain twin of [[indexRefresh]], and the workflow the
@@ -1415,80 +1328,132 @@ object Pipelines {
     * row groups via the pushed id filter. */
   def shardAdmission(docs: DataFrame, indexDir: String, outDir: String,
                      checkpoint: String, threshold: Double = 0.4)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        admitShardBatch(batch, id, indexDir, outDir, threshold)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    batchSink(docs, checkpoint)(
+      admitShardBatch(_, _, indexDir, outDir, threshold))
 
   /** One batch's CONTAINMENT probe → policy-filter → admit pass — the
-    * [[containAdmission]] per-batch core, the [[admitShardBatch]] shape
-    * at the containment grain (r13): each arriving doc batch is shingled
-    * ONCE (the pinned shingle frame feeds the index probe AND the
-    * admission append), probed against the persisted
-    * [[ptx.sources.ContainIndex]] for directed containment pairs
-    * (quote/verbatim extraction — the duplicate class Jaccard banding
-    * cannot route), filtered by the same deterministic smallest-id
-    * policy (containment pairs are directed; the policy symmetrizes —
-    * a batch doc contained in OR containing an admitted/index doc, or a
-    * smaller-id batch sibling, is rejected), and the survivors admitted
-    * under the batch's own index partitions. All sinks batch-scoped
-    * overwrites — idempotent replay end to end, zero streaming state. */
+    * [[containAdmission]] per-batch core, on [[admitBatch]]: each
+    * arriving doc batch is shingled ONCE (the pinned shingle frame feeds
+    * the index probe AND the admission append), probed against the
+    * persisted [[ptx.sources.ContainIndex]] for directed containment
+    * pairs (quote/verbatim extraction — the duplicate class Jaccard
+    * banding cannot route), filtered by the same deterministic
+    * smallest-id policy (containment pairs are directed; the policy
+    * symmetrizes — a batch doc contained in OR containing an
+    * admitted/index doc, or a smaller-id batch sibling, is rejected),
+    * and the survivors admitted under the batch's own index partitions
+    * from the probe's own pinned frames (no meta/count/df-merge barrier
+    * inside the sink round). Zero streaming state. */
   private[ptx] def admitContainBatch(batch: DataFrame, id: Long,
                                      indexDir: String, outDir: String,
-                                     threshold: Double): Unit = {
-    val spark = batch.sparkSession
-    val b = ptx.Caching.pin(batch.select(col("doc_id"), col("text")))
-    try withMicroBatchPlan(spark) {
+                                     threshold: Double): Unit =
+    admitBatch(batch, id, "doc_id", "text", outDir) { b =>
       val sh = ptx.Caching.pin(
         ptx.functions.TextShingles.shingles(b)
           .select(col("doc_id"), col("shingle").as("h")))
-      // probe construction (meta read + two eager candidate collects)
-      // overlaps the tiny batch-universe job
-      var art: ptx.sources.ContainIndex.ProbeArtifacts = null
-      var ids: Set[Long] = null
-      t("contain par block") { ptx.Jobs.par(
-        () => art = ptx.sources.ContainIndex.probeArtifacts(
-          spark, indexDir, sh, threshold, microBatch = true),
-        () => ids = t("ids collect") {
-          b.select(col("doc_id")).collect().map(_.getLong(0)).toSet }) }
-      val pairs = ptx.Caching.pin(art.pairs)
-      // doc-grain policy verdict in ONE aggregation (r14, VERDICT r13 #5)
-      val rejected = t("contain policy collect") {
-        rejectedDocGrain(pairs, "src", "dst", ids) }
-      // the index admission writes the probe's own pinned frames
-      // (appendArtifacts) — no meta/count/df-merge barriers inside the
-      // sink round, every writer a filtered cache scan
-      t("contain sink round") { ptx.Jobs.par(
-        () => pairs.coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/pairs/batch=$id"),
-        () => exceptIds(b, "doc_id", rejected)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/accepted/batch=$id"),
-        () => ptx.sources.ContainIndex.appendArtifacts(
-          art, exceptIds(_, "doc_id", rejected),
-          indexDir, s"b$id", parts = 1)) }
-    } finally t("contain release") { ptx.Caching.release(spark) }
-  }
+      val art = ptx.sources.ContainIndex.probeArtifacts(
+        batch.sparkSession, indexDir, sh, threshold, microBatch = true)
+      (art.pairs, rejected => ptx.sources.ContainIndex.appendArtifacts(
+        art, exceptIds(_, "doc_id", rejected), indexDir, s"b$id", parts = 1))
+    }
 
   /** Streaming containment admission against the persisted
     * [[ptx.sources.ContainIndex]] — the [[shardAdmission]] twin for the
     * contained/containing duplicate class (see [[admitContainBatch]]). */
   def containAdmission(docs: DataFrame, indexDir: String, outDir: String,
                        checkpoint: String, threshold: Double = 0.8)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        admitContainBatch(batch, id, indexDir, outDir, threshold)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    batchSink(docs, checkpoint)(
+      admitContainBatch(_, _, indexDir, outDir, threshold))
 
-  /** Composed streaming INGEST ADMISSION (r11): the full document-shard
+  /** One composed-ingest batch: (gate verdicts) ∥ (sign + probe), then
+    * gate-filter → policy → sinks — the [[ingestAdmission]] per-batch
+    * core. It opens its own [[withMicroBatchPlan]] scope around the whole
+    * body, pin included, so a batch-mode call plans as the stream does.
+    * It is not an [[admitBatch]] body: its gate round feeds the policy.
+    *
+    * The batch's two independent chains overlap instead of running
+    * gates-then-admission: near-dup pairs are verified PER PAIR from
+    * per-doc signatures, so
+    * `probe(batch) restricted to gate-clean endpoints == probe(clean)`
+    * EXACTLY (candidate generation and Jaccard verification of a pair
+    * never read any third doc) — the full batch is signed and probed
+    * concurrently with the gate verdicts, and the gates' rejected ids
+    * are applied as a post-filter on the pinned pair frame.
+    * Wall ≈ max(gates, sign+probe) + policy/sink tail, not their sum.
+    * Deliberate trade: docs the gates reject are signed and probed for
+    * nothing — at most one shard's linear signing wasted on a wholesale
+    * drift rejection, bought against a gate-chain barrier on EVERY
+    * batch. The index append still admits only gate-clean survivors. */
+  private[ptx] def ingestAdmitBatch(batch: DataFrame, id: Long,
+                                    psiRef: DataFrame,
+                                    evalSketch: Array[Byte],
+                                    indexDir: String, dir: String,
+                                    threshold: Double): Unit = {
+    val spark = batch.sparkSession
+    withMicroBatchPlan(spark) {
+      val b = ptx.Caching.pin(batch.select(col("doc_id"), col("text")))
+      try {
+        val sig = ptx.Caching.pin(ptx.sources.DedupIndex.signatures(b))
+        // one pinned union frame carries BOTH gate verdicts: decon rows
+        // carry `source`, so the collected audit doubles as the driver's
+        // doc→source map and no extra job recovers drifted docs
+        val gates = ptx.Caching.pin(
+          driftVerdict(batch, psiRef).withColumn("gate", lit("drift"))
+            .unionByName(
+              deconVerdict(batch, evalSketch, carry = Seq("source"))
+                .withColumn("gate", lit("decon")),
+              allowMissingColumns = true))
+        // ONE concurrent round materializes the gate verdicts AND the
+        // probe's pinned pair frame (gate rows ≈ batch rows, pairs are
+        // banding-bounded), so the policy job below scans cached rows.
+        // probeSigned is CONSTRUCTED inside its thunk: its micro-batch
+        // candidate pruning runs an eager driver-side collect, which
+        // would otherwise serialize ahead of the gate chain.
+        var gateRows: Array[org.apache.spark.sql.Row] = null
+        var pairs: DataFrame = null
+        var batchIds: Set[Long] = null
+        ptx.Jobs.par(
+          () => gateRows = gates.collect(),
+          () => {
+            pairs = ptx.Caching.pin(ptx.sources.DedupIndex.probeSigned(
+              spark, indexDir, sig, threshold, microBatch = true))
+            batchIds = b.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+            pairs.count()
+          })
+        // driver-side gate verdicts (doc grain by construction)
+        val gateIdx = gates.columns.zipWithIndex.toMap
+        val deconRows = gateRows.filter(_.getString(gateIdx("gate")) == "decon")
+        val drifted = gateRows
+          .filter(r => r.getString(gateIdx("gate")) == "drift" &&
+            !r.isNullAt(gateIdx("drifted")) && r.getBoolean(gateIdx("drifted")))
+          .map(_.getString(gateIdx("source"))).toSet
+        val gateRej = deconRows.filter { r =>
+          r.getBoolean(gateIdx("contaminated")) ||
+            drifted(r.getString(gateIdx("source")))
+        }.map(_.getLong(gateIdx("doc_id"))).toSet
+        val cleanIds = batchIds -- gateRej
+        // the probe(clean) restriction: a bounded filter over the pinned
+        // pair frame dropping every pair that touches a gate-rejected doc
+        val cleanPairs =
+          exceptIds(exceptIds(pairs, "doc1", gateRej), "doc2", gateRej)
+        val rejected = rejectedDocGrain(cleanPairs, "doc1", "doc2", cleanIds)
+        val drop = gateRej ++ rejected
+        // one concurrent sink round: gate audit + pair audit + accepted +
+        // index admission — all filtered cache scans
+        ptx.Jobs.par(
+          () => writeBatch(gates.coalesce(1), id, s"$dir/gates"),
+          () => writeBatch(cleanPairs.coalesce(1), id, s"$dir/pairs"),
+          () => writeBatch(exceptIds(b, "doc_id", drop).coalesce(1), id,
+            s"$dir/accepted"),
+          () => ptx.sources.DedupIndex.appendSigned(
+            exceptIds(sig, "doc_id", drop), indexDir, s"b$id", parts = 1))
+      } finally ptx.Caching.release(spark)
+    }
+  }
+
+  /** Composed streaming INGEST ADMISSION: the full document-shard
     * admission stack in ONE foreachBatch — the streaming twin of the
     * composed batch `llm_curation_pipeline` discipline (each stage IS
     * the standalone gate's per-batch core, so the composition cannot
@@ -1501,143 +1466,25 @@ object Pipelines {
     *   2. DECONTAMINATION ([[deconVerdict]], doc grain): any doc whose
     *      word-8-grams hit the broadcast eval sketch is rejected (the
     *      one-sided-error direction: over-drop, never leak eval text);
-    *   3. NEAR-DUP ADMISSION ([[admitShardBatch]], doc grain): the
-    *      survivors probe the persisted index, the smallest-id policy
-    *      filters, and the admitted docs enter the index for the next
-    *      batch.
+    *   3. NEAR-DUP ADMISSION (the [[admitShardBatch]] probe and policy,
+    *      doc grain): the survivors probe the persisted index, the
+    *      smallest-id policy filters, and the admitted docs enter the
+    *      index for the next batch.
     * The two gates' verdict frames land as ONE audit file per batch
-    * under `dir/gates/batch=<id>` (r13, VERDICT r12 #4): a `gate`
-    * column tags each row `drift` (source grain: n_docs, psi_e6,
-    * drifted) or `decon` (doc grain: n_grams, n_hit, contaminated),
-    * off-grain columns null — one write job instead of two, and the
-    * audit write runs CONCURRENTLY with the admission chain (both read
-    * the pinned verdict frame, so neither recomputes the gates). The
-    * near-dup pair audit stays under `dir/pairs/batch=<id>`; the final
-    * survivors under `dir/accepted/batch=<id>`.
-    * Every write (and the index append) is a batch-scoped overwrite —
-    * idempotent replay end to end. Zero streaming state: the reference,
-    * sketch, and index are all static-or-persisted inputs. */
-  /** One composed-ingest batch: (gate verdicts + union audit write) ∥
-    * (sign + probe), then gate-filter → policy → sinks — the
-    * [[ingestAdmission]] per-batch core, callable in batch mode
-    * (AdmissionProfile).
-    *
-    * The r13 restructure overlaps the batch's two independent serial
-    * chains instead of running gates-then-admission: near-dup pairs are
-    * verified PER PAIR from per-doc signatures, so
-    * `probe(batch) restricted to gate-clean endpoints == probe(clean)`
-    * EXACTLY (candidate generation and Jaccard verification of a pair
-    * never read any third doc) — the full batch is signed and probed
-    * concurrently with the gate verdicts + audit write, and the gates'
-    * rejected ids are applied as a post-filter on the pinned pair frame.
-    * Wall ≈ max(gates, sign+probe) + policy/sink tail, not their sum.
-    * Deliberate trade: docs the gates reject are signed and probed for
-    * nothing — at most one shard's linear signing wasted on a wholesale
-    * drift rejection, bought against a gate-chain barrier on EVERY
-    * batch. The index append still admits only gate-clean survivors. */
-  private[ptx] def ingestAdmitBatch(batch: DataFrame, id: Long,
-                                    psiRef: DataFrame,
-                                    evalSketch: Array[Byte],
-                                    indexDir: String, dir: String,
-                                    threshold: Double): Unit = {
-    val spark = batch.sparkSession
-    val b = ptx.Caching.pin(batch.select(col("doc_id"), col("text")))
-    try {
-      val sig = ptx.Caching.pin(ptx.sources.DedupIndex.signatures(b))
-      // one pinned union frame carries BOTH gate verdicts (r13): decon
-      // rows carry `source` so the collected audit doubles as the
-      // driver's doc→source map — no extra job recovers drifted docs
-      val gates = ptx.Caching.pin(
-        driftVerdict(batch, psiRef).withColumn("gate", lit("drift"))
-          .unionByName(
-            deconVerdict(batch, evalSketch, carry = Seq("source"))
-              .withColumn("gate", lit("decon")),
-            allowMissingColumns = true))
-      // the two heavy chains share no lineage beyond the batch: ONE
-      // concurrent round materializes the gate verdicts AND the probe's
-      // pair frame (both collects are micro-batch-bounded — gate rows ≈
-      // batch rows, pairs are banding-bounded); the audit WRITE joins the
-      // sink round below as a pure cache scan. probeSigned is
-      // CONSTRUCTED inside its thunk: its micro-batch candidate pruning
-      // runs an eager driver-side collect at plan-construction time,
-      // which would otherwise serialize ahead of the gate chain.
-      var gateRows: Array[org.apache.spark.sql.Row] = null
-      var pairs: DataFrame = null
-      var batchIds: Set[Long] = null
-      ptx.Jobs.par(
-        () => gateRows = t("gates collect") { gates.collect() },
-        () => {
-          pairs = ptx.Caching.pin(ptx.sources.DedupIndex.probeSigned(
-            spark, indexDir, sig, threshold, microBatch = true))
-          batchIds = t("ids collect") {
-            b.select(col("doc_id")).collect().map(_.getLong(0)).toSet }
-          // materialize the pair pin inside the concurrent round (r14,
-          // VERDICT r13 #2/#5): the heavy verify DAG runs here, next to
-          // the gates, so the policy job below is a scan of ~|pairs|
-          // CACHED rows — and the policy itself is a doc-grain
-          // aggregation, never a pair-grain collect
-          t("pairs materialize") { pairs.count() }
-        })
-      // driver-side gate verdicts (doc grain by construction)
-      val gateIdx = gates.columns.zipWithIndex.toMap
-      val deconRows = gateRows.filter(_.getString(gateIdx("gate")) == "decon")
-      val drifted = gateRows
-        .filter(r => r.getString(gateIdx("gate")) == "drift" &&
-          !r.isNullAt(gateIdx("drifted")) && r.getBoolean(gateIdx("drifted")))
-        .map(_.getString(gateIdx("source"))).toSet
-      val gateRej = deconRows.filter { r =>
-        r.getBoolean(gateIdx("contaminated")) ||
-          drifted(r.getString(gateIdx("source")))
-      }.map(_.getLong(gateIdx("doc_id"))).toSet
-      val cleanIds = batchIds -- gateRej
-      // probe(batch) restricted to gate-clean endpoints == probe(clean)
-      // EXACTLY: a pair's candidate generation and Jaccard verification
-      // never read any third doc, so dropping pairs that touch a
-      // gate-rejected doc leaves precisely the pairs a post-gate probe
-      // would have produced. The restriction is a bounded filter over the
-      // PINNED pair frame (r14 — previously a driver-collected local
-      // relation). Deliberate trade: gate-rejected docs are signed and
-      // probed for nothing (at most one shard's linear signing on a
-      // wholesale drift rejection), bought against a gate-chain barrier
-      // on EVERY batch.
-      val cleanPairs =
-        exceptIds(exceptIds(pairs, "doc1", gateRej), "doc2", gateRej)
-      val rejected = t("policy collect") {
-        rejectedDocGrain(cleanPairs, "doc1", "doc2", cleanIds) }
-      val drop = gateRej ++ rejected
-      // one concurrent sink round: gate audit + pair audit + accepted +
-      // index admission — all filtered cache scans
-      t("sink round") { ptx.Jobs.par(
-        () => gates.coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/gates/batch=$id"),
-        () => cleanPairs.coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/pairs/batch=$id"),
-        () => exceptIds(b, "doc_id", drop)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/accepted/batch=$id"),
-        () => ptx.sources.DedupIndex.appendSigned(
-          exceptIds(sig, "doc_id", drop), indexDir, s"b$id", parts = 1)) }
-    } finally ptx.Caching.release(spark)
-  }
-
+    * under `dir/gates/batch=<id>`: a `gate` column tags each row `drift`
+    * (source grain: n_docs, psi_e6, drifted) or `decon` (doc grain:
+    * n_grams, n_hit, contaminated), off-grain columns null. The near-dup
+    * pair audit lands under `dir/pairs/batch=<id>`, the final survivors
+    * under `dir/accepted/batch=<id>`. Zero streaming state: the
+    * reference, sketch, and index are all static-or-persisted inputs. */
   def ingestAdmission(docs: DataFrame, psiRef: DataFrame,
                       evalSketch: Array[Byte], indexDir: String,
                       dir: String, checkpoint: String,
                       threshold: Double = 0.4)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val refLocal = localized(psiRef) // static + broadcast-sized: collect once
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // micro-batch plan scope: AQE re-planning off + batch-sized
-        // exchange width (see withMicroBatchPlan)
-        withMicroBatchPlan(batch.sparkSession) {
-          ingestAdmitBatch(batch, id, refLocal, evalSketch, indexDir, dir,
-            threshold)
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    batchSink(docs, checkpoint)(ingestAdmitBatch(_, _, refLocal, evalSketch,
+      indexDir, dir, threshold))
   }
 
   /** Stateful per-user pipeline via flatMapGroupsWithState: emits an alert

@@ -341,16 +341,21 @@ class GuardrailSpec extends AnyFunSuite {
     assert(s.conf.get(Parts) == "9", "a closed scope restored a stale base")
   }
 
-  test("session conf is written only through Jobs.withConf (and Tables' nanosAsLong)") {
-    // ptx/tools mains build and own their sessions, so they are exempt
+  /** Every engine source under `src/main/scala/ptx` with its lines. The
+    * ptx/tools mains build and own their sessions and streams, so the
+    * source scans below exempt them. */
+  private lazy val engineSources: Seq[(java.nio.file.Path, IndexedSeq[String])] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/ptx")
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(_.startsWith(root.resolve("tools"))).toSeq
     assert(files.exists(_.endsWith("Jobs.scala")), s"no sources under $root")
-    val writes = files.flatMap { f =>
-      val lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+    files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
+  }
+
+  test("session conf is written only through Jobs.withConf (and Tables' nanosAsLong)") {
+    val writes = engineSources.flatMap { case (f, lines) =>
       // the withConf body: from its def to the closing brace at def indent
       val from = if (f.endsWith("Jobs.scala"))
         lines.indexWhere(_.contains("def withConf[")) else -1
@@ -365,6 +370,24 @@ class GuardrailSpec extends AnyFunSuite {
     }
     assert(writes.isEmpty,
       s"session conf written outside Jobs.withConf:\n${writes.mkString("\n")}")
+  }
+
+  test("streams start only in Pipelines.batchSink, and no engine code reads a *_DEBUG env knob but BpeLearn") {
+    val debugRead = "sys\\.env.*\"[A-Z0-9_]*_DEBUG\"".r
+    val hits = engineSources.flatMap { case (f, lines) =>
+      // the batchSink body: from its def to the next blank line
+      val from = if (f.endsWith("Pipelines.scala"))
+        lines.indexWhere(_.contains("private def batchSink(")) else -1
+      val sink = if (from < 0) Range(0, 0)
+        else from until lines.indexWhere(_.trim.isEmpty, from)
+      lines.zipWithIndex.collect {
+        case (l, i) if (l.contains("writeStream") && !sink.contains(i)) ||
+            (debugRead.findFirstIn(l).nonEmpty && !f.endsWith("BpeLearn.scala")) =>
+          s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty,
+      s"stream started outside batchSink or debug knob read:\n${hits.mkString("\n")}")
   }
 
   // ── gram-hash collision canary (r12, VERDICT r11 #1) ─────────────────

@@ -1,9 +1,6 @@
 package ptx
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -139,32 +136,6 @@ class TablesSchemaSpec extends AnyFunSuite {
     assert(d3.count() == 5, "regenerated fixture must be re-read, not served stale")
   }
 
-  /** Spark jobs `body` starts. Two marker jobs bracket it; the listener bus
-    * delivers in order, so every job between them has arrived once the
-    * second marker has, and a lagging job of an earlier test is never
-    * counted. */
-  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
-    val sc = s.sparkContext
-    val seen = new LinkedBlockingQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.put(Option(j.properties).map(_.getProperty("spark.job.description", ""))
-          .getOrElse(""))
-    }
-    def marker(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(l)
-    try {
-      marker("jobsDuring:before"); body; marker("jobsDuring:after")
-      Iterator.continually(Option(seen.poll(10, TimeUnit.SECONDS))
-          .getOrElse(fail("marker job never reached the listener")))
-        .takeWhile(_ != "jobsDuring:after").dropWhile(_ != "jobsDuring:before")
-        .size - 1
-    } finally sc.removeSparkListener(l)
-  }
-
   test("the schema memo: a new session loads with no Spark job; a re-typed file or flipped nanosAsLong re-infers") {
     val s = TestSpark.spark
     val dir = java.nio.file.Files.createTempDirectory("ptx_schema").toFile.getAbsolutePath
@@ -177,7 +148,7 @@ class TablesSchemaSpec extends AnyFunSuite {
     writeDocs("INT")
     Tables.documents(s.newSession(), dir) // the first session pays inference
     val second = s.newSession()
-    assert(jobsDuring(s)(Tables.documents(second, dir)) == 0,
+    assert(TestSpark.jobsDuring(s)(Tables.documents(second, dir)) == 0,
       "a second session re-ran parquet schema inference")
     // regenerated under the same path → new fingerprint → new schema
     writeDocs("STRING")
@@ -185,7 +156,7 @@ class TablesSchemaSpec extends AnyFunSuite {
       "a re-typed file was loaded with its old memoized schema")
     val flipped = s.newSession()
     flipped.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    assert(jobsDuring(s)(Tables.documents(flipped, dir)) > 0,
+    assert(TestSpark.jobsDuring(s)(Tables.documents(flipped, dir)) > 0,
       "a session with other parquet-inference settings reused the schema memo entry")
   }
 }

@@ -336,6 +336,21 @@ class StreamingSpec extends AnyFunSuite {
     // and the union grid genuinely changes the verdict vs silent dropping
     assert(streamed != dropped,
       "novel buckets should move the PSI relative to the dropped-bucket grid")
+    // the drift-report gate scores PSI over the same grid: on the same
+    // reference (plus the moments its t column needs) its PSI columns
+    // equal the drift gate's
+    val refMoments = docs.filter(col("n_chars") <= cut)
+      .groupBy(expr("n_chars div 50").as("b"))
+      .agg(count(lit(1)).as("gn"),
+        sum(col("n_chars").cast("decimal(38,0)")).as("gsx"),
+        sum(expr("cast(n_chars as decimal(38,0)) * n_chars")).as("gsxx"))
+    val repOut = java.nio.file.Files.createTempDirectory("ptx-driftrep-novel").toString
+    val repCkpt = java.nio.file.Files.createTempDirectory("ptx-driftrep-novel-ckpt").toString
+    Pipelines.driftReportGate(ptx.Tables.documentsStream(spark, TestSpark.SF),
+      refMoments, repOut, repCkpt).awaitTermination()
+    val report = spark.read.parquet(s"$repOut/batch=0")
+      .select("source", "n_docs", "psi_e6", "drifted_psi").collect().map(key).toSet
+    assert(report == streamed, "drift-report PSI diverged from the drift gate's")
   }
 
   test("streaming decontamination gate: no false negatives vs exact overlap, fp-bounded, per-doc gram counts (r11)") {
@@ -1539,6 +1554,81 @@ class StreamingSpec extends AnyFunSuite {
       org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),
       s"anti-join sink plan shuffled:\n$planStr")
     ptx.Caching.releaseAll()
+  }
+
+  test("admission bodies called in batch mode plan inside the micro-batch scope, with fixed job counts") {
+    // each body opens its own withMicroBatchPlan scope, so a direct call
+    // never plans adaptively, and its job shape stays what the streaming
+    // wrappers pay per micro-batch
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val docs = ptx.Tables.documents(spark, TestSpark.SF)
+    val base = docs.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
+    val shard = docs.filter(col("doc_id") % 5 === 0)
+    val dedupIdx = tmp("shape_dedup"); val ingestIdx = tmp("shape_ingest")
+    val containIdx = tmp("shape_contain"); val semIdx = tmp("shape_sem")
+    ptx.sources.DedupIndex.write(base, dedupIdx)
+    ptx.sources.DedupIndex.write(base, ingestIdx)
+    ptx.sources.ContainIndex.write(base, containIdx)
+    val e = ptx.Tables.embeddings(spark, TestSpark.SF)
+    val seed = e.filter(col("vec_id") % 2 === 0)
+    ptx.sources.VectorIndex.write(seed, s"$semIdx/centroids")
+    ptx.sources.VectorIndex.assign(seed.select("vec_id", "embedding"),
+        ptx.sources.VectorIndex.read(spark, s"$semIdx/centroids"))
+      .write.parquet(s"$semIdx/cells/batch=-1")
+    val vecs = e.filter(col("vec_id") % 2 === 1).select("vec_id", "embedding")
+    // the reference as ingestAdmission holds it: a local relation
+    val psiRef = docs.groupBy(expr("n_chars div 50").as("b"))
+      .agg(count(lit(1)).as("gn")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.toDF("b", "gn")
+    val sketch = Pipelines.evalGramSketch(docs.filter(col("doc_id") % 10 === 5))
+    /** (jobs, functions of the adaptive executed plans) of one body. */
+    def shape(body: => Unit): (Int, List[String]) = {
+      val adaptive = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val drained = new java.util.concurrent.CountDownLatch(1)
+      val marker = spark.range(1).toDF("marker")
+      val l = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe eq marker.queryExecution) drained.countDown()
+          else if (qe.executedPlan.exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
+            adaptive.add(f)
+        override def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        val jobs = TestSpark.jobsDuring(spark)(body)
+        // execution events arrive in order: once the marker's has, every
+        // event of the body has too
+        marker.collect()
+        assert(drained.await(10, java.util.concurrent.TimeUnit.SECONDS),
+          "marker execution never reached the listener")
+        import scala.jdk.CollectionConverters._
+        (jobs, adaptive.asScala.toList)
+      } finally {
+        spark.listenerManager.unregister(l)
+        ptx.Caching.releaseAll()
+      }
+    }
+    val got = Seq(
+      "shard" -> shape(Pipelines.admitShardBatch(shard, 0L, dedupIdx,
+        tmp("shape_dedup_out"), 0.4)),
+      "contain" -> shape(Pipelines.admitContainBatch(shard, 0L, containIdx,
+        tmp("shape_contain_out"), 0.8)),
+      "semantic" -> shape(Pipelines.admitSemanticBatch(vecs, 0L, semIdx,
+        tmp("shape_sem_out"), 0.45, refreshEvery = 1000)),
+      "ingest" -> shape(Pipelines.ingestAdmitBatch(shard, 0L, psiRef, sketch,
+        ingestIdx, tmp("shape_ingest_out"), 0.4)))
+    got.foreach { case (name, (_, adaptive)) =>
+      assert(adaptive.isEmpty, s"$name planned adaptively: $adaptive")
+    }
+    // the counts each body ran before the three probe bodies shared one
+    // skeleton (ingest measured under the scope its stream wrapper opened)
+    val want = Map("shard" -> 12, "contain" -> 22, "semantic" -> 10, "ingest" -> 24)
+    got.foreach { case (name, (jobs, _)) =>
+      assert(jobs == want(name), s"$name ran $jobs jobs, want ${want(name)}")
+    }
   }
 
   test("composed ingest admission: every stage equals its standalone gate core; survivors admit (r11)") {

@@ -1,5 +1,7 @@
 package ptx.ops
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import ptx.{QFn, Tables}
 import ptx.ops.BoundedSort.ReportSortOps
@@ -21,23 +23,25 @@ object Extras {
     events.groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n_events"))
 
-  /** 1-row exact moments `(nd, sx, sxx)` of a daily-count frame —
-    * decimal(38,0) per-row cast BEFORE Σn² (the 100 TB overflow rule).
+  /** Exact `Σx` and `Σx²` of an integer column as decimal(38,0), cast per
+    * row BEFORE the sum: a long Σx² accumulator would overflow (ANSI abort
+    * or silent wrap) at corpus scale before any later cast could help. */
+  private def exactSums(x: Column, sx: String, sxx: String): Seq[Column] = Seq(
+    sum(x.cast("decimal(38,0)")).cast("decimal(38,0)").as(sx),
+    sum(x.cast("decimal(38,0)") * x).cast("decimal(38,0)").as(sxx))
+
+  /** 1-row exact moments `(nd, sx, sxx)` of a daily-count frame.
     * Broadcast back onto the grain it scores, or persist as the static
     * reference a streaming gate probes. */
-  def volumeMoments(daily: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    daily.agg(count(lit(1)).as("nd"),
-      sum(col("n_events").cast("decimal(38,0)")).cast("decimal(38,0)").as("sx"),
-      sum(col("n_events").cast("decimal(38,0)") * col("n_events"))
-        .cast("decimal(38,0)").as("sxx"))
+  def volumeMoments(daily: DataFrame): DataFrame =
+    daily.agg(count(lit(1)).as("nd"), exactSums(col("n_events"), "sx", "sxx"): _*)
 
   /** z + anomaly columns over a `(day, n_events, nd, sx, sxx)` frame: ONE
     * pinned-parenthesization double expression over exact integers (both
     * engines and both deployment modes divide identical operands), the
     * flag on the ROUNDED z, the zero-variance guard in exact decimal.
     *
-    * Bound (ADVICE r11): the guard's products `sxx * nd` and `sx * sx`
+    * Bound: the guard's products `sxx * nd` and `sx * sx`
     * stay in decimal(38,0) — Spark caps the result precision at 38, so
     * once sx or sxx approaches ~1e19 the products overflow to NULL, the
     * CASE guard goes false, and every day scores z = NULL (an all-NULL
@@ -57,47 +61,118 @@ object Extras {
           |END""".stripMargin).as("z"))
       .withColumn("anomalous", when(col("z").isNotNull, abs(col("z")) > 2.0))
 
-  /** Laplace-smoothed Population Stability Index of per-source bucket
-    * distributions `c(source, b, n)` against a reference distribution
-    * `g(b, gn)` — the shared core of `dq_drift_psi` (reference = the same
-    * corpus's own global distribution) and the streaming drift gate
-    * (reference = a static broadcast frame from a trusted snapshot).
-    * Each bucket term is snapped to the e6 grid BEFORE the summation so
-    * the signed, cancellation-prone PSI sum is an exact BIGINT reduction
-    * (accumulation-order-free); sources missing a reference bucket get
-    * the +1 smoothing cell instead of ln(0). Everything here runs on the
-    * sources×buckets grid — corpus-size-independent — with the reference
-    * and the per-source totals broadcast.
-    */
-  /** [[psiAgainst]] without the final source sort — the per-micro-batch
-    * drift GATE reads the verdict as a set (collect → driver filter), and
-    * the orderBy would cost a range exchange + sampling pass per batch
-    * for nothing (r13). Declared queries keep the sorted wrapper. */
-  def psiAgainstUnsorted(c: org.apache.spark.sql.DataFrame,
-                         g: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val tot = g.agg(sum(col("gn")).as("gt"), count(lit(1)).as("nb"))
-    val st = c.groupBy(col("source")).agg(sum(col("n")).as("sn_tot"))
-    // r18 (guide §2.4): the per-source totals frame IS the dense grid's
-    // left side — the separate distinct-sources aggregate and the sn_tot
-    // join are gone (the dq_drift_report batch-3 shape; also trims the
-    // streaming drift gate that shares this body)
-    val grid = st.crossJoin(broadcast(g))
-      .join(broadcast(c), Seq("source", "b"), "left_outer")
-      .withColumn("sn", coalesce(col("n"), lit(0L)))
+  /** The drift family's one corpus pass: `(source, b = n_chars div 50, n)`
+    * document-length cells, plus the exact per-cell n_chars sums `sxc`,
+    * `sxxc` with `moments`. */
+  private[ptx] def lengthCells(docs: DataFrame, moments: Boolean = false): DataFrame =
+    docs.groupBy(col("source"), expr("n_chars div 50").as("b"))
+      .agg(count(lit(1)).as("n"),
+        (if (moments) exactSums(col("n_chars"), "sxc", "sxxc") else Nil): _*)
+
+  /** The bucket grid `(b, gn)` of the cells' own corpus. */
+  private[ptx] def ownGrid(c: DataFrame): DataFrame =
+    c.groupBy(col("b")).agg(sum(col("n")).as("gn"))
+
+  /** The drift panel's grid statistics: per source of `c(source, b, n)`,
+    * `(source, n_docs, psi_e6, drifted_psi, ks_e6, drifted_ks)` against
+    * the bucket grid `g(b, gn)` — the corpus's own [[ownGrid]] for the
+    * batch audits, a reference-∪-novel grid for the streaming gates.
+    *
+    * PSI is Laplace-smoothed (+1 per cell over the grid's buckets), so a
+    * source missing a bucket adds a finite term instead of ln(0). Each
+    * term is snapped to the e6 grid BEFORE the sum: PSI's signed terms
+    * cancel enough that a raw double sum depends on accumulation order,
+    * while a BIGINT sum of snapped terms does not.
+    *
+    * KS is exact until the last step: with the per-source denominator
+    * ns·ng constant, D = max_b |cs_b·ng − cg_b·ns| / (ns·ng), so the max
+    * runs over DECIMAL(38,0) integers and one half-up division lands
+    * ks_e6. drifted_ks = D above the α=0.05 two-sample critical value
+    * 1.36·√((ns+ng)/(ns·ng)).
+    *
+    * Both statistics are one aggregation over one windowed grid; the
+    * window's source partitioning feeds the aggregation with no extra
+    * exchange. A caller that keeps only one statistic's columns gets a
+    * plan without the other's work: column pruning drops the unreferenced
+    * aggregate and window. Everything runs on the sources×buckets grid,
+    * with the grid, the cells and the totals broadcast. */
+  private[ptx] def driftPanel(c: DataFrame, g: DataFrame): DataFrame = {
+    val st = c.groupBy(col("source")).agg(sum(col("n")).as("ns"))
+    val tot = g.agg(sum(col("gn")).as("ng"), count(lit(1)).as("nb"))
     val term = expr(
-      "((sn + 1e0) / (sn_tot + nb) - (gn + 1e0) / (gt + nb)) * " +
-        "ln(((sn + 1e0) / (sn_tot + nb)) / ((gn + 1e0) / (gt + nb)))")
-    grid.crossJoin(broadcast(tot))
+      "((sn + 1e0) / (ns + nb) - (gn + 1e0) / (ng + nb)) * " +
+        "ln(((sn + 1e0) / (ns + nb)) / ((gn + 1e0) / (ng + nb)))")
+    val wb = Window.partitionBy(col("source")).orderBy(col("b"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    st.crossJoin(broadcast(g))
+      .join(broadcast(c.select(col("source"), col("b"), col("n"))),
+        Seq("source", "b"), "left_outer")
+      .withColumn("sn", coalesce(col("n"), lit(0L)))
+      .crossJoin(broadcast(tot))
       .withColumn("term_e6", round(term * lit(1000000d)).cast("long"))
-      .groupBy(col("source"), col("sn_tot"))
-      .agg(sum(col("term_e6")).as("psi_e6"))
-      .select(col("source"), col("sn_tot").as("n_docs"), col("psi_e6"),
-        (col("psi_e6") > 250000L).as("drifted"))
+      .withColumn("cs", sum(col("sn")).over(wb))
+      .withColumn("cg", sum(col("gn")).over(wb))
+      .withColumn("dnum", abs(
+        col("cs").cast("decimal(38,0)") * col("ng") -
+          col("cg").cast("decimal(38,0)") * col("ns")))
+      .groupBy(col("source"), col("ns"), col("ng"))
+      .agg(sum(col("term_e6")).as("psi_e6"), max(col("dnum")).as("dmax"))
+      .select(col("source"), col("ns").as("n_docs"),
+        col("psi_e6"), (col("psi_e6") > 250000L).as("drifted_psi"),
+        expr("(2 * dmax * 1000000 + cast(ns as decimal(38,0)) * ng)" +
+          " div (2 * cast(ns as decimal(38,0)) * ng)").as("ks_e6"),
+        expr("(dmax * 1e0) / (ns * 1e0 * ng) >" +
+          " 1.36 * sqrt((ns + ng) * 1e0 / (ns * 1e0 * ng))").as("drifted_ks"))
   }
 
-  def psiAgainst(c: org.apache.spark.sql.DataFrame,
-                 g: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    psiAgainstUnsorted(c, g).reportSort(col("source"))
+  /** Per-source PSI verdict `(source, n_docs, psi_e6, drifted)` of
+    * [[driftPanel]], unsorted: the streaming gates read it as a set, and
+    * the declared queries add their own `reportSort`. */
+  def psiAgainst(c: DataFrame, g: DataFrame): DataFrame =
+    driftPanel(c, g).select(col("source"), col("n_docs"), col("psi_e6"),
+      col("drifted_psi").as("drifted"))
+
+  /** Per-source exact moments `(source, n, sx, sxx)` of moment cells. */
+  private[ptx] def sourceMoments(c: DataFrame): DataFrame =
+    c.groupBy(col("source"))
+      .agg(sum(col("n")).as("n"), sum(col("sxc")).as("sx"), sum(col("sxxc")).as("sxx"))
+
+  /** Adds the comparison moments `(n2, sx2, sxx2)` of per-source moments
+    * `m(source, n, sx, sxx)` as global − own: the rest of the corpus, by
+    * exact integer subtraction, with no second scan and no self-join. */
+  private[ptx] def vsRest(m: DataFrame): DataFrame =
+    m.crossJoin(broadcast(m.agg(sum(col("n")).as("ng"),
+        sum(col("sx")).as("gx"), sum(col("sxx")).as("gxx"))))
+      .withColumn("n2", col("ng") - col("n"))
+      .withColumn("sx2", col("gx") - col("sx"))
+      .withColumn("sxx2", col("gxx") - col("sxx"))
+
+  /** Adds the Welch two-sample t of mean length, `t_stat` rounded 6dp,
+    * and `significant` = |t| > 1.96 (α=0.05 normal approximation: the
+    * per-source n makes the dof large), to a frame of exact moments
+    * `(n, sx, sxx)` and comparison moments `(n2, sx2, sxx2)`. The t value
+    * is one pinned-parenthesization double expression over those
+    * integers; n < 2 on either side or a zero variance denominator
+    * yields NULL. */
+  private[ptx] def welchT(m: DataFrame): DataFrame =
+    m.withColumn("t_stat", expr("""CASE WHEN n >= 2 AND n2 >= 2 AND
+        |  ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
+        |  ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2 > 0
+        |THEN round(
+        |  ((sx * 1e0) / n - (sx2 * 1e0) / n2) / sqrt(
+        |    ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
+        |    ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2),
+        |  6) END""".stripMargin))
+      .withColumn("significant",
+        when(col("t_stat").isNotNull, abs(col("t_stat")) > 1.96))
+
+  /** The full drift panel `(source, n_docs, psi_e6, drifted_psi, ks_e6,
+    * drifted_ks, t_stat, significant)`: [[driftPanel]] of moment cells `c`
+    * against grid `g`, joined with the [[welchT]] of `moments`. */
+  private[ptx] def driftReport(c: DataFrame, g: DataFrame, moments: DataFrame): DataFrame =
+    driftPanel(c, g).join(
+      welchT(moments).select(col("source"), col("t_stat"), col("significant")),
+      Seq("source"))
 
   def queries: Map[String, QFn] = Map(
     "sub_scalar" -> ((s, d) => {
@@ -374,33 +449,22 @@ object Extras {
       volumeVerdict(daily.crossJoin(broadcast(volumeMoments(daily))))
         .reportSort(col("day"))
     }),
-    // ✓ distribution-drift audit (r9): per-source Population Stability
-    // Index of the document-length distribution against the corpus-wide
+    // ✓ distribution-drift audit: per-source Population Stability Index
+    // of the document-length distribution against the corpus-wide
     // distribution — the standard "did shard X drift from the reference?"
     // gate (PSI > 0.25 is the conventional act-now threshold) run before
     // admitting a crawl shard into a training mix. Buckets reuse the
-    // llm_length_histogram grain (n_chars div 50); Laplace-smoothed
-    // (+1 per cell over the GLOBAL bucket list) so empty source-cells
-    // contribute finite terms instead of ln(0). Each bucket TERM is
-    // snapped to the e6 grid and the PSI is the exact BIGINT sum of the
-    // snapped terms (psi_e6): summing the raw doubles is accumulation-
-    // ORDER-dependent, and PSI's signed terms cancel enough that Spark's
-    // partial-agg order vs the oracle's scan order really flips the 6th
-    // decimal (measured: src1 at sf0.01) — the per-term round runs
-    // BEFORE any order-sensitive reduction, so both engines sum identical
-    // integers. (ln ulp skew could still move one term across its .5
-    // boundary, but that is a ~1e-12 event, not the raw sum's per-row
-    // coin flip.)
+    // llm_length_histogram grain (n_chars div 50); the statistic is
+    // [[driftPanel]]'s, whose e6 snap before the sum keeps both engines
+    // summing identical integers.
     // Scale: one (source,bucket) agg scans the corpus once; everything
     // after runs on the sources×buckets grid (#shards × #buckets rows,
     // independent of corpus size), with the global side broadcast.
     "dq_drift_psi" -> ((s, d) => {
       // apex pinned: the cell counts feed the global-bucket branch, the
       // per-source totals, and the grid join — unpinned, three corpus scans
-      val c = ptx.Caching.pin(Tables.documents(s, d)
-        .groupBy(col("source"), expr("n_chars div 50").as("b"))
-        .agg(count(lit(1)).as("n")))
-      psiAgainst(c, c.groupBy(col("b")).agg(sum(col("n")).as("gn")))
+      val c = ptx.Caching.pin(lengthCells(Tables.documents(s, d)))
+      psiAgainst(c, ownGrid(c)).reportSort(col("source"))
     }),
     // ✓ embedding-space drift audit (r9): per-label centroid vs the
     // corpus-wide centroid — cosine + L2 — the representation-space twin
@@ -490,181 +554,49 @@ object Extras {
         .select(lit("paired").as("check_name"), col("n"))
       a.union(b).union(c).orderBy(col("check_name"))
     }),
-    // ✓ Kolmogorov–Smirnov drift statistic (r9): per-source max CDF gap
-    // of the doc-length distribution vs the corpus-wide distribution —
-    // PSI's standard companion (PSI integrates the whole distribution;
-    // KS pins the single worst point, so a localized shift PSI smooths
-    // over still fires here). EXACT until the last step: with per-source
-    // denominator ns·ng constant, D = max_b |cs_b·ng − cg_b·ns| /
-    // (ns·ng), so the max runs over exact DECIMAL(38,0) integers and a
-    // single half-up division lands ks_e6 — no per-bucket double ever
-    // enters the max (the PSI snap lesson, taken to zero rounding).
-    // drifted = D above the α=0.05 two-sample critical value
-    // 1.36·√((ns+ng)/(ns·ng)) — both engines evaluate the identical
-    // integers through the identical double expression.
+    // ✓ Kolmogorov–Smirnov drift statistic: per-source max CDF gap of
+    // the doc-length distribution vs the corpus-wide distribution — PSI's
+    // standard companion (PSI integrates the whole distribution; KS pins
+    // the single worst point, so a localized shift PSI smooths over still
+    // fires here). Exact integers up to one division ([[driftPanel]]).
     // Scale: same pinned cell agg as the PSI audit; the cumulative sums
     // run on the sources×buckets grid (bounded), never the corpus.
     "dq_drift_ks" -> ((s, d) => {
-      val c = ptx.Caching.pin(Tables.documents(s, d)
-        .groupBy(col("source"), expr("n_chars div 50").as("b"))
-        .agg(count(lit(1)).as("n")))
-      val g = c.groupBy(col("b")).agg(sum(col("n")).as("gn"))
-      val st = c.groupBy(col("source")).agg(sum(col("n")).as("ns"))
-      val tot = g.agg(sum(col("gn")).as("ng"))
-      // r18 (guide §2.4, the dq_drift_report batch-3 shape): the
-      // source-grain totals frame IS the dense grid's left side — the
-      // separate distinct-sources aggregate and the ns join are gone
-      val grid = st.crossJoin(broadcast(g))
-        .join(broadcast(c), Seq("source", "b"), "left_outer")
-        .withColumn("sn", coalesce(col("n"), lit(0L)))
-      val wb = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("b"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      grid
-        .withColumn("cs", sum(col("sn")).over(wb))
-        .withColumn("cg", sum(col("gn")).over(wb))
-        .crossJoin(broadcast(tot))
-        .withColumn("dnum", abs(
-          col("cs").cast("decimal(38,0)") * col("ng") -
-            col("cg").cast("decimal(38,0)") * col("ns")))
-        .groupBy(col("source"), col("ns"), col("ng"))
-        .agg(max(col("dnum")).as("dmax"))
-        .select(col("source"), col("ns").as("n_docs"),
-          expr("(2 * dmax * 1000000 + cast(ns as decimal(38,0)) * ng)" +
-            " div (2 * cast(ns as decimal(38,0)) * ng)").as("ks_e6"),
-          expr("(dmax * 1e0) / (ns * 1e0 * ng) >" +
-            " 1.36 * sqrt((ns + ng) * 1e0 / (ns * 1e0 * ng))").as("drifted"))
+      val c = ptx.Caching.pin(lengthCells(Tables.documents(s, d)))
+      driftPanel(c, ownGrid(c))
+        .select(col("source"), col("n_docs"), col("ks_e6"),
+          col("drifted_ks").as("drifted"))
         .reportSort(col("source"))
     }),
-    // ✓ Welch t-test drift significance (r9): per source, the two-sample
-    // t statistic of mean doc length vs the REST of the corpus — the
+    // ✓ Welch t-test drift significance: per source, the two-sample t
+    // statistic of mean doc length vs the REST of the corpus — the
     // inferential member of the drift family (PSI/KS say how far the
     // distributions sit apart; the t-test says whether the MEAN gap
     // clears sampling noise, the first question a small-shard alert
-    // raises). Rest-of-corpus moments come free as global − source
-    // (exact integer subtraction — no second scan, no self-join). All
-    // moments are exact DECIMAL(38,0)/BIGINT sums; the t value is then
-    // one pinned-parenthesization double expression over identical
-    // integers on both engines (the PMI discipline), rounded 6dp.
-    // significant = |t| > 1.96 (α=0.05 normal approx — per-source n
-    // makes dof large enough that the z threshold is the honest frame).
-    // Guards: sources with n<2 or a zero variance denominator yield NULL.
+    // raises). Rest-of-corpus moments are global − source ([[vsRest]]);
+    // the t value is [[welchT]]'s expression over exact integers.
     // Scale: one corpus scan into per-source moments; everything after is
     // #sources-sized with the 1-row global broadcast.
     "dq_drift_ttest" -> ((s, d) => {
-      // Moments accumulate IN decimal(38,0) (per-row cast before the
-      // sum), not as a LONG sum cast afterwards: at 100 TB the long
-      // Σx² accumulator would overflow (ANSI abort / silent wrap)
-      // before any cast could help.
-      val m = Tables.documents(s, d)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("n_chars").cast("decimal(38,0)")).cast("decimal(38,0)").as("sx"),
-          sum(col("n_chars").cast("decimal(38,0)") * col("n_chars"))
-            .cast("decimal(38,0)").as("sxx"))
-      val g = m.agg(sum(col("n")).as("ng"),
-        sum(col("sx")).as("gx"), sum(col("sxx")).as("gxx"))
-      m.crossJoin(broadcast(g))
-        .withColumn("n2", col("ng") - col("n"))
-        .withColumn("sx2", col("gx") - col("sx"))
-        .withColumn("sxx2", col("gxx") - col("sxx"))
+      val m = Tables.documents(s, d).groupBy(col("source"))
+        .agg(count(lit(1)).as("n"), exactSums(col("n_chars"), "sx", "sxx"): _*)
+      welchT(vsRest(m))
         .select(col("source"), col("n").as("n_docs"),
           expr("CASE WHEN n > 0 THEN" +
             " (2 * sx * 1000000 + n) div (2 * n) END").as("mean_e6"),
-          expr("""CASE WHEN n >= 2 AND n2 >= 2 AND
-            |  ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
-            |  ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2 > 0
-            |THEN round(
-            |  ((sx * 1e0) / n - (sx2 * 1e0) / n2) / sqrt(
-            |    ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
-            |    ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2),
-            |  6) END""".stripMargin).as("t_stat"))
-        .withColumn("significant",
-          when(col("t_stat").isNotNull, abs(col("t_stat")) > 1.96))
-        .reportSort(col("source"))
-    }),
-    // ✓ composed drift report (r9): PSI + KS + Welch-t per source in ONE
-    // call — the dashboard row a data-quality monitor actually renders.
-    // The composition is where the efficiency lives: one pinned
-    // (source,bucket) aggregate carrying count AND the n_chars moments
-    // feeds all three statistics (the standalone audits each scan the
-    // corpus once; three separate calls = three scans, this = one), the
-    // llm_curation_pipeline share-the-apex discipline applied to the
-    // drift family. Values are formula-identical to the standalone ops —
-    // per-source t moments are exact sums of the bucket-level moments.
-    "dq_drift_report" -> ((s, d) => {
-      val c = ptx.Caching.pin(Tables.documents(s, d)
-        .groupBy(col("source"), expr("n_chars div 50").as("b"))
-        .agg(count(lit(1)).as("n"),
-          // per-row decimal cast BEFORE the sum — see dq_drift_ttest
-          sum(col("n_chars").cast("decimal(38,0)")).cast("decimal(38,0)").as("sxc"),
-          sum(col("n_chars").cast("decimal(38,0)") * col("n_chars"))
-            .cast("decimal(38,0)").as("sxxc")))
-      val cells = c.select(col("source"), col("b"), col("n"))
-      val g = cells.groupBy(col("b")).agg(sum(col("n")).as("gn"))
-      // r18 (guide §2.4, two steps): batch 2 collapsed PSI's and KS's twin
-      // grids into one; batch 3 goes further — the source-grain frame (ns)
-      // IS the crossJoin's left side (no separate distinct-sources frame,
-      // no ns join), and PSI's per-source term sum and KS's per-source
-      // D-statistic max are ONE aggregation over the same windowed grid
-      // (both group by source; the window's source partitioning feeds the
-      // agg with zero extra exchange). Profile before batch 3: 40 jobs /
-      // 784 tasks / 42 s summed task time for a ≤|sources×buckets| report
-      // frame — pure stage fan-out. Values bit-identical: every row still
-      // carries the same sn/gn/ns/ng/nb, term_e6 stays an independently
-      // rounded integer (order-free sum), dnum the same exact decimal.
-      val st = cells.groupBy(col("source")).agg(sum(col("n")).as("ns"))
-      val tot = g.agg(sum(col("gn")).as("ng"), count(lit(1)).as("nb"))
-      val grid = st.crossJoin(broadcast(g))
-        .join(broadcast(cells), Seq("source", "b"), "left_outer")
-        .withColumn("sn", coalesce(col("n"), lit(0L)))
-        .crossJoin(broadcast(tot))
-      val term = expr(
-        "((sn + 1e0) / (ns + nb) - (gn + 1e0) / (ng + nb)) * " +
-          "ln(((sn + 1e0) / (ns + nb)) / ((gn + 1e0) / (ng + nb)))")
-      val wb = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("b"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val psiKs = grid
-        .withColumn("term_e6", round(term * lit(1000000d)).cast("long"))
-        .withColumn("cs", sum(col("sn")).over(wb))
-        .withColumn("cg", sum(col("gn")).over(wb))
-        .withColumn("dnum", abs(
-          col("cs").cast("decimal(38,0)") * col("ng") -
-            col("cg").cast("decimal(38,0)") * col("ns")))
-        .groupBy(col("source"), col("ns"), col("ng"))
-        .agg(sum(col("term_e6")).as("psi_e6"), max(col("dnum")).as("dmax"))
-        .select(col("source"), col("ns").as("n_docs"),
-          col("psi_e6"), (col("psi_e6") > 250000L).as("drifted_psi"),
-          expr("(2 * dmax * 1000000 + cast(ns as decimal(38,0)) * ng)" +
-            " div (2 * cast(ns as decimal(38,0)) * ng)").as("ks_e6"),
-          expr("(dmax * 1e0) / (ns * 1e0 * ng) >" +
-            " 1.36 * sqrt((ns + ng) * 1e0 / (ns * 1e0 * ng))").as("drifted_ks"))
-      val m = c.groupBy(col("source"))
-        .agg(sum(col("n")).as("n"), sum(col("sxc")).as("sx"),
-          sum(col("sxxc")).as("sxx"))
-      val gm = m.agg(sum(col("n")).as("ngl"),
-        sum(col("sx")).as("gx"), sum(col("sxx")).as("gxx"))
-      val tt = m.crossJoin(broadcast(gm))
-        .withColumn("n2", col("ngl") - col("n"))
-        .withColumn("sx2", col("gx") - col("sx"))
-        .withColumn("sxx2", col("gxx") - col("sxx"))
-        .select(col("source"),
-          expr("""CASE WHEN n >= 2 AND n2 >= 2 AND
-            |  ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
-            |  ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2 > 0
-            |THEN round(
-            |  ((sx * 1e0) / n - (sx2 * 1e0) / n2) / sqrt(
-            |    ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
-            |    ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2),
-            |  6) END""".stripMargin).as("t_stat"))
-        .withColumn("significant",
-          when(col("t_stat").isNotNull, abs(col("t_stat")) > 1.96))
-      psiKs.join(tt, Seq("source"))
-        .select(col("source"), col("n_docs"), col("psi_e6"),
-          col("drifted_psi"), col("ks_e6"), col("drifted_ks"),
           col("t_stat"), col("significant"))
         .reportSort(col("source"))
+    }),
+    // ✓ composed drift report: PSI + KS + Welch-t per source in ONE call —
+    // the dashboard row a data-quality monitor actually renders. One
+    // pinned (source,bucket) aggregate carrying count AND the n_chars
+    // moments feeds all three statistics (three standalone calls scan
+    // the corpus three times, this once). Each column equals its
+    // standalone audit's: the same [[driftPanel]] and [[welchT]] cores,
+    // and per-source moments are exact sums of the bucket-level moments.
+    "dq_drift_report" -> ((s, d) => {
+      val c = ptx.Caching.pin(lengthCells(Tables.documents(s, d), moments = true))
+      driftReport(c, ownGrid(c), vsRest(sourceMoments(c))).reportSort(col("source"))
     })
   )
 

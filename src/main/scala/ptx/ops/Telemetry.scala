@@ -32,11 +32,11 @@ object Telemetry {
     "signup" -> 280.0, "error" -> 250.0)
 
   def queries: Map[String, QFn] = Map(
-    // ✓ value-distribution drift per event stream (r9): PSI of each
+    // ✓ value-distribution drift per event stream: PSI of each
     // event_type's VALUE distribution against the all-streams reference —
     // the telemetry twin of dq_drift_psi ("did the error stream's latency
-    // distribution move?"), computed by the SAME shared exact-integer
-    // core (Extras.psiAgainst): one pinned (type,bucket) cell agg, grid
+    // distribution move?"), computed by the SAME exact-integer core
+    // (Extras.psiAgainst): one pinned (type,bucket) cell agg, grid
     // arithmetic, e6-snap-before-sum. Buckets are floor(value/10) —
     // identical doubles floor identically on both engines.
     "pt_value_drift" -> ((s, d) => {
@@ -44,7 +44,7 @@ object Telemetry {
         .groupBy(col("event_type").as("source"),
           floor(col("value") / 10).cast("long").as("b"))
         .agg(count(lit(1)).as("n")))
-      Extras.psiAgainst(c, c.groupBy(col("b")).agg(sum(col("n")).as("gn")))
+      Extras.psiAgainst(c, Extras.ownGrid(c))
         .select(col("source").as("event_type"), col("n_docs").as("n_events"),
           col("psi_e6"), col("drifted"))
         .reportSort(col("event_type"))

@@ -3,14 +3,14 @@ package ptx.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted decontamination index (r12): the build-once / probe-many
+/** Persisted decontamination index: the build-once / probe-many
   * split of the eval-gram Bloom sketch — the third member of the
   * persisted-artifact triad ([[VectorIndex]] for ANN serving,
   * [[DedupIndex]] for near-dup admission, this for eval decontamination).
   *
-  * [[ptx.stream.Pipelines.evalGramSketch]] aggregates the eval corpus
-  * into a fixed-size Bloom filter of its word-8-gram hashes; the
-  * streaming gate then probes incoming train docs scan-side. Eval suites
+  * [[gramBloom]] aggregates the eval corpus into a fixed-size Bloom
+  * filter of its word-8-gram hashes; the streaming gate then probes
+  * incoming train docs scan-side. Eval suites
   * change rarely while admission runs continuously, so re-aggregating
   * the eval set per run (or per process restart) is the cost this index
   * removes: `write` persists the sketch WITH its parameters, `read`
@@ -42,25 +42,42 @@ import org.apache.spark.sql.functions._
 object DeconIndex {
   private val GramWidth = 8 // deconVerdict's word-8-gram contract
 
+  /** One pass over an eval corpus: `(bf, n_grams, n_docs)` — the Bloom
+    * filter of its word-8-gram hashes (`bloom_filter_agg`: duplicate
+    * inserts are idempotent, partials OR-merge; empty bytes when the
+    * corpus has no grams), the grams inserted, and the docs read. Every
+    * doc yields exactly one row at position 0 or, gram-less, at a NULL
+    * position, so the doc count needs no distinct aggregate — whose
+    * partial grouping by doc would hold one full-size filter per doc. */
+  private[ptx] def gramBloom(evalDocs: DataFrame, expectedItems: Long = 1000000L,
+                             numBits: Long = 8388608L): (Array[Byte], Long, Long) = {
+    ptx.functions.TextGrams.register(evalDocs.sparkSession)
+    ptx.functions.Blooms.register(evalDocs.sparkSession)
+    val row = evalDocs.select(posexplode_outer(
+        expr(s"gram_hashes(split(text, ' '), $GramWidth)")).as(Seq("pos", "h")))
+      .agg(call_function("bloom_filter_agg", col("h"),
+        lit(expectedItems), lit(numBits)).as("bf"),
+        count(col("h")).as("n_grams"),
+        count(when(coalesce(col("pos"), lit(0)) === 0, 1)).as("n_docs")).head()
+    (if (row.isNullAt(0)) Array.empty[Byte] else row.getAs[Array[Byte]](0),
+      row.getLong(1), row.getLong(2))
+  }
+
+  private def save(spark: SparkSession, dir: String, bf: Array[Byte], numBits: Long,
+                   expectedItems: Long, nDocs: Long, nGrams: Long): Unit = {
+    import spark.implicits._
+    Seq((bf, numBits, expectedItems, GramWidth, nDocs, nGrams))
+      .toDF("bf", "num_bits", "expected_items", "gram_width", "n_docs", "n_grams")
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/sketch")
+  }
+
   /** One corpus pass: build the eval-gram sketch and persist it with its
     * parameters. Overwrites any index at `dir`. */
   def write(evalDocs: DataFrame, dir: String,
             expectedItems: Long = 1000000L, numBits: Long = 8388608L): Unit = {
-    val spark = evalDocs.sparkSession
-    ptx.functions.TextGrams.register(spark)
-    ptx.functions.Blooms.register(spark)
-    val row = evalDocs.select(col("doc_id"),
-      explode_outer(expr(s"gram_hashes(split(text, ' '), $GramWidth)")).as("h"))
-      .agg(call_function("bloom_filter_agg", col("h"),
-        lit(expectedItems), lit(numBits)).as("bf"),
-        count(col("h")).as("n_grams"),
-        count_distinct(col("doc_id")).as("n_docs")).head()
-    val bf = if (row.isNullAt(0)) Array.empty[Byte] else row.getAs[Array[Byte]](0)
-    import spark.implicits._
-    Seq((bf, numBits, expectedItems, GramWidth, row.getLong(2), row.getLong(1)))
-      .toDF("bf", "num_bits", "expected_items", "gram_width", "n_docs", "n_grams")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/sketch")
+    val (bf, nGrams, nDocs) = gramBloom(evalDocs, expectedItems, numBits)
+    save(evalDocs.sparkSession, dir, bf, numBits, expectedItems, nDocs, nGrams)
   }
 
   /** The persisted sketch bytes — the argument
@@ -89,15 +106,7 @@ object DeconIndex {
     require(m.getInt(3) == GramWidth,
       s"stored gram_width ${m.getInt(3)} != probe contract $GramWidth")
     val existing = if (m.isNullAt(0)) Array.empty[Byte] else m.getAs[Array[Byte]](0)
-    ptx.functions.TextGrams.register(spark)
-    ptx.functions.Blooms.register(spark)
-    val row = evalDocs.select(col("doc_id"),
-      explode_outer(expr(s"gram_hashes(split(text, ' '), $GramWidth)")).as("h"))
-      .agg(call_function("bloom_filter_agg", col("h"),
-        lit(expectedItems), lit(numBits)).as("bf"),
-        count(col("h")).as("n_grams"),
-        count_distinct(col("doc_id")).as("n_docs")).head()
-    val shard = if (row.isNullAt(0)) Array.empty[Byte] else row.getAs[Array[Byte]](0)
+    val (shard, nGrams, nDocs) = gramBloom(evalDocs, expectedItems, numBits)
     val merged =
       if (existing.isEmpty) shard
       else if (shard.isEmpty) existing
@@ -113,11 +122,6 @@ object DeconIndex {
         a.writeTo(out)
         out.toByteArray
       }
-    import spark.implicits._
-    Seq((merged, numBits, expectedItems, GramWidth,
-      m.getLong(4) + row.getLong(2), m.getLong(5) + row.getLong(1)))
-      .toDF("bf", "num_bits", "expected_items", "gram_width", "n_docs", "n_grams")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/sketch")
+    save(spark, dir, merged, numBits, expectedItems, m.getLong(4) + nDocs, m.getLong(5) + nGrams)
   }
 }

@@ -129,10 +129,8 @@ object Pipelines {
   /** One batch's PSI drift verdict frame: the [[driftGate]] per-batch
     * core, shared with the composed [[ingestAdmission]] pipeline. */
   private[ptx] def driftVerdict(batch: DataFrame, ref: DataFrame): DataFrame = {
-    val cells = batch
-      .groupBy(col("source"), expr("n_chars div 50").as("b"))
-      .agg(count(lit(1)).as("n"))
-    ptx.ops.Extras.psiAgainstUnsorted(cells, unionGrid(cells, ref))
+    val cells = ptx.ops.Extras.lengthCells(batch)
+    ptx.ops.Extras.psiAgainst(cells, unionGrid(cells, ref))
   }
 
   /** Re-root a BROADCAST-SIZED static reference frame as a local
@@ -149,7 +147,7 @@ object Pipelines {
   /** Streaming twin of `dq_drift_psi`: a per-micro-batch drift gate.
     * Each batch's per-source document-length distribution is scored
     * (Laplace-smoothed PSI, exact e6-integer summation, the shared
-    * `ops.Extras.psiAgainst` core) against a static reference bucket
+    * `ops.Extras.driftPanel` core) against a static reference bucket
     * distribution `ref(b, gn)` from a trusted snapshot, over the
     * [[unionGrid]], and the per-source verdict lands in `dir/batch=<id>`.
     * This is the ingest-time admission gate: a crawl shard whose batch
@@ -167,82 +165,30 @@ object Pipelines {
   /** Streaming composed drift-REPORT gate: the full per-batch drift
     * panel — Laplace-smoothed PSI, Kolmogorov–Smirnov, and Welch-t — of
     * each batch source's document-length distribution against a STATIC
-    * reference snapshot, in ONE foreachBatch pass over one (source,
-    * bucket) cell aggregate (the batch `dq_drift_report` share-the-apex
-    * discipline applied at ingest). `ref` carries the snapshot's bucket
-    * frame `(b, gn, gsx, gsxx)`: count + exact DECIMAL(38,0) n_chars
-    * moment sums per bucket. Differences vs the batch audit trio: the
-    * comparison population is the REFERENCE (an admission gate asks "does
-    * this shard look like the lake?"), not same-corpus rest-of-global;
-    * and the PSI/KS grids are the [[unionGrid]], the same one
-    * [[driftGate]] scores, so novel-bucket drift counts. Zero streaming
-    * state; the verdict lands in `dir/batch=<id>`. Scale: everything
-    * after the one corpus scan is sources×buckets-grid-sized with the
-    * reference broadcast.
+    * reference snapshot, from one (source, bucket) cell aggregate per
+    * batch, scored by the `dq_drift_report` core (`ops.Extras.driftReport`).
+    * `ref` carries the snapshot's bucket frame `(b, gn, gsx, gsxx)`:
+    * count + exact DECIMAL(38,0) n_chars moment sums per bucket.
+    * Differences vs the batch audit: the t comparison population is the
+    * REFERENCE (an admission gate asks "does this shard look like the
+    * lake?"), not same-corpus rest-of-global; and the PSI/KS grid is the
+    * [[unionGrid]], the same one [[driftGate]] scores, so novel-bucket
+    * drift counts. Zero streaming state; the verdict lands unsorted in
+    * `dir/batch=<id>`, like [[driftGate]]'s. Scale: everything after the
+    * one batch scan is sources×buckets-grid-sized with the reference
+    * broadcast.
     */
   def driftReportGate(docs: DataFrame, refIn: DataFrame, dir: String,
                       checkpoint: String)
       : StreamingQuery = {
     val ref = localized(refIn) // static + broadcast-sized: collect once
+    val refMoments = ref.agg(sum(col("gn")).as("n2"),
+      sum(col("gsx")).cast("decimal(38,0)").as("sx2"),
+      sum(col("gsxx")).cast("decimal(38,0)").as("sxx2"))
     batchSink(docs, checkpoint) { (batch, id) =>
-      val cells = batch
-        .groupBy(col("source"), expr("n_chars div 50").as("b"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("n_chars").cast("decimal(38,0)")).cast("decimal(38,0)").as("sxc"),
-          sum(col("n_chars").cast("decimal(38,0)") * col("n_chars"))
-            .cast("decimal(38,0)").as("sxxc"))
-      val g = unionGrid(cells, ref)
-      val counts = cells.select(col("source"), col("b"), col("n"))
-      val psi = ptx.ops.Extras.psiAgainst(counts, g)
-        .select(col("source"), col("n_docs"), col("psi_e6"),
-          col("drifted").as("drifted_psi"))
-      // KS: max |batch cdf − reference cdf| over the union bucket grid,
-      // exact cross-multiplied integers (the dq_drift_ks recipe)
-      val st = counts.groupBy(col("source")).agg(sum(col("n")).as("ns"))
-      val tot = g.agg(sum(col("gn")).as("ng"))
-      val wb = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("b"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val ks = counts.select(col("source")).distinct()
-        .crossJoin(broadcast(g))
-        .join(broadcast(counts), Seq("source", "b"), "left_outer")
-        .withColumn("sn", coalesce(col("n"), lit(0L)))
-        .withColumn("cs", sum(col("sn")).over(wb))
-        .withColumn("cg", sum(col("gn")).over(wb))
-        .join(broadcast(st), Seq("source"))
-        .crossJoin(broadcast(tot))
-        .withColumn("dnum", abs(
-          col("cs").cast("decimal(38,0)") * col("ng") -
-            col("cg").cast("decimal(38,0)") * col("ns")))
-        .groupBy(col("source"), col("ns"), col("ng"))
-        .agg(max(col("dnum")).as("dmax"))
-        .select(col("source"),
-          expr("(2 * dmax * 1000000 + cast(ns as decimal(38,0)) * ng)" +
-            " div (2 * cast(ns as decimal(38,0)) * ng)").as("ks_e6"),
-          expr("(dmax * 1e0) / (ns * 1e0 * ng) >" +
-            " 1.36 * sqrt((ns + ng) * 1e0 / (ns * 1e0 * ng))").as("drifted_ks"))
-      // Welch t of the batch source's mean length vs the REFERENCE
-      // population (its moments arrive pre-aggregated in ref)
-      val m = cells.groupBy(col("source"))
-        .agg(sum(col("n")).as("n"), sum(col("sxc")).as("sx"),
-          sum(col("sxxc")).as("sxx"))
-      val gm = ref.agg(sum(col("gn")).as("n2"),
-        sum(col("gsx")).cast("decimal(38,0)").as("sx2"),
-        sum(col("gsxx")).cast("decimal(38,0)").as("sxx2"))
-      val tt = m.crossJoin(broadcast(gm))
-        .select(col("source"),
-          expr("""CASE WHEN n >= 2 AND n2 >= 2 AND
-            |  ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
-            |  ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2 > 0
-            |THEN round(
-            |  ((sx * 1e0) / n - (sx2 * 1e0) / n2) / sqrt(
-            |    ((sxx * 1e0 - (sx * 1e0) * (sx * 1e0) / n) / (n - 1)) / n +
-            |    ((sxx2 * 1e0 - (sx2 * 1e0) * (sx2 * 1e0) / n2) / (n2 - 1)) / n2),
-            |  6) END""".stripMargin).as("t_stat"))
-        .withColumn("significant",
-          when(col("t_stat").isNotNull, abs(col("t_stat")) > 1.96))
-      writeBatch(psi.join(ks, Seq("source")).join(tt, Seq("source"))
-        .orderBy(col("source")), id, dir)
+      val cells = ptx.ops.Extras.lengthCells(batch, moments = true)
+      writeBatch(ptx.ops.Extras.driftReport(cells, unionGrid(cells, ref),
+        ptx.ops.Extras.sourceMoments(cells).crossJoin(broadcast(refMoments))), id, dir)
     }
   }
 
@@ -272,19 +218,11 @@ object Pipelines {
 
   /** Builds the eval-set gram sketch [[decontaminationGate]] probes: one
     * pass over the benchmark/eval corpus inserting every word-8-gram hash
-    * into a 2^23-bit Bloom filter (`bloom_filter_agg` — duplicate
-    * insertions are idempotent, partials OR-merge). Eval suites are small,
-    * so the fixed 1 MB sketch holds fpp ≪ 1%; returns null-safe empty
-    * bytes when the eval frame has no grams. */
-  def evalGramSketch(evalDocs: DataFrame): Array[Byte] = {
-    ptx.functions.TextGrams.register(evalDocs.sparkSession)
-    ptx.functions.Blooms.register(evalDocs.sparkSession)
-    val row = evalDocs
-      .select(explode(expr("gram_hashes(split(text, ' '), 8)")).as("h"))
-      .agg(call_function("bloom_filter_agg", col("h"),
-        lit(1000000L), lit(8388608L)).as("bf")).head()
-    if (row.isNullAt(0)) Array.empty[Byte] else row.getAs[Array[Byte]](0)
-  }
+    * into a 2^23-bit Bloom filter (`ptx.sources.DeconIndex.gramBloom`, the
+    * persisted index's build). Eval suites are small, so the fixed 1 MB
+    * sketch holds fpp ≪ 1%; empty bytes when the eval frame has no grams. */
+  def evalGramSketch(evalDocs: DataFrame): Array[Byte] =
+    ptx.sources.DeconIndex.gramBloom(evalDocs)._1
 
   /** One batch's per-doc decontamination verdict `(doc_id, n_grams,
     * n_hit, contaminated)` — the [[decontaminationGate]] per-batch core,

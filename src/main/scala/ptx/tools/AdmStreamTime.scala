@@ -1,6 +1,5 @@
 package ptx.tools
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Focused admission-pipeline stream timer: StreamBench's exact
@@ -13,12 +12,11 @@ import org.apache.spark.sql.functions._
   * pipeline; the committed numbers still come from the full
   * StreamBench × streambench_median.py protocol.
   *
-  * CAVEAT (measured at introduction): runs DRIFT UP within one JVM
-  * (shard_admission read 2.97 → 3.90 s across 5 in-JVM repeats while
-  * separate-JVM StreamBench runs of the same code read ~2.5-2.8 s), so
-  * this tool's median skews pessimistic vs the committed protocol —
-  * compare its FIRST timed run to the STREAMBENCH bars, and treat the
-  * spread as the machine's, not the change's.
+  * Runs drift up within one JVM from garbage accumulated by earlier
+  * runs (docs/SCALE.md, "within-JVM drift"), so a full `System.gc()`
+  * runs before each run, outside its timing window. Compare against the
+  * STREAMBENCH bars with that in mind: the committed separate-JVM
+  * protocol pays no such collection.
   *
   *   sbt "runMain ptx.tools.AdmStreamTime [sfDir]"
   */
@@ -28,13 +26,7 @@ object AdmStreamTime {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "5").toInt
     val spark = Probe.session()
 
-    val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def tmpDir(prefix: String): String = {
-      val p = Files.createTempDirectory(prefix)
-      tmpDirs += p
-      p.toString
-    }
-    try {
+    Probe.withTempDirs { tmpDir => try {
       val docs = ptx.Tables.documents(spark, sfDir)
       val docStaged = tmpDir("ptx-ast-docs")
       docs.write.mode("overwrite").parquet(docStaged)
@@ -52,44 +44,8 @@ object AdmStreamTime {
 
       def time(f: => org.apache.spark.sql.streaming.StreamingQuery): Double =
         Probe.seconds(f.awaitTermination())
-      // drift root-cause probe: under
-      // SPARK_GRAFT_DRIFT_PROBE, print per-run deltas of the candidate
-      // terms behind the documented in-JVM upward drift — cumulative GC
-      // wall (heap pressure), Janino compilations + generated bytecode
-      // (codegen-cache misses: admission plans embed fresh temp paths
-      // and In(...) literal sets per run, so the cross-run cache hit
-      // rate is structurally ~0), and heap in use. Under
-      // SPARK_GRAFT_DRIFT_GC, additionally force a full System.gc()
-      // between runs — if drift survives forced collection, it is not
-      // collectible-garbage pressure.
-      val driftProbe = sys.env.contains("SPARK_GRAFT_DRIFT_PROBE")
-      val forceGc = sys.env.contains("SPARK_GRAFT_DRIFT_GC")
-      def gcMillis: Long = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-          .asScala.map(_.getCollectionTime).sum
-      }
-      def instrumented(name: String, once: () => Double): () => Double =
-        if (!driftProbe) once
-        else () => {
-          if (forceGc) { System.gc(); Thread.sleep(200) }
-          val gc0 = gcMillis
-          val comp0 = org.apache.spark.metrics.source.CodegenMetrics
-            .METRIC_SOURCE_CODE_SIZE.getCount
-          val bytes0 = org.apache.spark.metrics.source.CodegenMetrics
-            .METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount
-          val sec = once()
-          val rt = Runtime.getRuntime
-          println(f"[astdrift] $name sec=$sec%.3f gc_ms=+${gcMillis - gc0}" +
-            f" janino_compiles=+${org.apache.spark.metrics.source.CodegenMetrics
-              .METRIC_SOURCE_CODE_SIZE.getCount - comp0}" +
-            f" gen_bytecode=+${org.apache.spark.metrics.source.CodegenMetrics
-              .METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount - bytes0}" +
-            f" heap_used_mb=${(rt.totalMemory - rt.freeMemory) / 1024 / 1024}")
-          sec
-        }
-      def series(name: String)(once0: () => Double): Unit = {
-        val once = instrumented(name, once0)
+      def series(name: String)(run: () => Double): Unit = {
+        val once = () => { System.gc(); Thread.sleep(200); run() }
         once() // warm
         val secs = Seq.fill(runs)(once()).sorted
         // fair median on even sizes: the upper-middle alone skews
@@ -118,15 +74,6 @@ object AdmStreamTime {
         time(ptx.stream.Pipelines.ingestAdmission(
           src, ref, sketch, idx, tmpDir("ast-iout"), tmpDir("ast-icp")))
       }
-    } finally {
-      spark.stop()
-      tmpDirs.foreach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch { case _: Throwable => () }
-      }
-    }
+    } finally spark.stop() }
   }
 }

@@ -41,24 +41,26 @@ object IndexProbe {
       ptx.Caching.releaseAll()
     }
 
-    val docs = ptx.Tables.documents(spark, dir).select("doc_id", "text")
-    Probe.materialize(docs) // warm-up: JVM + codegen + the documents scan
+    Probe.withTempDirs { tmpDir =>
+      val docs = ptx.Tables.documents(spark, dir).select("doc_id", "text")
+      Probe.materialize(docs) // warm-up: JVM + codegen + the documents scan
 
-    timeIt(s"inline full-corpus query ($redo everything)") {
-      Probe.materialize(ptx.QueryRegistry.all(inline)(spark, dir))
-    }
-    for (pct <- Seq(10, 1)) {
-      val mod = 100 / pct
-      val base = docs.filter(col("doc_id") % mod =!= 0)
-      val shard = docs.filter(col("doc_id") % mod === 0)
-      val idx = java.nio.file.Files.createTempDirectory(s"${kind}idx$pct").toString
-      timeIt(s"index build over ${100 - pct}% base (paid once)") {
-        write(base, idx)
+      timeIt(s"inline full-corpus query ($redo everything)") {
+        Probe.materialize(ptx.QueryRegistry.all(inline)(spark, dir))
       }
-      for ((shape, probe) <- probes)
-        timeIt(s"${shape}probe of a $pct% shard (paid per admission)") {
-          Probe.materialize(probe(idx, shard))
+      for (pct <- Seq(10, 1)) {
+        val mod = 100 / pct
+        val base = docs.filter(col("doc_id") % mod =!= 0)
+        val shard = docs.filter(col("doc_id") % mod === 0)
+        val idx = tmpDir(s"${kind}idx$pct")
+        timeIt(s"index build over ${100 - pct}% base (paid once)") {
+          write(base, idx)
         }
+        for ((shape, probe) <- probes)
+          timeIt(s"${shape}probe of a $pct% shard (paid per admission)") {
+            Probe.materialize(probe(idx, shard))
+          }
+      }
     }
     spark.stop()
   }

@@ -59,6 +59,22 @@ object Probe {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Runs `body` with a `tmpDir(prefix)` maker, then deletes every
+    * directory it made, recursively, however `body` ends. */
+  def withTempDirs[A](body: (String => String) => A): A = {
+    val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    try body { prefix =>
+      val p = java.nio.file.Files.createTempDirectory(prefix)
+      made += p
+      p.toString
+    } finally made.foreach { p =>
+      import scala.jdk.CollectionConverters._
+      try java.nio.file.Files.walk(p).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
+
   /** Runs `body` and prints `label: <seconds> s`, plus the row count when
     * the body returns one. */
   def timed[A](label: String)(body: => A): A = {

@@ -35,16 +35,9 @@ object StreamBench {
     import spark.implicits._
 
     // every temp dir (staged fixture + per-run RocksDB checkpoints) is
-    // deleted in the finally below — a probe that leaks the full fixture
-    // plus 6 checkpoint trees into /tmp per invocation would grow the
-    // grading machine's disk by gigabytes across rounds
-    val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def tmpDir(prefix: String): String = {
-      val p = Files.createTempDirectory(prefix)
-      tmpDirs += p
-      p.toString
-    }
-    try {
+    // deleted when the run ends: a probe that leaks the full fixture plus
+    // its checkpoint trees per invocation grows the disk by gigabytes
+    Probe.withTempDirs { tmpDir => try {
       val staged = tmpDir("ptx-streambench")
       val ev = ptx.Tables.events(spark, sfDir)
         .select("event_id", "ts", "user_id", "event_type", "value")
@@ -405,15 +398,6 @@ object StreamBench {
       try Files.writeString(java.nio.file.Paths.get(out), json + "\n")
       catch { case e: Throwable =>
         System.err.println(s"[streambench] write $out failed: ${e.getMessage}") }
-    } finally {
-      spark.stop()
-      tmpDirs.foreach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch { case _: Throwable => () }
-      }
-    }
+    } finally spark.stop() }
   }
 }

@@ -390,6 +390,24 @@ class GuardrailSpec extends AnyFunSuite {
       s"stream started outside batchSink or debug knob read:\n${hits.mkString("\n")}")
   }
 
+  test("history tags in engine comments stay at or below their recorded ceiling") {
+    // round back-references (rNN, VERDICT, ADVICE) date a comment instead
+    // of stating its invariant; the ceiling only ever moves down
+    val ceiling = 389
+    val tag = "\\br[0-9]{1,2}\\b|VERDICT|ADVICE".r
+    def comment(l: String): String = {
+      val t = l.trim
+      if (t.startsWith("*") || t.startsWith("/*")) t
+      else l.indexOf("//") match { case -1 => ""; case i => l.substring(i) }
+    }
+    val perFile = engineSources.map { case (f, lines) =>
+      f -> lines.map(l => tag.findAllIn(comment(l)).size).sum
+    }.filter(_._2 > 0)
+    val n = perFile.map(_._2).sum
+    assert(n <= ceiling, s"$n history tags in engine comments (ceiling $ceiling):\n" +
+      perFile.sortBy(-_._2).map { case (f, c) => s"$f: $c" }.mkString("\n"))
+  }
+
   // ── gram-hash collision canary (r12, VERDICT r11 #1) ─────────────────
   // Six oracle-✓ queries group/count 64-bit `gram_hashes` keys while their
   // DuckDB oracles group gram STRINGS, so their oracle pass is

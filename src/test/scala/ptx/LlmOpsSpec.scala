@@ -485,6 +485,27 @@ class LlmOpsSpec extends AnyFunSuite {
     ptx.Caching.releaseAll()
   }
 
+  test("dq_drift_report rows equal the join on source of the dq_drift_psi, dq_drift_ks and dq_drift_ttest rows") {
+    def bySource(name: String) =
+      q(name, TestSpark.SF).collect().map(r => r.getString(0) -> r).toMap
+    val (psi, ks, tt) =
+      (bySource("dq_drift_psi"), bySource("dq_drift_ks"), bySource("dq_drift_ttest"))
+    val report = bySource("dq_drift_report")
+    ptx.Caching.releaseAll()
+    assert(Seq(psi, ks, tt).forall(_.keySet == report.keySet),
+      s"source sets differ: report ${report.keySet}")
+    // non-vacuous: several sources, and the t column actually scores
+    assert(report.size >= 2, s"only ${report.size} source(s)")
+    assert(report.values.exists(!_.isNullAt(6)), "no source scored a t")
+    report.foreach { case (src, r) =>
+      val (p, k, t) = (psi(src), ks(src), tt(src))
+      assert(Seq(k.get(1), t.get(1)).forall(_ == p.get(1)), s"$src n_docs")
+      // (n_docs, psi_e6, drifted_psi, ks_e6, drifted_ks, t_stat, significant)
+      val parts = Seq(p.get(1), p.get(2), p.get(3), k.get(2), k.get(3), t.get(3), t.get(4))
+      assert(r.toSeq.tail == parts, s"$src: report ${r.toSeq.tail} != parts $parts")
+    }
+  }
+
   test("llm_dedup_cluster_sizes: n_docs sums to the corpus, sizes consistent with the label frame (r14)") {
     // the histogram's conservation law — every doc is in exactly one row
     // class (a ≥2 cluster or the singleton row) — must hold on ANY

@@ -26,48 +26,11 @@ object AdmissionProfile {
       val base = docs.filter(col("doc_id") % 10 =!= 0)
       val shard = docs.filter(col("doc_id") % 10 === 0)
       def t[A](name: String)(f: => A): A = Probe.timed(s"[adm] $name")(f)
-      val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(js.jobId, System.nanoTime())
-        override def onJobEnd(
-            je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = starts.remove(je.jobId)
-          if (t0 != 0L) jobLog.add(
-            f"[job] ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        }
-      }
-      // the listener bus delivers JobEnd asynchronously: the action's
-      // JobWaiter can return while the last events are still queued, and an
-      // immediate remove+drain would truncate the committed trace. Drain
-      // DETERMINISTICALLY: poll until the log has been stable for 500 ms,
-      // bounded at 10 s — a fixed sleep silently truncates on a loaded
-      // machine.
-      def drainJobLog(): Unit = {
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        var last = -1
-        var stableSince = System.nanoTime()
-        while (System.nanoTime() < deadline &&
-          (jobLog.size != last ||
-            System.nanoTime() - stableSince < 500L * 1000 * 1000)) {
-          if (jobLog.size != last) { last = jobLog.size; stableSince = System.nanoTime() }
-          Thread.sleep(50)
-        }
-        if (System.nanoTime() >= deadline)
-          println("[job] WARNING: drain hit the 10 s bound; trace may be truncated")
-      }
       /** `t(name)(body)`, then the per-job trace of the jobs `body` ran. */
-      def traced(name: String)(body: => Unit): Unit = {
-        jobLog.clear()
-        spark.sparkContext.addSparkListener(listener)
-        try t(name)(body) finally {
-          drainJobLog()
-          spark.sparkContext.removeSparkListener(listener)
+      def traced(name: String)(body: => Unit): Unit =
+        Metrics.during(spark)(t(name)(body))._2.jobs.foreach { j =>
+          println(f"[job] ${j.id}%4d ${j.wallMs / 1e3}%.3f s")
         }
-        jobLog.forEach(println(_))
-      }
       // one untimed full pass absorbs codegen/classload
       val warmIdx = tmpDir("adm-warm")
       ptx.sources.DedupIndex.write(base, warmIdx)

@@ -1,9 +1,6 @@
 package ptx.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
 
 /** The measurement harness for registered queries, plus the session and
   * timing helpers every `ptx.tools` main shares.
@@ -15,12 +12,14 @@ import org.apache.spark.sql.execution.SQLExecution
   * Per query it runs graft.Bench's loop — one untimed warm run, a blocking
   * `releaseAll`, a GC tick, then three timed full-materialization runs
   * (`toRdd.count`, every output column evaluated) with `releaseAll` after
-  * each — and prints one line: every run time, the median and the minimum;
-  * the last run's Catalyst phase times; the jobs, stages, tasks and summed
-  * task time that run scheduled (frame construction included); and the
-  * exchanges of its own execution, matched by plan identity; and the rows
-  * of its largest broadcast build (`maxBroadcastRows`), so a fact table
-  * under a broadcast shows without the plan.
+  * each — and prints one line, `[probe] ` and a JSON object: `key`, every
+  * run time (`runs`), `med` and `min`; the last run's Catalyst phase times
+  * (`analysis_ms`, `optimization_ms`, `physical_ms`); the [[Metrics.during]]
+  * record of that run, frame construction included (`jobs`, `stages`,
+  * `tasks`, `task_run_ms`, `shuffle_write_bytes`, `shuffle_read_bytes`);
+  * its plan's [[Metrics.shape]] (`exchanges`, `broadcasts`, `scans`); and
+  * the rows of its largest broadcast build (`max_broadcast_rows`), so a fact
+  * table under a broadcast shows without the plan.
   * `--explain` adds the formatted final plan and the top planner rules by
   * time.
   *
@@ -85,19 +84,6 @@ object Probe {
     r
   }
 
-  private class Counters extends SparkListener {
-    val jobs, stages, tasks = new AtomicInteger
-    val taskMs = new AtomicLong
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      stages.incrementAndGet()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
-    }
-    def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0) }
-  }
-
   def main(args: Array[String]): Unit = {
     val explain = args.contains("--explain")
     val names = args.filterNot(_ == "--explain").toSeq match {
@@ -105,43 +91,32 @@ object Probe {
       case given => given
     }
     val spark = session()
-    val counters = new Counters
-    spark.sparkContext.addSparkListener(counters)
-    val listener = Metrics.install(spark)
-    // Each run is its own SQL execution, so the metrics listener sees it.
-    // The counters share the listener bus's queue with the execution
-    // listener, and that queue delivers in order: once a run's own record
-    // has arrived, every job, stage and task event of that run has too.
-    def run(df: DataFrame): Long =
-      SQLExecution.withNewExecutionId(df.queryExecution, Some("probe"))(materialize(df))
-    try run(graft.SparkEntry.entry(spark)) catch { case _: Throwable => () }
+    try materialize(graft.SparkEntry.entry(spark)) catch { case _: Throwable => () }
     names.foreach { name =>
       try {
         val fn = ptx.QueryRegistry.all(name)
-        listener.clear()
-        try run(fn(spark, sfDir)) catch { case _: Throwable => () } // warm
+        try materialize(fn(spark, sfDir)) catch { case _: Throwable => () } // warm
         ptx.Caching.releaseAll()
         System.gc()
         Thread.sleep(250)
         var last: DataFrame = null
-        val times = (1 to 3).map { i =>
-          if (i == 3) counters.reset() // the counters cover the last run only
-          val s = seconds { last = fn(spark, sfDir); run(last) }
+        val runs = (1 to 3).map { _ =>
+          val run = Metrics.during(spark)(seconds { last = fn(spark, sfDir); materialize(last) })
           ptx.Caching.releaseAll()
-          listener.recordOf(last) // its events are all delivered past this
-          s
+          run
         }
+        val times = runs.map(_._1)
         val sorted = times.sorted
-        val exchanges = listener.recordOf(last).map(_.numExchanges).getOrElse(-1)
         val tracker = last.queryExecution.tracker
-        val phases = Seq("analysis", "optimization", "planning").map { p =>
-          s"$p=${tracker.phases.get(p).map(_.durationMs).getOrElse(0L)}ms"
-        }.mkString(" ")
-        println(f"[probe] $name%-34s runs=${times.map(t => f"$t%.3f").mkString(",")} " +
-          f"med=${sorted(1)}%.3f min=${sorted.head}%.3f $phases " +
-          f"jobs=${counters.jobs.get} stages=${counters.stages.get} " +
-          f"tasks=${counters.tasks.get} taskTime=${counters.taskMs.get / 1000.0}%.2fs " +
-          s"exchanges=$exchanges maxBroadcastRows=${Metrics.maxBroadcastRows(last)}")
+        val phases = Seq("analysis" -> "analysis_ms", "optimization" -> "optimization_ms",
+          "planning" -> "physical_ms").map { case (p, field) =>
+          field -> tracker.phases.get(p).map(_.durationMs).getOrElse(0L)
+        }
+        val shape = Metrics.shape(last)
+        println("[probe] " + json(Seq("key" -> name, "runs" -> times.map(secs), "med" -> secs(sorted(1)),
+          "min" -> secs(sorted.head)) ++ phases ++ runs.last._2.fields ++ Seq(
+          "exchanges" -> shape.exchanges, "broadcasts" -> shape.broadcasts, "scans" -> shape.scans,
+          "max_broadcast_rows" -> Metrics.maxBroadcastRows(last))))
         if (explain) {
           last.explain("formatted")
           tracker.rules.toSeq.sortBy(-_._2.totalTimeNs).take(8).foreach { case (rule, m) =>
@@ -151,9 +126,24 @@ object Probe {
         }
       } catch { case e: Throwable =>
         ptx.Caching.releaseAll()
-        println(s"[probe] $name failed: ${e.getMessage}")
+        println("[probe] " + json(Seq("key" -> name, "failed" -> String.valueOf(e.getMessage))))
       }
     }
     spark.stop()
   }
+
+  private def secs(t: Double): BigDecimal = BigDecimal(t).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+
+  /** One JSON object of numbers, number lists and strings. */
+  private def json(fields: Seq[(String, Any)]): String = fields.map { case (k, v) =>
+    val value = v match {
+      case s: String => "\"" + s.flatMap {
+        case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      } + "\""
+      case xs: Seq[_] => xs.mkString("[", ",", "]")
+      case x => x.toString
+    }
+    s"\"$k\":$value"
+  }.mkString("{", ",", "}")
 }

@@ -14,12 +14,9 @@ import java.nio.file.Files
   */
 class GuardrailSpec extends AnyFunSuite {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("ptx_guardrail").toFile.getAbsolutePath
-
   test("dq_profile returns a NULL mean for an all-NULL column instead of aborting") {
     val s = TestSpark.spark
-    val dir = tmpDir()
+    val dir = TestSpark.tmpDir("ptx_guardrail")
     s.sql(
       """SELECT id AS l_orderkey, id AS l_partkey, id AS l_suppkey,
         |  cast(id as int) AS l_linenumber,
@@ -41,7 +38,7 @@ class GuardrailSpec extends AnyFunSuite {
 
   test("q22 yields no rows when no customer has a positive balance, instead of aborting") {
     val s = TestSpark.spark
-    val dir = tmpDir()
+    val dir = TestSpark.tmpDir("ptx_guardrail")
     s.sql(
       """SELECT id AS c_custkey, concat('c', id) AS c_name,
         |  cast(id % 5 as int) AS c_nationkey,
@@ -67,7 +64,7 @@ class GuardrailSpec extends AnyFunSuite {
     // with an empty frame so the batch's pair/accepted writes stay
     // well-formed empty parquet instead of crashing the query
     val spark = TestSpark.spark
-    val dir = tmpDir()
+    val dir = TestSpark.tmpDir("ptx_guardrail")
     val docs = Tables.documents(spark, TestSpark.SF).select("doc_id", "text")
     ptx.sources.DedupIndex.write(docs, dir)
     val empty = docs.filter(lit(false))
@@ -130,7 +127,7 @@ class GuardrailSpec extends AnyFunSuite {
 
     // A: both rewrites complete, witness dropped, crash before any
     // rename → promote both, clear the witness
-    val a = tmpDir()
+    val a = TestSpark.tmpDir("ptx_guardrail")
     mk(a, "cells", 1); mk(a, "cells.next", 2)
     mk(a, "centroids", 1); mk(a, "centroids.next", 2)
     witness(a)
@@ -144,7 +141,7 @@ class GuardrailSpec extends AnyFunSuite {
     // the crash hit before centroids.next (no witness) → discard the
     // cells rewrite too; promoting it alone would serve new-k cell
     // labels against old-k centroid geometry
-    val a2 = tmpDir()
+    val a2 = TestSpark.tmpDir("ptx_guardrail")
     mk(a2, "cells", 1); mk(a2, "cells.next", 2)
     mk(a2, "centroids", 1)
     ptx.sources.VectorIndex.reshardRecover(spark, a2)
@@ -153,7 +150,7 @@ class GuardrailSpec extends AnyFunSuite {
 
     // A3: same crash window one write later — centroids.next partial
     // (no _SUCCESS), still no witness → discard BOTH .next halves
-    val a3 = tmpDir()
+    val a3 = TestSpark.tmpDir("ptx_guardrail")
     mk(a3, "cells", 1); mk(a3, "cells.next", 2)
     mk(a3, "centroids", 1); mk(a3, "centroids.next", 2, success = false)
     ptx.sources.VectorIndex.reshardRecover(spark, a3)
@@ -163,7 +160,7 @@ class GuardrailSpec extends AnyFunSuite {
     // B: crash between the two renames of the cells half (cur already
     // moved to .old, .next ready; centroids rewrite complete, witness
     // present — the only way a mid-swap state arises) → finish both
-    val b = tmpDir()
+    val b = TestSpark.tmpDir("ptx_guardrail")
     mk(b, "cells.old", 1); mk(b, "cells.next", 2)
     mk(b, "centroids", 1); mk(b, "centroids.next", 2)
     witness(b)
@@ -174,7 +171,7 @@ class GuardrailSpec extends AnyFunSuite {
 
     // C: the rewrite itself died mid-write (no _SUCCESS, no witness) →
     // discard the partial, the live index stays
-    val c = tmpDir()
+    val c = TestSpark.tmpDir("ptx_guardrail")
     mk(c, "cells", 1); mk(c, "cells.next", 2, success = false)
     mk(c, "centroids", 1)
     ptx.sources.VectorIndex.reshardRecover(spark, c)
@@ -182,7 +179,7 @@ class GuardrailSpec extends AnyFunSuite {
 
     // D: crash after the cells swap finished, centroids swap pending →
     // roll the centroids half forward, drop the stranded cells.old
-    val d = tmpDir()
+    val d = TestSpark.tmpDir("ptx_guardrail")
     mk(d, "cells", 2); mk(d, "cells.old", 1)
     mk(d, "centroids", 1); mk(d, "centroids.next", 2)
     witness(d)
@@ -193,7 +190,7 @@ class GuardrailSpec extends AnyFunSuite {
 
     // D2: only the final .old cleanup (and witness delete) died → drop
     // both, keep the new index
-    val d2 = tmpDir()
+    val d2 = TestSpark.tmpDir("ptx_guardrail")
     mk(d2, "cells", 2); mk(d2, "cells.old", 1); mk(d2, "centroids", 2)
     witness(d2)
     ptx.sources.VectorIndex.reshardRecover(spark, d2)
@@ -202,7 +199,7 @@ class GuardrailSpec extends AnyFunSuite {
 
     // E: .old with no live dir and no usable .next (legacy strand) →
     // roll back
-    val e = tmpDir()
+    val e = TestSpark.tmpDir("ptx_guardrail")
     mk(e, "cells.old", 1); mk(e, "centroids", 1)
     ptx.sources.VectorIndex.reshardRecover(spark, e)
     assert(tagOf(e, "cells") == 1 && gone(e, "cells.old"))
@@ -219,7 +216,7 @@ class GuardrailSpec extends AnyFunSuite {
     // embedding grain
     val spark = TestSpark.spark
     val e = Tables.embeddings(spark, TestSpark.SF)
-    val dir = tmpDir(); val out = tmpDir()
+    val dir = TestSpark.tmpDir("ptx_guardrail"); val out = TestSpark.tmpDir("ptx_guardrail")
     ptx.sources.VectorIndex.write(e, s"$dir/centroids")
     ptx.sources.VectorIndex.assign(
         e.select("vec_id", "embedding"),
@@ -341,17 +338,33 @@ class GuardrailSpec extends AnyFunSuite {
     assert(s.conf.get(Parts) == "9", "a closed scope restored a stale base")
   }
 
+  /** Every `.scala` file under `root` with its lines. */
+  private def sources(root: String): Seq[(java.nio.file.Path, IndexedSeq[String])] = {
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, s"no sources under $root")
+    files.map(f => f -> Files.readAllLines(f).asScala.toIndexedSeq)
+  }
+
   /** Every engine source under `src/main/scala/ptx` with its lines. The
     * ptx/tools mains build and own their sessions and streams, so the
     * source scans below exempt them. */
-  private lazy val engineSources: Seq[(java.nio.file.Path, IndexedSeq[String])] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/ptx")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.startsWith(root.resolve("tools"))).toSeq
-    assert(files.exists(_.endsWith("Jobs.scala")), s"no sources under $root")
-    files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
+  private lazy val engineSources = sources("src/main/scala/ptx")
+    .filterNot(_._1.startsWith("src/main/scala/ptx/tools"))
+
+  test("Spark and query-execution listeners are declared and registered only in ptx.tools.Metrics") {
+    // one window drains the bus and reads plans; a second listener would
+    // bring back its own wait for late events
+    val listens = Seq("""\b(extends|new|with)\s+[\w.]*Listener\b""", """addSparkListener\(""",
+      """listenerManager\.register\(""", """\.addListener\(""").mkString("|").r
+    val scanned = sources("src/main/scala/ptx") ++ sources("src/test/scala")
+    val hits = scanned.filterNot(_._1.endsWith("ptx/tools/Metrics.scala")).flatMap { case (f, lines) =>
+      lines.zipWithIndex.collect {
+        case (l, i) if listens.findFirstIn(l).nonEmpty => s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, s"listener outside ptx.tools.Metrics:\n${hits.mkString("\n")}")
   }
 
   test("session conf is written only through Jobs.withConf (and Tables' nanosAsLong)") {

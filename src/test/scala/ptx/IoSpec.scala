@@ -1,6 +1,5 @@
 package ptx
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import ptx.sources.Io
@@ -11,13 +10,11 @@ import ptx.sources.Io
   */
 class IoSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toString
 
   private lazy val events = Tables.events(spark, TestSpark.SF)
 
   test("csv round-trip preserves rows under an explicit schema") {
-    val dir = tmp("ptx-csv")
+    val dir = TestSpark.tmpDir("ptx-csv")
     val df = events.select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     Io.writeCsv(df, dir)
     val back = Io.readCsv(spark, dir, df.schema)
@@ -27,7 +24,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("orc round-trip preserves rows and pushes filters to the scan (r6)") {
-    val dir = tmp("ptx-orc")
+    val dir = TestSpark.tmpDir("ptx-orc")
     val df = events.select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     Io.writeOrc(df, dir)
     val back = Io.readOrc(spark, dir, df.schema)
@@ -48,7 +45,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("json-lines round-trip preserves rows under an explicit schema") {
-    val dir = tmp("ptx-json")
+    val dir = TestSpark.tmpDir("ptx-json")
     val df = events.select(col("event_id"), col("event_type"), col("props"))
     Io.writeJsonLines(df, dir)
     val back = Io.readJsonLines(spark, dir, df.schema)
@@ -56,7 +53,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("partitioned layout: reads prune partitions from the path") {
-    val dir = tmp("ptx-part")
+    val dir = TestSpark.tmpDir("ptx-part")
     Io.writePartitioned(events.withColumn("day", to_date(col("ts"))), dir, Seq("day"))
     val pruned = spark.read.parquet(dir).filter(col("day") === "2024-01-02")
     val plan = pruned.queryExecution.executedPlan.toString
@@ -70,7 +67,7 @@ class IoSpec extends AnyFunSuite {
     // compact the documents fixture into a hive lang=... layout, then
     // prove pruning on the PHYSICAL plan — actual partitionFilters on the
     // scan node and the post-pruning file listing — not a string match.
-    val dir = tmp("ptx-part-docs")
+    val dir = TestSpark.tmpDir("ptx-part-docs")
     val docs = spark.read.parquet(s"${TestSpark.SF}/documents.parquet")
     Io.compact(spark, s"${TestSpark.SF}/documents.parquet", dir,
       targetMB = 1, sortCol = Some("doc_id"), partitionCols = Seq("lang"))
@@ -97,7 +94,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("persisted IVF index: probe against parquet index equals the inline query (r5)") {
-    val dir = tmp("ptx-ivf")
+    val dir = TestSpark.tmpDir("ptx-ivf")
     val e = Tables.embeddings(spark, TestSpark.SF)
     ptx.sources.VectorIndex.write(e, dir)
     // index artifact is broadcast-sized: one float32 vector per cell
@@ -126,7 +123,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("persisted BPE tokenizer: every artifact read equals the inline learner bit-for-bit (r17)") {
-    val dir = tmp("ptx-bpemodel")
+    val dir = TestSpark.tmpDir("ptx-bpemodel")
     val docs = Tables.documents(spark, TestSpark.SF)
     ptx.sources.BpeModel.write(docs, dir, k = 8)
     // merges half == inline learn (rank order)
@@ -178,7 +175,7 @@ class IoSpec extends AnyFunSuite {
     // the fixture dirs are regenerated across driver rounds under the
     // SAME path, so keying on the path alone would silently serve last
     // round's tokenizer
-    val dataDir = tmp("ptx-bpe-stale")
+    val dataDir = TestSpark.tmpDir("ptx-bpe-stale")
     def writeCorpus(rows: Seq[(Long, String)]): Unit =
       spark.createDataFrame(rows).toDF("doc_id", "text")
         .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
@@ -208,7 +205,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("persisted dedup index: incremental shard probes equal the inline full recompute (r11)") {
-    val dir = tmp("ptx-dedupidx")
+    val dir = TestSpark.tmpDir("ptx-dedupidx")
     val docs = Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val shard1 = docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 10 =!= 5)
@@ -250,7 +247,7 @@ class IoSpec extends AnyFunSuite {
     assert(rows2.toSet == want2, "retried probe diverged from the original")
     // compaction: the single-partition copy answers probes identically
     // and actually collapses the per-batch partitions
-    val cdir = tmp("ptx-dedupidx-compact")
+    val cdir = TestSpark.tmpDir("ptx-dedupidx-compact")
     ptx.sources.DedupIndex.compact(spark, dir, cdir)
     val probeC = ptx.sources.DedupIndex.probe(spark, cdir, shard2)
       .collect().map(key).toSet
@@ -278,11 +275,11 @@ class IoSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val shard = docs.filter(col("doc_id") % 5 === 0)
-    val dir = tmp("ptx-didx-src")
+    val dir = TestSpark.tmpDir("ptx-didx-src")
     ptx.sources.DedupIndex.write(base, dir)
-    val plainDir = tmp("ptx-didx-plain")
+    val plainDir = TestSpark.tmpDir("ptx-didx-plain")
     ptx.sources.DedupIndex.compact(spark, dir, plainDir)
-    val bDir = tmp("ptx-didx-bucketed")
+    val bDir = TestSpark.tmpDir("ptx-didx-bucketed")
     ptx.sources.DedupIndex.compactBucketed(spark, dir, bDir,
       "dedup_bands_bucketed", buckets = 4)
     def key(r: org.apache.spark.sql.Row) =
@@ -364,9 +361,9 @@ class IoSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val shard = docs.filter(col("doc_id") % 5 === 0)
-    val dir = tmp("ptx-cidx-src")
+    val dir = TestSpark.tmpDir("ptx-cidx-src")
     ptx.sources.ContainIndex.write(base, dir, t = 0.8)
-    val cdir = tmp("ptx-cidx-compact")
+    val cdir = TestSpark.tmpDir("ptx-cidx-compact")
     ptx.sources.ContainIndex.compact(spark, dir, cdir)
     // structural assertions need a concrete (non-adaptive) plan
     Jobs.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
@@ -450,8 +447,8 @@ class IoSpec extends AnyFunSuite {
     val shard1 = docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 10 =!= 5)
       .select("doc_id", "text")
     val shard2 = docs.filter(col("doc_id") % 10 === 5).select("doc_id", "text")
-    val dirA = tmp("ptx-cidx-appendsh")
-    val dirB = tmp("ptx-cidx-appendart")
+    val dirA = TestSpark.tmpDir("ptx-cidx-appendsh")
+    val dirB = TestSpark.tmpDir("ptx-cidx-appendart")
     ptx.sources.ContainIndex.write(base, dirA, t = 0.8)
     ptx.sources.ContainIndex.write(base, dirB, t = 0.8)
     // path A: the from-text append
@@ -486,7 +483,7 @@ class IoSpec extends AnyFunSuite {
     // a probe at t > buildT cannot reuse its (smaller) prefixes for the
     // append — appendArtifacts must fall back to the from-text path and
     // still land buildT-sized prefixes
-    val dirC = tmp("ptx-cidx-appendstrict")
+    val dirC = TestSpark.tmpDir("ptx-cidx-appendstrict")
     ptx.sources.ContainIndex.write(base, dirC, t = 0.8)
     val sh1c = ptx.Caching.pin(
       ptx.functions.TextShingles.shingles(shard1)
@@ -504,8 +501,8 @@ class IoSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val shard = docs.filter(col("doc_id") % 5 === 0).limit(5)
-    val lo = tmp("ptx-cidx-meta-lo"); val hi = tmp("ptx-cidx-meta-hi")
-    val serving = tmp("ptx-cidx-meta-serving")
+    val lo = TestSpark.tmpDir("ptx-cidx-meta-lo"); val hi = TestSpark.tmpDir("ptx-cidx-meta-hi")
+    val serving = TestSpark.tmpDir("ptx-cidx-meta-serving")
     ptx.sources.ContainIndex.write(base, lo, t = 0.5)
     ptx.sources.ContainIndex.compact(spark, lo, serving)
     // populate the per-JVM meta cache for `serving` with buildT = 0.5
@@ -529,7 +526,7 @@ class IoSpec extends AnyFunSuite {
     val evalA = docs.filter(col("doc_id") % 10 === 5)
     val evalB = docs.filter(col("doc_id") % 10 === 7)
     val train = docs.filter(col("doc_id") % 10 === 0)
-    val dir = tmp("ptx-deconidx")
+    val dir = TestSpark.tmpDir("ptx-deconidx")
     ptx.sources.DeconIndex.write(evalA, dir)
     // the persisted sketch IS the in-memory build, byte for byte (Bloom
     // bits are an order-independent OR of per-item bits)
@@ -544,7 +541,7 @@ class IoSpec extends AnyFunSuite {
     assert(verdicts(persisted) == verdicts(inMem))
     // append == rebuild over the union corpus, byte-identical
     ptx.sources.DeconIndex.append(evalB, dir)
-    val unionDir = tmp("ptx-deconidx-union")
+    val unionDir = TestSpark.tmpDir("ptx-deconidx-union")
     ptx.sources.DeconIndex.write(evalA.unionByName(evalB), unionDir)
     val appended = ptx.sources.DeconIndex.read(spark, dir)
     assert(java.util.Arrays.equals(appended,
@@ -565,7 +562,7 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("persisted containment index: incremental probes equal the inline full recompute (r13)") {
-    val dir = tmp("ptx-containidx")
+    val dir = TestSpark.tmpDir("ptx-containidx")
     val docs = Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val shard1 = docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 10 =!= 5)
@@ -627,7 +624,7 @@ class IoSpec extends AnyFunSuite {
     assert(probeMb == want2, "micro-batch probe diverged")
     // compaction: the merged single-snapshot copy answers identically and
     // collapses the per-batch partitions (df parts additionally SUM-merge)
-    val cdir = tmp("ptx-containidx-compact")
+    val cdir = TestSpark.tmpDir("ptx-containidx-compact")
     ptx.sources.ContainIndex.compact(spark, dir, cdir)
     val probeC = ptx.sources.ContainIndex
       .probe(spark, cdir, shard2, microBatch = true)
@@ -687,8 +684,8 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("compact: many small files collapse to few, rows survive, ranges disjoint") {
-    val src = Files.createTempDirectory("ptx-compact-src").toString
-    val dst = Files.createTempDirectory("ptx-compact-dst").toString + "/out"
+    val src = TestSpark.tmpDir("ptx-compact-src")
+    val dst = TestSpark.tmpDir("ptx-compact-dst") + "/out"
     // simulate a streaming sink's droppings: 32 tiny files
     events.repartition(32).write.mode("overwrite").parquet(src)
     def parquetFiles(p: String): Seq[java.io.File] =

@@ -1,7 +1,10 @@
 package ptx
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import ptx.tools.Metrics
+import ptx.tools.Metrics.Shape
 
 /** Per-group value checks: golden rows (cross-checked against DuckDB on the
   * binding data), plan-shape assertions (pushdown/pruning/broadcast), and
@@ -106,49 +109,56 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("metrics listener records exchanges and scans for a query run") {
-    val l = ptx.tools.Metrics.install(spark)
-    try {
-      q("agg_pricing_summary").collect()
-      // listener delivery is async; poll briefly
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (l.snapshot.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      val m = l.snapshot
-      assert(m.nonEmpty, "no query metrics recorded")
-      assert(m.exists(x => x.numScans >= 1), s"no scan recorded: $m")
-    } finally spark.listenerManager.unregister(l)
+    // the l_orderkey spread, the flag/status aggregate and the output sort
+    // over one lineitem scan
+    assert(Metrics.shape(hermeticRun("agg_pricing_summary")) ==
+      Shape(exchanges = 3, broadcasts = 0, scans = 1))
+    // a pinned aggregate read twice, whose plan renders its own adaptive
+    // plan in the middle of the query's: its (custkey, status) shuffle and
+    // orders scan count once; the merge join shuffles both sides on custkey
+    // (the pin is partitioned on both keys), one customer scan; the scalar
+    // subquery over the pin adds its single-partition shuffle
+    val joined = hermetic { s =>
+      val spent = Caching.pin(Tables.orders(s, TestSpark.SF)
+        .groupBy("o_custkey", "o_orderstatus").agg(sum("o_totalprice").as("spent")))
+      val cust = Tables.customer(s, TestSpark.SF)
+        .where(col("c_custkey") <= spent.agg(max("o_custkey")).scalar())
+      spent.join(cust.hint("merge"), col("o_custkey") === col("c_custkey"))
+    }
+    try assert(Metrics.shape(joined) == Shape(exchanges = 4, broadcasts = 0, scans = 2))
+    finally ptx.Caching.releaseAll()
   }
 
-  /** Shared plan-budget assertion: measure runtime exchanges for one
-    * query run, release its pinned caches, and bound the count. */
-  private def budget(name: String, bound: Int): Unit = {
-    val n = measuredExchanges(name)
-    ptx.Caching.releaseAll()
-    assert(n <= bound, s"$name spent $n exchanges (budget $bound)")
-  }
-
-  private def measuredExchanges(name: String): Int = {
-    // Measure the query's OWN plan shape, not the suite context. The
-    // whole test run shares one session (TestSpark), and earlier suites
-    // leave session state behind — leaked pins the CacheManager
-    // substitutes into matching subtrees, and session-conf residue —
-    // that shifts executed-exchange counts (a full-suite run can read
-    // q11 at 11 exchanges vs its true 5). A fresh newSession() (own
-    // SQLConf/catalog/listeners, shared context) plus a cache clear makes
-    // the measurement hermetic: isolation and full-suite runs count the
-    // same plan.
+  /** The frame `build` makes on a fresh session over a cleared cache,
+    * collected. The whole test run shares one session (TestSpark), and
+    * earlier suites leave pins the CacheManager substitutes into matching
+    * subtrees, and session-conf residue, that shift a plan. A
+    * `newSession()` (own SQLConf and catalog, shared context) plus a cache
+    * clear measures the query's own plan, and builds its own pins, alone
+    * or in a full run. */
+  private def hermetic(build: SparkSession => DataFrame): DataFrame = {
     ptx.Caching.releaseAll()
     spark.catalog.clearCache()
-    val s = spark.newSession()
-    val l = ptx.tools.Metrics.install(s)
-    try {
-      l.clear()
-      val df = ptx.QueryRegistry.all(name)(s, TestSpark.SF)
-      df.collect()
-      // attributed by plan identity: a lagging event from the previous
-      // budget query must never be read as this query's count
-      l.recordOf(df).map(_.numExchanges)
-        .getOrElse(fail(s"no metrics snapshot for $name's own execution"))
-    } finally s.listenerManager.unregister(l)
+    val df = build(spark.newSession())
+    df.collect()
+    df
+  }
+
+  private def hermeticRun(name: String): DataFrame =
+    hermetic(QueryRegistry.all(name)(_, TestSpark.SF))
+
+  /** Shuffle plus broadcast exchanges of the named query's final plan, by
+    * [[Metrics.shape]], pinned caches included. */
+  private def measuredExchanges(name: String): Int = {
+    val shape = Metrics.shape(hermeticRun(name))
+    ptx.Caching.releaseAll()
+    shape.exchanges + shape.broadcasts
+  }
+
+  /** Shared plan-budget assertion. */
+  private def budget(name: String, bound: Int): Unit = {
+    val n = measuredExchanges(name)
+    assert(n <= bound, s"$name spent $n exchanges (budget $bound)")
   }
 
   test("star joins stream lineitem: no broadcast holds a sixth of its rows") {
@@ -157,11 +167,7 @@ class OperatorSpec extends AnyFunSuite {
     // bound scales with the fixture: 100k rows at sf0.1.
     val bound = Tables.lineitem(spark, TestSpark.SF).count() / 6
     Seq("join_star_q5", "topk_global", "q4_priority_count").foreach { name =>
-      ptx.Caching.releaseAll()
-      spark.catalog.clearCache()
-      val df = QueryRegistry.all(name)(spark.newSession(), TestSpark.SF)
-      df.collect()
-      val rows = ptx.tools.Metrics.maxBroadcastRows(df)
+      val rows = Metrics.maxBroadcastRows(hermeticRun(name))
       assert(rows <= bound, s"$name broadcasts $rows rows (bound $bound)")
     }
   }
@@ -177,12 +183,11 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("plan budget: dedup family shuffle structure holds") {
-    // runtime exchange counts (max over the query's executions, incl. the
-    // pinned-cache fill) — these budgets fail if someone reintroduces a
-    // distinct() over the exploded shingle stream or breaks the
-    // broadcast/partitioning structure. Static sparkPlan counting is not
-    // usable here: exchanges are inserted by EnsureRequirements and the
-    // pinned-cache subtrees are opaque.
+    // exchanges of the final plan, the pinned-cache fill's included —
+    // these budgets fail if someone reintroduces a distinct() over the
+    // exploded shingle stream or breaks the broadcast/partitioning
+    // structure. Static sparkPlan counting is not usable here: exchanges
+    // are inserted by EnsureRequirements and adaptive planning.
     // bounds = max observed across sessions (2-5) + headroom; the old
     // distinct()-based shingle formulation measured well above these
     budget("llm_dedup_near", 6)
@@ -243,10 +248,11 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("plan budget: Q11/Q20/bigram-LM hold their shuffle structure (r6)") {
-    // one partkey agg + one 1-row threshold agg off the pinned apex +
-    // output sort; dims all broadcast — NO second lineitem pass for the
-    // scalar subquery
-    budget("q11_part_value_conc", 5)
+    // one lineitem pass for the scalar subquery and the filter: the pinned
+    // per-part frame holds the l_partkey spread and three dim broadcasts
+    // (ASIA region → nation → supplier → lineitem); above it, the 1-row
+    // threshold agg, its broadcast, and the output sort
+    budget("q11_part_value_conc", 7)
     // one (supp,part) agg + supplier-grain re-agg + dim join + sort, PLUS
     // four counted BroadcastExchanges (part/nation/region/supplier dims);
     // measured 8 — the two period sums come from the SAME grouped pass (a
@@ -278,10 +284,14 @@ class OperatorSpec extends AnyFunSuite {
     // counts agg + its broadcast + output sort (broadcasts are counted) —
     // the fact is scanned once, nothing wide carries it
     budget("dq_completeness", 7)
-    // the one-flag-pass formulation: quality scan + text-key window +
-    // broadcast contamination join + block-scan budget + funnel agg —
-    // the per-stage-union formulation measured 24
-    budget("llm_curation_pipeline", 7)
+    // the one-flag-pass formulation. The pinned flag frame: text-key
+    // window, doc_id shingle spread, eval-shingle and contaminated-id
+    // broadcasts. Above it: block totals and the intra-block window (both
+    // on blk), the block-prefix window (single partition) and its
+    // broadcast, the budget and funnel aggs (single partition), the budget
+    // row's broadcast and the report sort. The per-stage-union formulation
+    // measured 24
+    budget("llm_curation_pipeline", 12)
   }
 
   test("plan budget: r9 additions hold their shuffle structure") {
@@ -303,14 +313,19 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("plan budget: r9 batch-2 additions hold their shuffle structure") {
-    // one pinned per-source agg; the total and entropy reductions both run
-    // on the #sources-sized frame with their 1-row results broadcast —
-    // the corpus is scanned exactly once
-    budget("llm_mix_entropy", 2)
+    // one pinned per-source agg (its source shuffle); the total and entropy
+    // reductions both run on the #sources-sized frame: the total twice
+    // (once per branch) and the entropy once, each a single-partition agg
+    // with its 1-row result broadcast, plus the report sort — the corpus
+    // is scanned exactly once
+    budget("llm_mix_entropy", 8)
     // one pinned (source,bucket) cell agg feeds every downstream branch;
-    // the grid, totals, and PSI sum all run on the sources×buckets frame
-    // (broadcast-joined) — a second corpus scan would double this
-    budget("dq_drift_psi", 4)
+    // the per-source totals (source), the bucket grid (b, built twice: for
+    // its broadcast and for the grid totals), the grid totals (single
+    // partition) and the report sort all run on the sources×buckets frame,
+    // with the grid, the cells and the totals broadcast — a second corpus
+    // scan would add its own cell agg
+    budget("dq_drift_psi", 9)
     // gram stream is scan-local (one HOF + explode, no shuffle to BUILD
     // it); every exchange after keys on gram hash / doc / (doc,pos) —
     // linear in corpus tokens, never a pair join. df skew cannot widen
@@ -331,11 +346,12 @@ class OperatorSpec extends AnyFunSuite {
     // gram stream scan-local; the two-phase distinct agg (expand) is the
     // only shuffle family + output sort
     budget("llm_ngram_diversity", 3)
-    // vocab agg + model fold feed the pinned scored frame; per-lang
-    // exact-tertile agg + broadcast threshold join + bucket agg + sort —
-    // the corpus is scored ONCE (unpinned, twice)
-    // +1: explicit doc_id spread of the interpreted scoring lambda
-    budget("llm_ccnet_buckets", 8)
+    // the pinned scored frame: the doc_id spread of the interpreted
+    // scoring lambda, the vocab agg, the word total and the model fold
+    // (single partition each) with both broadcast; above it, the per-lang
+    // exact-tertile agg + broadcast threshold join + (lang, bucket) agg +
+    // sort — the corpus is scored ONCE (unpinned, twice)
+    budget("llm_ccnet_buckets", 10)
     // one fp-keyed window shuffle + output sort; the 16-byte digest is
     // the shuffle key — payload bytes never cross the wire
     budget("mm_dedup_payload", 2)
@@ -348,20 +364,24 @@ class OperatorSpec extends AnyFunSuite {
     budget("dq_doc_embedding_coverage", 5)
     // one vocab df agg (distinct expand) + broadcast doc total + sort
     budget("llm_stopword_candidates", 5)
-    // shares the PSI audit's pinned cell agg; the grid window + max run
-    // on sources×buckets rows with the reference and totals broadcast
-    budget("dq_drift_ks", 3)
+    // the PSI audit's plan (same driftPanel, same 9): the grid window +
+    // max run on sources×buckets rows with the grid, cells and totals
+    // broadcast
+    budget("dq_drift_ks", 9)
     // one per-source moment agg + 1-row global broadcast + sort; the
     // rest-of-corpus moments are global − source, never a second scan
     budget("dq_drift_ttest", 4)
-    // ALL THREE statistics off one pinned cell agg: the composed report
-    // measures 3 exchanges / one corpus scan where three standalone
-    // calls pay 4+3+4 and three scans — the share-the-apex payoff
-    budget("dq_drift_report", 3)
+    // ALL THREE statistics off one pinned cell agg: the panel's 9, plus
+    // the Welch side's per-source moments (source, built twice: for the
+    // rows and for the 1-row global moments), the global moments agg and
+    // its broadcast, and the broadcast join on source — 14 and one corpus
+    // scan, where three standalone calls pay 9+9+4 and three scans
+    budget("dq_drift_report", 14)
     // pure scan + output sort
     budget("fn_hash", 1)
-    // the shared PSI core on (event_type, value-bucket) cells
-    budget("pt_value_drift", 4)
+    // the shared PSI core on (event_type, value-bucket) cells: the
+    // dq_drift_psi plan, 9
+    budget("pt_value_drift", 9)
   }
 
   test("q6: all three predicates push to the lineitem scan (r6)") {

@@ -63,7 +63,7 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   test("a DATE-encoded order date normalizes onto the canonical TIMESTAMP_NTZ") {
     val s = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("ptx_dateish").toFile.getAbsolutePath
+    val dir = TestSpark.tmpDir("ptx_dateish")
     s.sql(
       """SELECT id AS o_orderkey, id AS o_custkey, 'O' AS o_orderstatus,
         |  cast(id as double) AS o_totalprice,
@@ -77,7 +77,7 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   test("a renamed events ts column fails with the fixture-drift message") {
     val s = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("ptx_notS").toFile.getAbsolutePath
+    val dir = TestSpark.tmpDir("ptx_notS")
     s.sql(
       """SELECT id AS event_id, timestamp_ntz '2024-01-01 00:00:00' AS event_time,
         |  id AS user_id, 'click' AS event_type, cast(id as double) AS value,
@@ -92,7 +92,7 @@ class TablesSchemaSpec extends AnyFunSuite {
     val s = TestSpark.spark
     // n_chars regenerated as STRING behind stable column names — the exact
     // drift shape the preflight SchemaDigest canary exists to catch
-    val dir = java.nio.file.Files.createTempDirectory("ptx_docdrift").toFile.getAbsolutePath
+    val dir = TestSpark.tmpDir("ptx_docdrift")
     s.sql(
       """SELECT id AS doc_id, 'hello world' AS text, 'en' AS lang,
         |  'web' AS source, cast(11 AS STRING) AS n_chars
@@ -115,7 +115,7 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   test("the load memo reuses an unchanged relation and re-reads a regenerated fixture (r18)") {
     val s = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("ptx_memo").toFile.getAbsolutePath
+    val dir = TestSpark.tmpDir("ptx_memo")
     def writeDocs(n: Int): Unit =
       s.sql(
         s"""SELECT id AS doc_id, 'hello world' AS text, 'en' AS lang,
@@ -138,17 +138,18 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   test("the schema memo: a new session loads with no Spark job; a re-typed file or flipped nanosAsLong re-infers") {
     val s = TestSpark.spark
-    val dir = java.nio.file.Files.createTempDirectory("ptx_schema").toFile.getAbsolutePath
+    val dir = TestSpark.tmpDir("ptx_schema")
     def writeDocs(extraType: String): Unit =
       s.sql(
         s"""SELECT id AS doc_id, 'hello world' AS text, 'en' AS lang, 'web' AS source,
            |  cast(11 AS LONG) AS n_chars, cast(id AS $extraType) AS extra
            |FROM range(3)""".stripMargin)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def jobs(body: => Any): Int = ptx.tools.Metrics.during(s)(body)._2.jobs.size
     writeDocs("INT")
     Tables.documents(s.newSession(), dir) // the first session pays inference
     val second = s.newSession()
-    assert(TestSpark.jobsDuring(s)(Tables.documents(second, dir)) == 0,
+    assert(jobs(Tables.documents(second, dir)) == 0,
       "a second session re-ran parquet schema inference")
     // regenerated under the same path → new fingerprint → new schema
     writeDocs("STRING")
@@ -156,7 +157,7 @@ class TablesSchemaSpec extends AnyFunSuite {
       "a re-typed file was loaded with its old memoized schema")
     val flipped = s.newSession()
     flipped.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    assert(TestSpark.jobsDuring(s)(Tables.documents(flipped, dir)) > 0,
+    assert(jobs(Tables.documents(flipped, dir)) > 0,
       "a session with other parquet-inference settings reused the schema memo entry")
   }
 }

@@ -1,10 +1,9 @@
 package ptx
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run, and the run's temp dirs. */
 object TestSpark {
   val SF = "/root/testdata/sf0.001"
 
@@ -14,37 +13,21 @@ object TestSpark {
       .appName("ptx-test")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("ptx-wh").toString)
+      .config("spark.sql.warehouse.dir", tmpDir("ptx-wh"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
 
-  /** Spark jobs `body` starts. Two marker jobs bracket it; the listener bus
-    * delivers in order, so every job between them has arrived once the
-    * second marker has, and a lagging job of an earlier test is never
-    * counted. */
-  def jobsDuring(s: SparkSession)(body: => Unit): Int = {
-    val sc = s.sparkContext
-    val seen = new LinkedBlockingQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.put(Option(j.properties).map(_.getProperty("spark.job.description", ""))
-          .getOrElse(""))
-    }
-    def marker(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(l)
-    try {
-      marker("jobsDuring:before"); body; marker("jobsDuring:after")
-      Iterator.continually(Option(seen.poll(10, TimeUnit.SECONDS))
-          .getOrElse(throw new AssertionError("marker job never reached the listener")))
-        .takeWhile(_ != "jobsDuring:after").dropWhile(_ != "jobsDuring:before")
-        .size - 1
-    } finally sc.removeSparkListener(l)
+  /** Every test temp dir lives under this one root, deleted with all it
+    * holds when the test JVM exits. */
+  private lazy val tmpRoot: Path = {
+    val root = Files.createTempDirectory("ptx-test")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
   }
+
+  /** A new, empty directory under the run's temp root; its absolute path. */
+  def tmpDir(prefix: String): String = Files.createTempDirectory(tmpRoot, prefix).toString
 }

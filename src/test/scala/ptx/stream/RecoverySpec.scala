@@ -1,6 +1,5 @@
 package ptx.stream
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,8 +15,8 @@ class RecoverySpec extends AnyFunSuite {
   import spark.implicits._
 
   test("streaming aggregation survives stop/restart via checkpoint") {
-    val src = Files.createTempDirectory("ptx-src").toString
-    val ckpt = Files.createTempDirectory("ptx-ckpt").toString
+    val src = TestSpark.tmpDir("ptx-src")
+    val ckpt = TestSpark.tmpDir("ptx-ckpt")
 
     def writeBatch(id: Int, rows: Seq[(Long, String, Double)]): Unit =
       rows.toDF("user_id", "event_type", "value")
@@ -57,8 +56,8 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("transformWithState hysteresis recovers the armed bit from a RocksDB checkpoint") {
-    val src = Files.createTempDirectory("ptx-hrec-src").toString
-    val ckpt = Files.createTempDirectory("ptx-hrec-ckpt").toString
+    val src = TestSpark.tmpDir("ptx-hrec-src")
+    val ckpt = TestSpark.tmpDir("ptx-hrec-ckpt")
 
     def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
     def writeBatch(rows: Seq[Event]): Unit =
@@ -66,7 +65,7 @@ class RecoverySpec extends AnyFunSuite {
 
     // memory sink can't recover an append-mode query from a checkpoint —
     // use the file sink (the recoverable production shape) and read back
-    val out = Files.createTempDirectory("ptx-hrec-out").toString
+    val out = TestSpark.tmpDir("ptx-hrec-out")
 
     def startQuery() = {
       val events = spark.readStream
@@ -106,9 +105,9 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("TTL'd content dedup recovers its suppression state from a RocksDB checkpoint (r11)") {
-    val src = Files.createTempDirectory("ptx-ttlrec-src").toString
-    val ckpt = Files.createTempDirectory("ptx-ttlrec-ckpt").toString
-    val out = Files.createTempDirectory("ptx-ttlrec-out").toString
+    val src = TestSpark.tmpDir("ptx-ttlrec-src")
+    val ckpt = TestSpark.tmpDir("ptx-ttlrec-ckpt")
+    val out = TestSpark.tmpDir("ptx-ttlrec-out")
 
     def writeBatch(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").repartition(1).write.mode("append").parquet(src)
@@ -165,9 +164,9 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("transformWithState EWMA recovers the ListState ring from a RocksDB checkpoint (r6)") {
-    val src = Files.createTempDirectory("ptx-erec-src").toString
-    val ckpt = Files.createTempDirectory("ptx-erec-ckpt").toString
-    val out = Files.createTempDirectory("ptx-erec-out").toString
+    val src = TestSpark.tmpDir("ptx-erec-src")
+    val ckpt = TestSpark.tmpDir("ptx-erec-ckpt")
+    val out = TestSpark.tmpDir("ptx-erec-out")
 
     def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
     def writeBatch(rows: Seq[Event]): Unit =

@@ -153,7 +153,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch fans one micro-batch out to two sinks atomically per batch") {
     val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
     ms.addData(feed)
-    val out = java.nio.file.Files.createTempDirectory("ptx-fb").toString
+    val out = TestSpark.tmpDir("ptx-fb")
     val counts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val q = ms.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -173,8 +173,8 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming parquet file sink persists exactly the stream's rows") {
     val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
     ms.addData(feed)
-    val out = java.nio.file.Files.createTempDirectory("ptx-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ptx-sink-ckpt").toString
+    val out = TestSpark.tmpDir("ptx-sink")
+    val ckpt = TestSpark.tmpDir("ptx-sink-ckpt")
     val q = ms.toDF().writeStream
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
@@ -264,8 +264,8 @@ class StreamingSpec extends AnyFunSuite {
     // streamed verdict must be ROW-IDENTICAL to the declared batch audit
     val ev = ptx.Tables.events(spark, TestSpark.SF)
     val ref = ptx.ops.Extras.volumeMoments(ptx.ops.Extras.dailyCounts(ev))
-    val out = java.nio.file.Files.createTempDirectory("ptx-vol").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ptx-vol-ckpt").toString
+    val out = TestSpark.tmpDir("ptx-vol")
+    val ckpt = TestSpark.tmpDir("ptx-vol-ckpt")
     val q = Pipelines.volumeGate(
       ptx.Tables.eventsStream(spark, TestSpark.SF), ref, out, ckpt)
     q.awaitTermination()
@@ -289,8 +289,8 @@ class StreamingSpec extends AnyFunSuite {
     val docs = ptx.Tables.documents(spark, TestSpark.SF)
     val ref = docs.groupBy(expr("n_chars div 50").as("b"))
       .agg(count(lit(1)).as("gn"))
-    val out = java.nio.file.Files.createTempDirectory("ptx-drift").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ptx-drift-ckpt").toString
+    val out = TestSpark.tmpDir("ptx-drift")
+    val ckpt = TestSpark.tmpDir("ptx-drift-ckpt")
     val q = Pipelines.driftGate(
       ptx.Tables.documentsStream(spark, TestSpark.SF), ref, out, ckpt)
     q.awaitTermination()
@@ -320,8 +320,8 @@ class StreamingSpec extends AnyFunSuite {
       .join(ref.select(col("b")), Seq("b"), "left_anti")
       .withColumn("gn", lit(0L))
     assert(novel.count() > 0, "fixture must produce reference-novel buckets")
-    val out = java.nio.file.Files.createTempDirectory("ptx-drift-novel").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ptx-drift-novel-ckpt").toString
+    val out = TestSpark.tmpDir("ptx-drift-novel")
+    val ckpt = TestSpark.tmpDir("ptx-drift-novel-ckpt")
     val q = Pipelines.driftGate(
       ptx.Tables.documentsStream(spark, TestSpark.SF), ref, out, ckpt)
     q.awaitTermination()
@@ -344,8 +344,8 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("gn"),
         sum(col("n_chars").cast("decimal(38,0)")).as("gsx"),
         sum(expr("cast(n_chars as decimal(38,0)) * n_chars")).as("gsxx"))
-    val repOut = java.nio.file.Files.createTempDirectory("ptx-driftrep-novel").toString
-    val repCkpt = java.nio.file.Files.createTempDirectory("ptx-driftrep-novel-ckpt").toString
+    val repOut = TestSpark.tmpDir("ptx-driftrep-novel")
+    val repCkpt = TestSpark.tmpDir("ptx-driftrep-novel-ckpt")
     Pipelines.driftReportGate(ptx.Tables.documentsStream(spark, TestSpark.SF),
       refMoments, repOut, repCkpt).awaitTermination()
     val report = spark.read.parquet(s"$repOut/batch=0")
@@ -360,8 +360,8 @@ class StreamingSpec extends AnyFunSuite {
     val eval = docs.filter(col("doc_id") % 10 === 0)
     val sketch = Pipelines.evalGramSketch(eval)
     assert(sketch.nonEmpty)
-    val out = java.nio.file.Files.createTempDirectory("ptx-decon").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ptx-decon-ckpt").toString
+    val out = TestSpark.tmpDir("ptx-decon")
+    val ckpt = TestSpark.tmpDir("ptx-decon-ckpt")
     val q = Pipelines.decontaminationGate(
       ptx.Tables.documentsStream(spark, TestSpark.SF), sketch, out, ckpt)
     q.awaitTermination()
@@ -404,7 +404,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = ptx.Tables.documents(spark, TestSpark.SF)
     val evalA = docs.filter(col("doc_id") % 10 === 0)
     val evalB = docs.filter(col("doc_id") % 10 === 5)
-    val idx = java.nio.file.Files.createTempDirectory("ptx-deconidx-s").toString
+    val idx = TestSpark.tmpDir("ptx-deconidx-s")
     ptx.sources.DeconIndex.write(evalA, idx)
     ptx.functions.TextGrams.register(spark)
     val g = docs.select(col("doc_id"),
@@ -422,8 +422,8 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     val ms = MemoryStream[(Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(Long, String)]], spark)
-    val out = java.nio.file.Files.createTempDirectory("ptx-decon-s-out").toString
-    val cp = java.nio.file.Files.createTempDirectory("ptx-decon-s-cp").toString
+    val out = TestSpark.tmpDir("ptx-decon-s-out")
+    val cp = TestSpark.tmpDir("ptx-decon-s-cp")
     def flagged(batch: Int): Set[Long] =
       spark.read.parquet(s"$out/batch=$batch").filter(col("contaminated"))
         .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -459,8 +459,8 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("gn"),
         sum(col("n_chars").cast("decimal(38,0)")).as("gsx"),
         sum(expr("cast(n_chars as decimal(38,0)) * n_chars")).as("gsxx"))
-    val out = java.nio.file.Files.createTempDirectory("ptx-driftrep").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ptx-driftrep-ckpt").toString
+    val out = TestSpark.tmpDir("ptx-driftrep")
+    val ckpt = TestSpark.tmpDir("ptx-driftrep-ckpt")
     val q = Pipelines.driftReportGate(
       ptx.Tables.documentsStream(spark, TestSpark.SF), ref, out, ckpt)
     q.awaitTermination()
@@ -617,7 +617,7 @@ class StreamingSpec extends AnyFunSuite {
     // build the index through the public persist/read round-trip — the
     // serving topology this pipeline exists for
     val centroids = {
-      val dir = java.nio.file.Files.createTempDirectory("ann_idx").toString
+      val dir = TestSpark.tmpDir("ann_idx")
       ptx.sources.VectorIndex.write(e, dir)
       ptx.sources.VectorIndex.read(spark, dir)
     }
@@ -649,9 +649,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("annServe: per-batch indexed probe equals the batch probe across a restart (r12)") {
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val cdir = java.nio.file.Files.createTempDirectory("ann_serve_idx").toString
+    val cdir = TestSpark.tmpDir("ann_serve_idx")
     ptx.sources.VectorIndex.write(e, cdir)
-    val cellsPath = java.nio.file.Files.createTempDirectory("ann_serve_cells").toString
+    val cellsPath = TestSpark.tmpDir("ann_serve_cells")
     e.select("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(cellsPath)
     val corpus = spark.read.parquet(cellsPath)
@@ -669,8 +669,8 @@ class StreamingSpec extends AnyFunSuite {
       spark.read.parquet(s"$out/batch=$batch").collect().map(r =>
         (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     val ms = MemoryStream[Probe](implicitly[org.apache.spark.sql.Encoder[Probe]], spark)
-    val out = java.nio.file.Files.createTempDirectory("ann_serve_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("ann_serve_cp").toString
+    val out = TestSpark.tmpDir("ann_serve_out")
+    val cp = TestSpark.tmpDir("ann_serve_cp")
     // batch 0: first four probes, AvailableNow drains and stops
     ms.addData(data.take(4).toSeq)
     Pipelines.annServe(ms.toDF(), cdir, cellsPath, out, cp).awaitTermination()
@@ -688,8 +688,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("indexRefresh: streamed vectors join their nearest cell; recenter equals a batch rebuild (r5)") {
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_refresh").toString
-    val cp = java.nio.file.Files.createTempDirectory("ivf_refresh_cp").toString
+    val dir = TestSpark.tmpDir("ivf_refresh")
+    val cp = TestSpark.tmpDir("ivf_refresh_cp")
     // seed the index: corpus centroids + corpus cells, both through the
     // public API the refresh pipeline maintains
     ptx.sources.VectorIndex.write(e, s"$dir/centroids")
@@ -746,7 +746,7 @@ class StreamingSpec extends AnyFunSuite {
     // compaction (r11): the refresh pipeline accumulates one cells
     // partition per batch; the compacted copy must serve identically
     // with the partitions collapsed and the centroids bit-exact
-    val cdir = java.nio.file.Files.createTempDirectory("ivf_compact").toString
+    val cdir = TestSpark.tmpDir("ivf_compact")
     ptx.sources.VectorIndex.compactCells(spark, dir, cdir)
     val topC = ptx.ops.LlmScale.ivfProbe(
       ptx.sources.VectorIndex.read(spark, s"$cdir/centroids"),
@@ -768,8 +768,8 @@ class StreamingSpec extends AnyFunSuite {
     // that started the stream would expose AQE off at one partition to
     // every query planned on it meanwhile
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_bystander").toString
-    val cp = java.nio.file.Files.createTempDirectory("ivf_bystander_cp").toString
+    val dir = TestSpark.tmpDir("ivf_bystander")
+    val cp = TestSpark.tmpDir("ivf_bystander_cp")
     ptx.sources.VectorIndex.write(e, s"$dir/centroids")
     val kSeed = ptx.sources.VectorIndex.read(spark, s"$dir/centroids").count()
     ptx.sources.VectorIndex.assign(e.select("vec_id", "embedding"),
@@ -817,8 +817,8 @@ class StreamingSpec extends AnyFunSuite {
       .select("doc_id", "text").orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val rows = all.take(120)
-    val dir = java.nio.file.Files.createTempDirectory("ptx-bpe-stream").toString
-    val cp = java.nio.file.Files.createTempDirectory("ptx-bpe-stream-cp").toString
+    val dir = TestSpark.tmpDir("ptx-bpe-stream")
+    val cp = TestSpark.tmpDir("ptx-bpe-stream-cp")
     val ms = MemoryStream[(Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(Long, String)]], spark)
     val q = Pipelines.tokenizerRefresh(ms.toDF().toDF("doc_id", "text"),
@@ -830,7 +830,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(mid.endsWith("v=1"), s"expected v=1 live after batch 1, got $mid")
       // mid-stream model == batch rebuild over exactly the docs admitted so far
       val firstHalf = spark.createDataFrame(rows.slice(0, 60)).toDF("doc_id", "text")
-      val midRebuild = java.nio.file.Files.createTempDirectory("ptx-bpe-mid").toString
+      val midRebuild = TestSpark.tmpDir("ptx-bpe-mid")
       ptx.sources.BpeModel.write(firstHalf, midRebuild, k = 8)
       assert(ptx.sources.BpeModel.readMerges(spark, mid).collect().map(_.toSeq).toSeq
         == ptx.sources.BpeModel.readMerges(spark, midRebuild).collect().map(_.toSeq).toSeq,
@@ -844,7 +844,7 @@ class StreamingSpec extends AnyFunSuite {
     // full admitted corpus, both halves bit-for-bit
     val admitted = spark.read.parquet(s"$dir/docs").select("doc_id", "text")
     assert(admitted.count() == 120)
-    val rdir = java.nio.file.Files.createTempDirectory("ptx-bpe-rebuild").toString
+    val rdir = TestSpark.tmpDir("ptx-bpe-rebuild")
     ptx.sources.BpeModel.write(admitted, rdir, k = 8)
     def merges(d: String) = ptx.sources.BpeModel.readMerges(spark, d)
       .collect().map(_.toSeq).toSeq
@@ -882,7 +882,7 @@ class StreamingSpec extends AnyFunSuite {
         .orderBy("doc_id").limit(20)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq)
       .toDF("doc_id", "text")
-    val mdir = java.nio.file.Files.createTempDirectory("ptx-bpe-pub").toString
+    val mdir = TestSpark.tmpDir("ptx-bpe-pub")
     assert(ptx.sources.BpeModel.latestOpt(spark, mdir).isEmpty,
       "cold start must be None, not a throw")
     assert(intercept[IllegalArgumentException](
@@ -926,8 +926,8 @@ class StreamingSpec extends AnyFunSuite {
     // run the shared recallAudit over the served artifacts with probes
     // drawn from the STREAMED mass (the set admission could degrade).
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_adm").toString
-    val cp = java.nio.file.Files.createTempDirectory("ivf_adm_cp").toString
+    val dir = TestSpark.tmpDir("ivf_adm")
+    val cp = TestSpark.tmpDir("ivf_adm_cp")
     val seed = e.filter(col("vec_id") % 2 === 0)
     val (cent0, asg0) = ptx.sources.VectorIndex.kmeans(seed, k = 8, iters = 3)
     cent0.write.parquet(s"$dir/centroids")
@@ -942,7 +942,7 @@ class StreamingSpec extends AnyFunSuite {
     try newVecs.grouped((newVecs.length + 3) / 4).foreach { chunk =>
       ms.addData(chunk.toSeq); q.processAllAvailable()
     } finally q.stop()
-    val cdir = java.nio.file.Files.createTempDirectory("ivf_adm_c").toString
+    val cdir = TestSpark.tmpDir("ivf_adm_c")
     ptx.sources.VectorIndex.compactCells(spark, dir, cdir)
     ptx.functions.VectorOps.register(spark)
     val cells = spark.read.parquet(s"$cdir/cells")
@@ -977,9 +977,9 @@ class StreamingSpec extends AnyFunSuite {
     // (refreshEvery large), so every assignment is against the seed
     // centroids and the simulation can share them.
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("sem_adm_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("sem_adm_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("sem_adm_cp").toString
+    val dir = TestSpark.tmpDir("sem_adm_idx")
+    val out = TestSpark.tmpDir("sem_adm_out")
+    val cp = TestSpark.tmpDir("sem_adm_cp")
     val seed = e.filter(col("vec_id") % 2 === 0)
     ptx.sources.VectorIndex.write(seed, s"$dir/centroids")
     val cent0 = ptx.sources.VectorIndex.read(spark, s"$dir/centroids")
@@ -1066,9 +1066,9 @@ class StreamingSpec extends AnyFunSuite {
     // more copies, which the admitted survivor must now reject
     // wholesale.
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("sem_dup_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("sem_dup_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("sem_dup_cp").toString
+    val dir = TestSpark.tmpDir("sem_dup_idx")
+    val out = TestSpark.tmpDir("sem_dup_out")
+    val cp = TestSpark.tmpDir("sem_dup_cp")
     ptx.sources.VectorIndex.write(e, s"$dir/centroids")
     e.filter(lit(false))
       .select(col("vec_id"), col("embedding"),
@@ -1097,9 +1097,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("semanticAdmission recenter: centroids equal a batch rebuild over all cells (r15)") {
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("sem_rc_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("sem_rc_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("sem_rc_cp").toString
+    val dir = TestSpark.tmpDir("sem_rc_idx")
+    val out = TestSpark.tmpDir("sem_rc_out")
+    val cp = TestSpark.tmpDir("sem_rc_cp")
     val seed = e.filter(col("vec_id") % 2 === 0)
     ptx.sources.VectorIndex.write(seed, s"$dir/centroids")
     val cent0 = ptx.sources.VectorIndex.read(spark, s"$dir/centroids")
@@ -1147,9 +1147,9 @@ class StreamingSpec extends AnyFunSuite {
     // recallAudit over the served artifacts with probes drawn from the
     // streamed ACCEPTED mass.
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("sem_rec_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("sem_rec_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("sem_rec_cp").toString
+    val dir = TestSpark.tmpDir("sem_rec_idx")
+    val out = TestSpark.tmpDir("sem_rec_out")
+    val cp = TestSpark.tmpDir("sem_rec_cp")
     val seed = e.filter(col("vec_id") % 2 === 0)
     val (cent0, asg0) = ptx.sources.VectorIndex.kmeans(seed, k = 8, iters = 3)
     cent0.write.parquet(s"$dir/centroids")
@@ -1207,9 +1207,9 @@ class StreamingSpec extends AnyFunSuite {
     // preserve the accepted/rejected bookkeeping, and leave an index the
     // NEXT wave admits against correctly (fresh-centroid assignment).
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("sem_rs_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("sem_rs_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("sem_rs_cp").toString
+    val dir = TestSpark.tmpDir("sem_rs_idx")
+    val out = TestSpark.tmpDir("sem_rs_out")
+    val cp = TestSpark.tmpDir("sem_rs_cp")
     val seed = e.filter(col("vec_id") < 100)
     val (cent0, asg0) = ptx.sources.VectorIndex.kmeans(seed, k = 4, iters = 3)
     cent0.write.parquet(s"$dir/centroids")
@@ -1280,8 +1280,8 @@ class StreamingSpec extends AnyFunSuite {
     // corpus-adaptive k (VectorIndex.reshard) instead of recentering the
     // stale 4-cell geometry — and the served index must still recall.
     val e = ptx.Tables.embeddings(spark, TestSpark.SF)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_rs").toString
-    val cp = java.nio.file.Files.createTempDirectory("ivf_rs_cp").toString
+    val dir = TestSpark.tmpDir("ivf_rs")
+    val cp = TestSpark.tmpDir("ivf_rs_cp")
     val seed = e.filter(col("vec_id") < 100)
     val (cent0, asg0) = ptx.sources.VectorIndex.kmeans(seed, k = 4, iters = 3)
     cent0.write.parquet(s"$dir/centroids")
@@ -1352,9 +1352,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("shardAdmission: streamed shards probe, filter, and admit against the persisted index (r11)") {
-    val idx = java.nio.file.Files.createTempDirectory("dedup_adm_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("dedup_adm_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("dedup_adm_cp").toString
+    val idx = TestSpark.tmpDir("dedup_adm_idx")
+    val out = TestSpark.tmpDir("dedup_adm_out")
+    val cp = TestSpark.tmpDir("dedup_adm_cp")
     val docs = ptx.Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     val shard1 = docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 10 =!= 5)
@@ -1420,9 +1420,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("containAdmission: streamed shards probe, filter, and admit against the containment index (r13)") {
-    val idx = java.nio.file.Files.createTempDirectory("contain_adm_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("contain_adm_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("contain_adm_cp").toString
+    val idx = TestSpark.tmpDir("contain_adm_idx")
+    val out = TestSpark.tmpDir("contain_adm_out")
+    val cp = TestSpark.tmpDir("contain_adm_cp")
     val docs = ptx.Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     val shard1 = docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 10 =!= 5)
@@ -1520,8 +1520,8 @@ class StreamingSpec extends AnyFunSuite {
     // every sink plan takes the broadcast ANTI-join path), and exactly
     // the smallest id survives. The index holds UNRELATED docs so no
     // external partner interferes.
-    val idx = java.nio.file.Files.createTempDirectory("adv_dup_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("adv_dup_out").toString
+    val idx = TestSpark.tmpDir("adv_dup_idx")
+    val out = TestSpark.tmpDir("adv_dup_out")
     val docs = ptx.Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 === 1).select("doc_id", "text")
     ptx.sources.DedupIndex.write(base, idx)
@@ -1560,15 +1560,12 @@ class StreamingSpec extends AnyFunSuite {
     // each body opens its own withMicroBatchPlan scope, so a direct call
     // never plans adaptively, and its job shape stays what the streaming
     // wrappers pay per micro-batch
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val docs = ptx.Tables.documents(spark, TestSpark.SF)
     val base = docs.filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
     val shard = docs.filter(col("doc_id") % 5 === 0)
-    val dedupIdx = tmp("shape_dedup"); val ingestIdx = tmp("shape_ingest")
-    val containIdx = tmp("shape_contain"); val semIdx = tmp("shape_sem")
+    val Seq(dedupIdx, ingestIdx, containIdx, semIdx) =
+      Seq("shape_dedup", "shape_ingest", "shape_contain", "shape_sem").map(TestSpark.tmpDir)
     ptx.sources.DedupIndex.write(base, dedupIdx)
     ptx.sources.DedupIndex.write(base, ingestIdx)
     ptx.sources.ContainIndex.write(base, containIdx)
@@ -1584,42 +1581,21 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("gn")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.toDF("b", "gn")
     val sketch = Pipelines.evalGramSketch(docs.filter(col("doc_id") % 10 === 5))
-    /** (jobs, functions of the adaptive executed plans) of one body. */
-    def shape(body: => Unit): (Int, List[String]) = {
-      val adaptive = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      val marker = spark.range(1).toDF("marker")
-      val l = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          if (qe eq marker.queryExecution) drained.countDown()
-          else if (qe.executedPlan.exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
-            adaptive.add(f)
-        override def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
-      }
-      spark.listenerManager.register(l)
-      try {
-        val jobs = TestSpark.jobsDuring(spark)(body)
-        // execution events arrive in order: once the marker's has, every
-        // event of the body has too
-        marker.collect()
-        assert(drained.await(10, java.util.concurrent.TimeUnit.SECONDS),
-          "marker execution never reached the listener")
-        import scala.jdk.CollectionConverters._
-        (jobs, adaptive.asScala.toList)
-      } finally {
-        spark.listenerManager.unregister(l)
-        ptx.Caching.releaseAll()
-      }
-    }
+    /** (jobs, adaptive executed plans) of one body. */
+    def shape(body: => Unit): (Int, Seq[String]) = try {
+      val rec = ptx.tools.Metrics.during(spark)(body)._2
+      (rec.jobs.size, rec.plans.filter(_.exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
+        .map(_.simpleString(3)))
+    } finally ptx.Caching.releaseAll()
     val got = Seq(
       "shard" -> shape(Pipelines.admitShardBatch(shard, 0L, dedupIdx,
-        tmp("shape_dedup_out"), 0.4)),
+        TestSpark.tmpDir("shape_dedup_out"), 0.4)),
       "contain" -> shape(Pipelines.admitContainBatch(shard, 0L, containIdx,
-        tmp("shape_contain_out"), 0.8)),
+        TestSpark.tmpDir("shape_contain_out"), 0.8)),
       "semantic" -> shape(Pipelines.admitSemanticBatch(vecs, 0L, semIdx,
-        tmp("shape_sem_out"), 0.45, refreshEvery = 1000)),
+        TestSpark.tmpDir("shape_sem_out"), 0.45, refreshEvery = 1000)),
       "ingest" -> shape(Pipelines.ingestAdmitBatch(shard, 0L, psiRef, sketch,
-        ingestIdx, tmp("shape_ingest_out"), 0.4)))
+        ingestIdx, TestSpark.tmpDir("shape_ingest_out"), 0.4)))
     got.foreach { case (name, (_, adaptive)) =>
       assert(adaptive.isEmpty, s"$name planned adaptively: $adaptive")
     }
@@ -1633,9 +1609,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("composed ingest admission: every stage equals its standalone gate core; survivors admit (r11)") {
     val docs = ptx.Tables.documents(spark, TestSpark.SF)
-    val idx = java.nio.file.Files.createTempDirectory("ingest_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("ingest_out").toString
-    val cp = java.nio.file.Files.createTempDirectory("ingest_cp").toString
+    val idx = TestSpark.tmpDir("ingest_idx")
+    val out = TestSpark.tmpDir("ingest_out")
+    val cp = TestSpark.tmpDir("ingest_cp")
     // base (80%) seeds the index; the 20% shard streams through the
     // composed stack — the split the shardAdmission test proved carries
     // near-dup pairs. Eval suite ⊂ shard, so decon hits are guaranteed
@@ -1664,7 +1640,7 @@ class StreamingSpec extends AnyFunSuite {
       .filter(!col("doc_id").isin(contaminatedIds.toSeq: _*))
       .select("doc_id", "text")
     val cleanIds = clean.select("doc_id").collect().map(_.getLong(0)).toSet
-    val idx2 = java.nio.file.Files.createTempDirectory("ingest_idx2").toString
+    val idx2 = TestSpark.tmpDir("ingest_idx2")
     ptx.sources.DedupIndex.write(base, idx2)
     val pairs = ptx.sources.DedupIndex.probe(spark, idx2, clean)
       .select("doc1", "doc2").collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -1936,7 +1912,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch parquet sink: per-batch dirs hold exactly the fed rows; batch rewrite is idempotent (r4)") {
-    val root = java.nio.file.Files.createTempDirectory("fb_sink").toString
+    val root = TestSpark.tmpDir("fb_sink")
     val ms = MemoryStream[Event](implicitly[org.apache.spark.sql.Encoder[Event]], spark)
     ms.addData(feed.take(4))
     Pipelines.parquetSink(ms.toDF(), s"$root/out", s"$root/ckpt").awaitTermination()

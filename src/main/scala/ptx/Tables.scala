@@ -95,14 +95,18 @@ object Tables {
     * over a loaded frame still scans parquet and recomputes from disk.
     *
     *   - `loadMemo`: the loaded (normalized + schema-asserted) frame, i.e.
-    *     its resolved logical plan, keyed by (session, path, file
-    *     fingerprint). `spark.read.parquet` re-lists the path and re-reads
-    *     a footer on the driver at every call, and the registry's query
-    *     functions are re-invoked per bench run: a star join touching 6
-    *     tables paid ~0.5-0.7 s of per-invocation metadata work before any
-    *     job ran (q8_market_share: 737 ms of frame construction vs 76 ms of
-    *     Catalyst phases; `ptx.tools.Probe` prints the phase times). This
-    *     is the session-scoped analog of Spark's catalog relation cache.
+    *     its resolved logical plan, one entry per path: (the session that
+    *     last loaded it, file fingerprint, frame); a hit needs the same
+    *     session and fingerprint. `spark.read.parquet` re-lists the path and
+    *     re-reads a footer on the driver at every call, and query functions
+    *     are re-invoked per bench run: a star join touching 6 tables paid
+    *     ~0.5-0.7 s of metadata work before any job ran (q8_market_share;
+    *     `ptx.tools.Probe` prints the phase times). Entries are bounded by
+    *     paths, not sessions, so a dropped session is held only until
+    *     another session loads its paths. Two sessions alternating on one
+    *     path evict each other, each miss costing one read with the schema
+    *     given (~10 ms, no job). A `WeakHashMap` on the session would never
+    *     clear: each memoized `DataFrame` strongly references its session.
     *   - `schemaMemo`: the inferred parquet `StructType`, JVM-wide, keyed by
     *     (path, file fingerprint, the session's parquet-inference settings
     *     in `inferenceConfs`). Inference is a Spark job (~60-70 ms a table);
@@ -116,7 +120,7 @@ object Tables {
     * regenerated under the same path gets a fresh relation and a fresh
     * schema. Non-local paths (any URI scheme) skip both memos. */
   private val loadMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+    String, (SparkSession, String, DataFrame)]()
 
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String, Seq[String]), StructType]()
@@ -177,15 +181,8 @@ object Tables {
     def load = build(readParquet(spark, path, fp))
     fp match {
       case None => load
-      case Some(f) =>
-        // growth guards: entries owned by STOPPED sessions are
-        // evicted on every pass (a long-lived multi-session
-        // JVM no longer leaks them until the size trip), and the size
-        // guard — regenerated fixtures retire old keys but never remove
-        // them — stays as the backstop
-        loadMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-        if (loadMemo.size > 512) loadMemo.clear()
-        loadMemo.computeIfAbsent((spark, path, f), _ => load)
+      case Some(f) => loadMemo.compute(path, (_, e) =>
+        if (e != null && (e._1 eq spark) && e._2 == f) e else (spark, f, load))._3
     }
   }
 

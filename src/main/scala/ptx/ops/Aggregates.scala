@@ -1,5 +1,6 @@
 package ptx.ops
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import ptx.{QFn, Tables}
@@ -16,6 +17,20 @@ import ptx.ops.BoundedSort.ReportSortOps
   * (FIXTURES.md), not presentation.
   */
 object Aggregates {
+
+  /** `cast(round(y) as bigint)` without `round`'s per-row `BigDecimal`:
+    * below 2^52 every k + 0.5 is an exact double and `y - floor(y)` is
+    * exact, so half-up on the magnitude with the sign restored is the same
+    * value bit for bit. NaN, ±∞ and larger magnitudes take `round`. */
+  private[ptx] def roundToLong(y: Column): Column = {
+    val a = abs(y)
+    val up = floor(a) + (a - floor(a) >= 0.5).cast("long")
+    when(a < 4503599627370496.0, when(y < 0, -up).otherwise(up))
+      .otherwise(round(y).cast("long"))
+  }
+
+  /** `x` in BIGINT cents: `cast(round(x * 100) as bigint)`. */
+  private[ptx] def cents(x: Column): Column = roundToLong(x * 100)
 
   def queries: Map[String, QFn] = Map(
     "agg_global" -> ((s, d) => {
@@ -35,38 +50,38 @@ object Aggregates {
           " + count(1)) div (2 * count(1)) END").as("avg_disc_e6"))
     }),
     "agg_pricing_summary" -> ((s, d) => {
-      // The fixture is one single-row-group parquet file, so the scan —
-      // and with it the map-side partial aggregation — runs in ONE task.
-      // A hash repartition on the high-cardinality order key (no
-      // sortBeforeRepartition cost — that tax is round-robin-only) moves
-      // the partial aggregation onto every core; the exchange carries only
-      // the 7 projected columns. It also sets the double sums' addition
-      // order, which the recorded outputs depend on: without it
-      // sum_disc_price for (R,F) at sf0.1 rounds to 4183059914.85, not .84.
-      // On a multi-row-group table the scan is already spread and this is
-      // one more full shuffle of the filtered rows.
+      // Every sum is exact, so the output does not depend on the rows'
+      // addition order: quantity, price, discount and tax as BIGINT cents,
+      // the discounted and charged prices from their e4 and e6 cent
+      // products. Each product is summed as two BIGINT limbs (bits 20+ and
+      // the low 20 bits), joined per group in DECIMAL(38,0); the e2 means
+      // widen their BIGINT sums to DECIMAL(38,0) for the ×2·10⁴ scaling.
+      // Headroom: at the fixture's mean l_extendedprice (5.3e6 in e2) the
+      // BIGINT price sum overflows past ≈1.7e12 rows, about 3× lineitem at
+      // SF 100 000 (6e11 rows); with every row at the 1.05e7 maximum, past
+      // 8.8e11. A low limb is below 2^20 and a high limb at most
+      // 1.05e7·100·108 / 2^20 ≈ 1.1e5, so the limb sums hold past 8.8e12
+      // rows. ANSI mode aborts on overflow; it never wraps.
+      def limbSum(x: Column) =
+        sum(shiftright(x, 20)).cast("decimal(38,0)") * 1048576 + sum(x.bitwiseAND(1048575))
+      def meanE6(c: String) =
+        expr(s"(2 * cast(sum($c) as decimal(38,0)) * 10000 + count(1)) div (2 * count(1))")
       Tables.lineitem(s, d)
         .filter(col("l_shipdate") <= to_timestamp(lit("2000-09-02")))
-        .repartition(s.sparkContext.defaultParallelism, col("l_orderkey"))
+        .select(col("l_returnflag"), col("l_linestatus"),
+          cents(col("l_quantity")).as("q"), cents(col("l_extendedprice")).as("p"),
+          cents(col("l_discount")).as("dc"), cents(col("l_tax")).as("t"))
+        .withColumn("p_e4", col("p") * (lit(100) - col("dc")))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))), 2).as("sum_charge"),
-          // e2 means: the exact e2 sums run as BIGINT (a decimal sum costs
-          // far more per row) and are widened to DECIMAL(38,0) for the
-          // ×2·10⁴ scaling. Headroom: at the fixture's mean l_extendedprice
-          // (5.3e6 in e2) the BIGINT sum overflows past ≈1.7e12 rows, about
-          // 3× lineitem at SF 100 000 (6e11 rows); with every row at the
-          // 1.05e7 maximum, past 8.8e11. ANSI mode aborts on overflow; it
-          // never wraps.
-          expr("(2 * cast(sum(cast(round(l_quantity * 100) as bigint)) as decimal(38,0)) * 10000" +
-            " + count(1)) div (2 * count(1))").as("avg_qty_e6"),
-          expr("(2 * cast(sum(cast(round(l_extendedprice * 100) as bigint)) as decimal(38,0)) * 10000" +
-            " + count(1)) div (2 * count(1))").as("avg_price_e6"),
-          expr("(2 * cast(sum(cast(round(l_discount * 100) as bigint)) as decimal(38,0)) * 10000" +
-            " + count(1)) div (2 * count(1))").as("avg_disc_e6"),
+          (sum(col("q")) / 100.0).as("sum_qty"),
+          (sum(col("p")) / 100.0).as("sum_base_price"),
+          round(limbSum(col("p_e4")) / 10000, 2).cast("double").as("sum_disc_price"),
+          round(limbSum(col("p_e4") * (lit(100) + col("t"))) / 1000000, 2)
+            .cast("double").as("sum_charge"),
+          meanE6("q").as("avg_qty_e6"),
+          meanE6("p").as("avg_price_e6"),
+          meanE6("dc").as("avg_disc_e6"),
           count(lit(1)).as("count_order"))
         .reportSort(col("l_returnflag"), col("l_linestatus"))
     }),

@@ -384,9 +384,8 @@ object Composite {
         .cast("decimal(38,0)")
       val per = Tables.lineitem(s, d)
         .join(broadcast(asiaSup), col("l_suppkey") === col("s_suppkey"))
-        // r19: the fixture's one-row-group file put the partkey-grain
-        // partial aggregation in ONE scan task — explicit spread (the
-        // agg_pricing_summary note)
+        // a one-row-group file puts the partkey-grain partial aggregation
+        // in ONE scan task — explicit spread
         .repartition(s.sparkContext.defaultParallelism, col("l_partkey"))
         .groupBy(col("l_partkey"))
         .agg(sum(volE4).as("v"))

@@ -563,8 +563,8 @@ object Curation {
       val model = lp.agg(
         map_from_entries(collect_list(struct(col("word"), col("lp")))).as("m"))
       Tables.documents(s, d)
-        // r19: the per-token scoring lambda runs interpreted — spread it
-        // off the single-task fixture scan (the agg_pricing_summary note)
+        // the per-token scoring lambda runs interpreted — spread it off a
+        // one-row-group file's single scan task
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .crossJoin(broadcast(model))
         .withColumn("w", split(col("text"), " "))

@@ -676,8 +676,12 @@ object Telemetry {
           wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
+  /** Events range-partitioned on `user_id` once: the window, the
+    * per-session aggregate and the final `(user_id, session_id)` order all
+    * read that one exchange. Its bounds sampler reads the scan, not the
+    * window; at cluster scale that is one more pass over the events. */
   private def sessions(s: org.apache.spark.sql.SparkSession, d: String) =
-    sessionize(Tables.events(s, d))
+    sessionize(Tables.events(s, d).repartitionByRange(col("user_id")))
 
   private val EV =
     "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"

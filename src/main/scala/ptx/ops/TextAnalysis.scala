@@ -316,8 +316,8 @@ object TextAnalysis {
     "llm_hot_shingles" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val dfw = docs
-        // r19: spread the string-shingle explode + df partial agg off the
-        // single-task fixture scan (the agg_pricing_summary note)
+        // spread the string-shingle explode + df partial agg: a one-row-
+        // group file is scanned by one task
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), split(col("text"), " ").as("w"))
         .select(col("doc_id"), explode(expr(

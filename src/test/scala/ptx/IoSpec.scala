@@ -185,16 +185,18 @@ class IoSpec extends AnyFunSuite {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
     writeCorpus(Seq((1L, "aa ab aa ab aa"), (2L, "aa ab cd cd")))
-    val d1 = ptx.sources.BpeModel.ensure(spark, dataDir, k = 4)
+    // the artifacts of this per-run corpus go with the run's temp root
+    def ensure(k: Int) = TestSpark.removeWithRoot(ptx.sources.BpeModel.ensure(spark, dataDir, k))
+    val d1 = ensure(4)
     val m1 = ptx.sources.BpeModel.readMerges(spark, d1).collect().map(_.toSeq).toSeq
     assert(m1.nonEmpty)
     // same corpus bytes → same artifact dir, no rebuild signal needed
-    assert(ptx.sources.BpeModel.ensure(spark, dataDir, k = 4) == d1)
+    assert(ensure(4) == d1)
     // a DIFFERENT k is a different tokenizer → different artifact
-    assert(ptx.sources.BpeModel.ensure(spark, dataDir, k = 2) != d1)
+    assert(ensure(2) != d1)
     // regenerate the corpus UNDER THE SAME PATH → new key, fresh train
     writeCorpus(Seq((1L, "xx xy xx xy"), (2L, "xx xy zz zz zz")))
-    val d2 = ptx.sources.BpeModel.ensure(spark, dataDir, k = 4)
+    val d2 = ensure(4)
     assert(d2 != d1, "regenerated corpus must re-key the artifact")
     val m2 = ptx.sources.BpeModel.readMerges(spark, d2).collect().map(_.toSeq).toSeq
     assert(m2 != m1, "regenerated corpus served the stale merge table")

@@ -1,6 +1,6 @@
 package ptx
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import ptx.tools.Metrics
@@ -109,10 +109,9 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("metrics listener records exchanges and scans for a query run") {
-    // the l_orderkey spread, the flag/status aggregate and the output sort
-    // over one lineitem scan
+    // the flag/status aggregate and the output sort over one lineitem scan
     assert(Metrics.shape(hermeticRun("agg_pricing_summary")) ==
-      Shape(exchanges = 3, broadcasts = 0, scans = 1))
+      Shape(exchanges = 2, broadcasts = 0, scans = 1))
     // a pinned aggregate read twice, whose plan renders its own adaptive
     // plan in the middle of the query's: its (custkey, status) shuffle and
     // orders scan count once; the merge join shuffles both sides on custkey
@@ -173,9 +172,39 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("plan budget: pricing summary spends at most 2 exchanges (agg + sort)") {
-    // 3: +1 explicit orderkey spread of the partial aggregation off
-    // the single-task fixture scan
-    assert(measuredExchanges("agg_pricing_summary") <= 3)
+    assert(measuredExchanges("agg_pricing_summary") <= 2)
+  }
+
+  test("sessionized events share one user_id range exchange with the window, the aggregate and the order") {
+    Seq("pt_sessionize", "pt_trip_stats").foreach { name =>
+      assert(Metrics.shape(hermeticRun(name)) == Shape(exchanges = 1, broadcasts = 0, scans = 1),
+        name)
+    }
+  }
+
+  test("the cents helper equals cast(round(y) as bigint), and pricing sums do not depend on row order") {
+    import spark.implicits._
+    val ys = Seq(0.49999999999999994, 0.5, 2.5, -2.5, -0.0, 100.49999999999999,
+      4503599627370496.0 - 0.5, 4503599627370496.0 + 0.5, -4503599627370496.0 + 0.5,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    def outcome(y: Option[Double], c: Column => Column) = scala.util.Try(
+      Seq(y).toDF("y").select(c(col("y"))).collect()(0).get(0)).toEither.left.map(_.getClass)
+    (ys.map(Some(_)) :+ None).foreach { y =>
+      val got = outcome(y, ops.Aggregates.roundToLong)
+      assert(got == outcome(y, c => round(c).cast("long")), s"y = $y: $got")
+    }
+    assert(Seq(0.125, 1.005, -0.015).toDF("x").select(ops.Aggregates.cents(col("x")))
+      .collect().map(_.get(0)).toSeq ==
+      Seq(0.125, 1.005, -0.015).toDF("x").select(round(col("x") * 100).cast("long"))
+        .collect().map(_.get(0)).toSeq)
+    // lineitem rewritten as several files of shuffled rows reads the same
+    val dir = TestSpark.tmpDir("ptx_pricing")
+    Tables.lineitem(spark, TestSpark.SF).orderBy(rand(7)).repartition(4)
+      .write.parquet(s"$dir/lineitem.parquet")
+    def rows(d: String) =
+      QueryRegistry.all("agg_pricing_summary")(spark, d).collect().map(_.toSeq).toSeq
+    assert(new java.io.File(s"$dir/lineitem.parquet").list().count(_.endsWith(".parquet")) > 1)
+    assert(rows(dir) == rows(TestSpark.SF))
   }
 
   test("plan budget: knn spends at most 3 exchanges (top-k agg, explode, sort)") {

@@ -160,4 +160,34 @@ class TablesSchemaSpec extends AnyFunSuite {
     assert(jobs(Tables.documents(flipped, dir)) > 0,
       "a session with other parquet-inference settings reused the schema memo entry")
   }
+
+  test("the load memo holds at most one dropped probe session, however many loaded a table") {
+    val s = TestSpark.spark
+    val probes = (1 to 1000).map { _ =>
+      val p = s.newSession()
+      Tables.orders(p, sf)
+      new java.lang.ref.WeakReference(p)
+    }
+    def alive = probes.count(_.get != null)
+    var tries = 0
+    while (alive > 1 && tries < 20) { System.gc(); Thread.sleep(50); tries += 1 }
+    assert(alive <= 1, s"$alive of 1000 probe sessions still reachable")
+  }
+
+  test("two sessions loading one path concurrently each get their own frame") {
+    val (a, b) = (TestSpark.spark.newSession(), TestSpark.spark.newSession())
+    val n = Tables.orders(a, sf).count()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val runs = Seq(a, b).map { s =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = (1 to 200).forall { _ =>
+            val o = Tables.orders(s, sf)
+            (o.sparkSession eq s) && o.count() == n
+          }
+        })
+      }
+      runs.foreach(r => assert(r.get(), "a frame of another session, or a wrong count"))
+    } finally pool.shutdown()
+  }
 }
